@@ -1,67 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // SMJ→SHJ conversion at RUNTIME only (guide §3.1): AQE rewrites a
-      // planned sort-merge join to shuffled-hash when every post-shuffle
-      // partition fits under this threshold — measured sizes, so no OOM
-      // risk from a misestimated static pick. The r21 static preference
-      // (spark.sql.join.preferSortMergeJoin=false) was A/B-measured in
-      // r22 (plans/r22/*_smj.txt vs *_shj.txt, 8 join-heavy queries,
-      // min-of-3): flat to slightly negative (Σ 15.7 s SMJ-forced vs
-      // 16.8 s with the preference), so it is dropped and only the
-      // bounded runtime conversion kept.
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        "134217728")
-      // AQE coalescing floor: the default 1 MiB minPartitionSize collapses
-      // byte-small but CPU-DENSE shuffles (expression-heavy windows,
-      // verify joins) to 1-2 tasks — measured 0.64 s single-task window in
-      // dedup_jaccard_pruned. 64 KiB keeps those parallel; at production
-      // shuffle sizes this floor never binds (partitions are >> 1 MiB).
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        "65536")
-      // SQL functions + the tx-catalog row-level rule (UPDATE/MERGE)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Untimed warmup: JIT + codegen + parquet-footer caches. Without this the
-    // first measured query absorbs ~4s of JVM warmup that has nothing to do
-    // with its plan (visible as filter_eq=4.5s in BENCH_r02).
-    try {
-      spark.range(1000).selectExpr("sum(id)").collect(): Unit
-      Tables.Names.foreach { t =>
-        try Tables.table(spark, sfDir, t).limit(1).collect(): Unit
-        catch { case _: Throwable => () }
-      }
-      SparkEntry.queries.get("filter_eq").foreach(fn => fn(spark, sfDir).count(): Unit)
-      // warm the heavy custom-kernel paths too (ArrayDot, shingle/sketch
-      // codegen): without this, WHICH vector/dedup query ran first absorbed
-      // several seconds of C2-compilation — sim_neardup swung 4.5s↔13.4s
-      // between otherwise-identical runs. A tiny limited slice compiles the
-      // same generated code without doing the real query's work.
-      // the IVF family: the warmup also triggers the session-memoized
-      // builds (trained coarse quantizer, persisted index, PQ index — the
-      // amortized OFFLINE half of an ANN serving path), so the timed
-      // numbers are the probe queries those entries actually serve.
-      // emb_kmeans is deliberately NOT warmed: it is the declared
-      // training query and its timed number IS the training.
-      Seq("sim_topk", "dedup_minhash", "sim_ivfpq", "sim_ivf",
-        "sim_ivf_indexed").foreach(n =>
-        SparkEntry.queries.get(n).foreach { fn =>
-          try fn(spark, sfDir).limit(1).collect(): Unit
-          catch { case _: Throwable => () }
-        })
-      graft.ext.Dedup.unpersistAll()
-    } catch { case _: Throwable => () }
+    val spark = GraftSession.start(GraftSession.envCores)
+    GraftSession.warmup(spark, sfDir)
     // Optional comma-separated subset filter for local iteration.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)

@@ -4,8 +4,39 @@ import graft.compile.NlCompiler
 import graft.exec.Executor
 import graft.ext.{Dedup, Events, Multimodal, Similarity, TextStats}
 import graft.ir.MongoJson
+import graft.sources.TxTable
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+/** Once-per-(JVM, key) memoizer for the declared queries' session
+  * fixtures: trained quantizers, persisted indexes, warehouse tables
+  * whose committed history must be written exactly once so the versions
+  * a query reads stay deterministic however often it re-runs.
+  *
+  * `build` runs under a per-key monitor, never inside the map's own
+  * `computeIfAbsent`: a fixture that builds another fixture (`join_spj`
+  * builds `db.part` first) would otherwise nest a `computeIfAbsent` on
+  * the same map, which ConcurrentHashMap refuses ("Recursive update").
+  * Concurrent callers of one key wait for the first build and share its
+  * value; a build that throws records nothing, so the next call retries. */
+private[graft] object Fixture {
+  private final class Slot { var value: Option[Any] = None }
+  private val slots =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), Slot]()
+
+  def once[T](name: String, key: String)(build: => T): T = {
+    val slot = slots.computeIfAbsent((name, key), _ => new Slot)
+    slot.synchronized {
+      slot.value match {
+        case Some(v) => v.asInstanceOf[T]
+        case None =>
+          val v = build
+          slot.value = Some(v)
+          v
+      }
+    }
+  }
+}
 
 /** Shared plumbing for the per-domain query registries: the find-spec/NL
   * entry builders, session-scoped index caches, scratch-dir lifecycle,
@@ -26,11 +57,6 @@ private[graft] object EntryHelpers {
 
   val Emp = Tables.EmployeesOracleView
 
-  /** Session-scoped IVF-PQ index cache: one deterministic build per
-    * corpus dir (see the `sim_ivfpq` entry's contract note). */
-  val ivfPqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Shared k-means coarse-quantizer config for the three IVF entries
     * (and their oracles, which unroll the same training rounds). */
   val KmK = 4
@@ -44,41 +70,39 @@ private[graft] object EntryHelpers {
     * full-probe pin in the query body. */
   val RecallFloorHits = 5L
 
+  /** Session-scoped IVF-PQ index: one deterministic build per corpus dir
+    * (see the `sim_ivfpq` entry's contract note). */
   def ivfPqIndexFor(s: SparkSession, dir: String,
                             emb: DataFrame): String =
-    ivfPqCache.computeIfAbsent(dir, _ => {
+    Fixture.once("ivfpq", dir) {
       val p = scratchDir("graft-ivfpq-")
       graft.ext.IvfIndex.buildPqKMeans(emb, "vec_id", "embedding", p,
         nlist = KmK, numSub = 4)
       p
-    })
+    }
 
-  /** Session-scoped trained-quantizer cache for `sim_ivf`, same contract
-    * as [[ivfPqCache]]: the coarse quantizer is the build-once OFFLINE
+  /** Session-scoped trained quantizer for `sim_ivf`, same contract as
+    * [[ivfPqIndexFor]]: the coarse quantizer is the build-once OFFLINE
     * half of an ANN serving path and its training is deterministic, so
     * a repeated invocation serves from the trained centroids instead of
     * re-running Lloyd (`emb_kmeans` deliberately does NOT share this —
     * it is the declared training query and measures the training). */
-  val kmCentsCache = new java.util.concurrent.ConcurrentHashMap[
-    String, IndexedSeq[Seq[Double]]]()
   def kmCentsFor(dir: String, emb: DataFrame): IndexedSeq[Seq[Double]] =
-    kmCentsCache.computeIfAbsent(dir, _ =>
+    Fixture.once("kmcents", dir)(
       graft.ext.KMeans.fit(emb, "vec_id", "embedding", KmK, KmIters))
 
-  /** Session-scoped persisted-IVF index cache for `sim_ivf_indexed` —
-    * the on-disk dual of [[kmCentsCache]] (build-once/query-many is the
+  /** Session-scoped persisted IVF index for `sim_ivf_indexed` — the
+    * on-disk dual of [[kmCentsFor]] (build-once/query-many is the
     * persisted index's whole contract; the result is identical because
     * the build is deterministic). */
-  val ivfIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   def ivfIndexFor(s: SparkSession, dir: String,
                           emb: DataFrame): String =
-    ivfIndexCache.computeIfAbsent(dir, _ => {
+    Fixture.once("ivf", dir) {
       val p = scratchDir("graft-ivf-")
       graft.ext.IvfIndex.buildKMeans(emb, "vec_id", "embedding", p,
         nlist = KmK, iters = KmIters)
       p
-    })
+    }
 
   /** `sim_ivf_append` fixture: the index built over the EVEN vec_ids
     * only, then the odd half ingested through [[graft.ext.IvfIndex
@@ -87,40 +111,34 @@ private[graft] object EntryHelpers {
     * Because the quantizer is frozen, the post-append index equals a
     * from-scratch build with these centroids, which is exactly what the
     * oracle replays. */
-  val ivfAppendCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   def ivfAppendIndexFor(s: SparkSession, dir: String,
                         emb: DataFrame): String =
-    ivfAppendCache.computeIfAbsent(dir, _ => {
+    Fixture.once("ivf-append", dir) {
       val p = scratchDir("graft-ivfa-")
-      import org.apache.spark.sql.functions.col
       graft.ext.IvfIndex.buildKMeans(
         emb.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", p,
         nlist = KmK, iters = KmIters)
       graft.ext.IvfIndex.append(
         emb.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", p)
       p
-    })
+    }
 
   /** `sim_ivfpq_append` fixture: the IVF-PQ index built over the EVEN
     * vec_ids, then the odd half ingested through
     * [[graft.ext.IvfIndex.appendPq]] — frozen coarse quantizer AND
     * frozen codebook, so ADC serving sees the ingest with no rebuild
     * and the oracle can replay the post-append index from scratch. */
-  val ivfPqAppendCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   def ivfPqAppendIndexFor(s: SparkSession, dir: String,
                           emb: DataFrame): String =
-    ivfPqAppendCache.computeIfAbsent(dir, _ => {
+    Fixture.once("ivfpq-append", dir) {
       val p = scratchDir("graft-ivfpqa-")
-      import org.apache.spark.sql.functions.col
       graft.ext.IvfIndex.buildPqKMeans(
         emb.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", p,
         nlist = KmK, numSub = 4, iters = KmIters)
       graft.ext.IvfIndex.appendPq(
         emb.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", p)
       p
-    })
+    }
 
   /** Scratch directory reclaimed at JVM exit. Deletion cannot be eager —
     * the returned DataFrames read these files lazily — but without the
@@ -153,18 +171,46 @@ private[graft] object EntryHelpers {
     * conf-gated feature queries (e.g. parquet aggregate pushdown) whose
     * setting must not leak into the rest of the run. */
   def withSqlConf(s: SparkSession, pairs: (String, String)*)(
-      body: => DataFrame): DataFrame = {
-    val saved = pairs.map { case (k, _) => k -> s.conf.getOption(k) }
-    pairs.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
+      body: => DataFrame): DataFrame =
+    GraftSession.withConf(s, pairs: _*) {
       val df = body
       val rows = df.collect().toSeq
       s.createDataFrame(s.sparkContext.parallelize(rows, 1), df.schema)
-    } finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
     }
+
+  /** `documents` projected to the (doc_id, lang, n_chars) shape every
+    * warehouse fixture commits. */
+  def langDocs(s: SparkSession, dir: String): DataFrame =
+    Tables.documents(s, dir)
+      .select(col("doc_id"), col("lang"), col("n_chars"))
+
+  /** The seed of the SQL-warehouse fixtures: [[langDocs]] committed to
+    * `tbl` one language per commit — the first overwrites, the middle
+    * ones append, the last uses `lastMode` — so every data file's
+    * manifest stats carry min=max=lang and a `lang` predicate provably
+    * touches only that language's files. `properties` and `partitionBy`
+    * go on the first commit (later commits inherit them). Returns the
+    * projected documents for the fixture's own follow-up slices. */
+  def langSplitTable(s: SparkSession, dir: String, tbl: String,
+                     langs: Seq[String] = Seq("en", "de", "fr"),
+                     properties: Map[String, String] = Map.empty,
+                     partitionBy: Option[Seq[String]] = None,
+                     lastMode: String = "append"): DataFrame = {
+    val docs = langDocs(s, dir)
+    langs.zipWithIndex.foreach { case (l, i) =>
+      val first = i == 0
+      TxTable.commit(docs.filter(col("lang") === l), tbl,
+        if (first) "overwrite"
+        else if (i == langs.size - 1) lastMode
+        else "append",
+        properties = if (first) properties else Map.empty,
+        partitionBy = if (first) partitionBy else None): Unit
+    }
+    docs
   }
+
+  private def latest(tbl: String): Long =
+    TxTable.latestVersion(tbl).getOrElse(0L)
 
   /** Session-stable TxCatalog warehouse for `sink_txlog_sql`: a DSv2
     * catalog instance is cached BY NAME in the session's CatalogManager
@@ -172,71 +218,56 @@ private[graft] object EntryHelpers {
     * change within a session — one warehouse per (JVM, corpus dir), its
     * three-commit history (en overwrite / de append / fr overwrite, the
     * sink_txlog fixture) written exactly once. Repeat calls reuse it;
-    * the versions read are immutable either way. */
-  val txCatalogRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  def txCatalogWarehouse(s: SparkSession, dir: String): String = {
+    * the versions read are immutable either way. Every call registers
+    * the warehouse as the session's `graft_tx` catalog and returns its
+    * root. */
+  private object TxCatalogBinding { var dir: String = null }
+  def txCatalogWarehouse(s: SparkSession, dir: String): String =
     // ENFORCE the one-corpus-dir-per-JVM constraint the scaladoc states:
     // Spark's CatalogManager caches the initialized `graft_tx` instance
     // by NAME with the first-seen root, so a second corpus dir would
     // silently read the first dir's warehouse — refuse loudly instead.
-    // The check+insert is ATOMIC (synchronized on the map): two threads
-    // racing with different dirs must not both pass a bare size()==0
-    // check and recreate the silent wrong-warehouse hazard.
-    txCatalogRoots.synchronized {
-      if (txCatalogRoots.size() > 0 && !txCatalogRoots.containsKey(dir))
+    // The check, the build and the binding share ONE critical section: a
+    // sibling thread with a different dir parked on the monitor sees the
+    // binding when it wakes and takes the refusal branch, never a second
+    // binding. The binding is recorded only after a successful build, so
+    // a failed build binds nothing. The fixture write is once-per-JVM
+    // setup, so holding the monitor over it is cheap in every call but
+    // the first.
+    TxCatalogBinding.synchronized {
+      val bound = TxCatalogBinding.dir
+      if (bound != null && bound != dir)
         throw new IllegalStateException(
           s"txCatalogWarehouse: catalog 'graft_tx' is already bound to " +
-            s"corpus dir '${txCatalogRoots.keySet().iterator().next()}' in " +
+            s"corpus dir '$bound' in " +
             s"this JVM session; a second dir ('$dir') would silently read " +
             "the first warehouse (CatalogManager caches by name) — use a " +
             "fresh JVM per corpus dir (a fresh SparkSession in the same " +
             "JVM still hits this JVM-global binding)")
-      // insert INSIDE the same critical section — a sibling thread with a
-      // different dir parked on the monitor sees this entry when it wakes
-      // and takes the refusal branch, never a second binding. The fixture
-      // write is once-per-JVM setup, so holding the monitor over it is
-      // cheap in every call but the first.
-      txCatalogRoots.computeIfAbsent(dir, _ => {
+      val wh = Fixture.once("txcatalog", dir) {
         val wh = scratchDir("graft-txcat-")
-        val docs = Tables.documents(s, dir)
-          .select(col("doc_id"), col("lang"), col("n_chars"))
-        val tbl = s"$wh/db/t"
-        graft.sources.TxTable.commit(
-          docs.filter(col("lang") === "en"), tbl, "overwrite")
-        graft.sources.TxTable.commit(
-          docs.filter(col("lang") === "de"), tbl, "append")
-        graft.sources.TxTable.commit(
-          docs.filter(col("lang") === "fr"), tbl, "overwrite")
+        langSplitTable(s, dir, s"$wh/db/t", lastMode = "overwrite"): Unit
         wh
-      })
+      }
+      TxCatalogBinding.dir = dir
+      graft.sources.TxCatalog.register(s, "graft_tx", wh)
+      wh
     }
-  }
 
   /** `ops_optimize_sql` fixture: a second table (`db.opt`) in the shared
     * SQL warehouse, compacted THROUGH the SQL procedure surface exactly
     * once per (JVM, corpus dir) — the memoization keeps the committed
     * version deterministic (always 4: three commits + the compaction)
     * however many times the query re-runs in one session. */
-  val txOptDone =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   def txOptCompactedVersion(s: SparkSession, dir: String, wh: String): Long =
-    txOptDone.computeIfAbsent(dir, _ => {
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-      val tbl = s"$wh/db/opt"
-      graft.sources.TxTable.commit(
-        docs.filter(col("lang") === "en"), tbl, "overwrite")
-      graft.sources.TxTable.commit(
-        docs.filter(col("lang") === "de"), tbl, "append")
-      graft.sources.TxTable.commit(
-        docs.filter(col("lang") === "fr"), tbl, "append")
+    Fixture.once("db.opt", dir) {
+      langSplitTable(s, dir, s"$wh/db/opt"): Unit
       val v = s.sql(
         s"CALL graft_tx.system.compact('db.opt', ${1L << 30})")
         .head().getLong(0)
       require(v == 4L, s"expected compaction to commit v4, got v$v")
-      java.lang.Long.valueOf(v)
-    }).longValue()
+      v
+    }
 
   /** `ops_delete_sql` fixture: a third table (`db.del`) in the shared
     * SQL warehouse, row-level-deleted THROUGH pure SQL exactly once per
@@ -245,24 +276,15 @@ private[graft] object EntryHelpers {
     * `DELETE WHERE lang='de'` rewrite provably touches only the de
     * files (the en/fr files carry forward verbatim, suite-pinned in
     * TxCatalogSpec) and commits v4 through the same OCC publish. */
-  val txDelDone =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   def txDeletedVersion(s: SparkSession, dir: String, wh: String): Long =
-    txDelDone.computeIfAbsent(dir, _ => {
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"), col("n_chars"))
+    Fixture.once("db.del", dir) {
       val tbl = s"$wh/db/del"
-      graft.sources.TxTable.commit(
-        docs.filter(col("lang") === "en"), tbl, "overwrite")
-      graft.sources.TxTable.commit(
-        docs.filter(col("lang") === "de"), tbl, "append")
-      graft.sources.TxTable.commit(
-        docs.filter(col("lang") === "fr"), tbl, "append")
+      langSplitTable(s, dir, tbl): Unit
       s.sql("DELETE FROM graft_tx.db.del WHERE lang = 'de'")
-      val v = graft.sources.TxTable.latestVersion(tbl).getOrElse(0L)
+      val v = latest(tbl)
       require(v == 4L, s"expected the SQL delete to commit v4, got v$v")
-      java.lang.Long.valueOf(v)
-    }).longValue()
+      v
+    }
 
   /** `ops_update_sql` fixture: a fourth table (`db.upd`) in the shared
     * SQL warehouse, updated THROUGH pure SQL exactly once per (JVM,
@@ -270,26 +292,17 @@ private[graft] object EntryHelpers {
     * manifest stats, so `UPDATE … WHERE lang='de'` provably touches
     * only the de files (TxRowLevel's candidate partition — the en/fr
     * files carry stats and blooms forward verbatim) and commits v4. */
-  val txUpdDone =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   def txUpdatedVersion(s: SparkSession, dir: String, wh: String): Long =
-    txUpdDone.computeIfAbsent(dir, _ => {
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"), col("n_chars"))
+    Fixture.once("db.upd", dir) {
       val tbl = s"$wh/db/upd"
-      graft.sources.TxTable.commit(
-        docs.filter(col("lang") === "en"), tbl, "overwrite")
-      graft.sources.TxTable.commit(
-        docs.filter(col("lang") === "de"), tbl, "append")
-      graft.sources.TxTable.commit(
-        docs.filter(col("lang") === "fr"), tbl, "append")
+      langSplitTable(s, dir, tbl): Unit
       s.sql(
         "UPDATE graft_tx.db.upd SET n_chars = n_chars + 1000 " +
           "WHERE lang = 'de'")
-      val v = graft.sources.TxTable.latestVersion(tbl).getOrElse(0L)
+      val v = latest(tbl)
       require(v == 4L, s"expected the SQL update to commit v4, got v$v")
-      java.lang.Long.valueOf(v)
-    }).longValue()
+      v
+    }
 
   /** `ops_merge_sql` fixture: a fifth table (`db.mrg`), merged THROUGH
     * pure SQL exactly once per (JVM, corpus dir). The source is the
@@ -298,20 +311,10 @@ private[graft] object EntryHelpers {
     * DELETE and the unconditional UPDATE), es doc_ids are absent from
     * the en+de+fr target (INSERT), en/de rows are untouched
     * pass-throughs. Commits v4. */
-  val txMrgDone =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   def txMergedVersion(s: SparkSession, dir: String, wh: String): Long =
-    txMrgDone.computeIfAbsent(dir, _ => {
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"), col("n_chars"))
+    Fixture.once("db.mrg", dir) {
       val tbl = s"$wh/db/mrg"
-      graft.sources.TxTable.commit(
-        docs.filter(col("lang") === "en"), tbl, "overwrite")
-      graft.sources.TxTable.commit(
-        docs.filter(col("lang") === "de"), tbl, "append")
-      graft.sources.TxTable.commit(
-        docs.filter(col("lang") === "fr"), tbl, "append")
-      docs.filter(col("lang").isin("fr", "es"))
+      langSplitTable(s, dir, tbl).filter(col("lang").isin("fr", "es"))
         .createOrReplaceTempView("graft_mrg_src")
       s.sql(
         """MERGE INTO graft_tx.db.mrg t
@@ -322,10 +325,10 @@ private[graft] object EntryHelpers {
           |WHEN NOT MATCHED THEN
           |  INSERT (doc_id, lang, n_chars)
           |  VALUES (s.doc_id, s.lang, s.n_chars)""".stripMargin)
-      val v = graft.sources.TxTable.latestVersion(tbl).getOrElse(0L)
+      val v = latest(tbl)
       require(v == 4L, s"expected the SQL merge to commit v4, got v$v")
-      java.lang.Long.valueOf(v)
-    }).longValue()
+      v
+    }
 
   /** `ops_rename_sql` fixture: one lang per commit (per-file min=max
     * lang stats), `ALTER TABLE RENAME COLUMN lang TO language` as v4
@@ -334,35 +337,25 @@ private[graft] object EntryHelpers {
     * physical name, so all five files agree on bytes). The query's
     * pruning probe and the full certified read both run against this
     * mixed-history table. */
-  val txRenDone =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   def txRenamedVersion(s: SparkSession, dir: String, wh: String): Long =
-    txRenDone.computeIfAbsent(dir, _ => {
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"), col("n_chars"))
+    Fixture.once("db.ren", dir) {
       val tbl = s"$wh/db/ren"
-      graft.sources.TxTable.commit(
-        docs.filter(col("lang") === "en"), tbl, "overwrite")
-      graft.sources.TxTable.commit(
-        docs.filter(col("lang") === "de"), tbl, "append")
-      graft.sources.TxTable.commit(
-        docs.filter(col("lang") === "fr"), tbl, "append")
+      val docs = langSplitTable(s, dir, tbl)
       s.sql("ALTER TABLE graft_tx.db.ren RENAME COLUMN lang TO language")
       docs.filter(col("lang") === "es")
         .withColumnRenamed("lang", "language")
         .createOrReplaceTempView("graft_ren_es")
       s.sql("INSERT INTO graft_tx.db.ren SELECT * FROM graft_ren_es")
-      val v = graft.sources.TxTable.latestVersion(tbl).getOrElse(0L)
+      val v = latest(tbl)
       require(v == 5L, s"expected rename v4 + insert v5, got v$v")
-      val m = graft.sources.TxTable.readManifest(
-        java.nio.file.Paths.get(tbl), v)
+      val m = TxTable.readManifest(java.nio.file.Paths.get(tbl), v)
       require(m.columnMapping == Map("language" -> "lang"),
         s"unexpected mapping ${m.columnMapping}")
       require(m.files.size >= 4 &&
         m.stats.values.forall(_.contains("lang")),
         "every file (incl. post-rename) must carry physical-keyed stats")
-      java.lang.Long.valueOf(v)
-    }).longValue()
+      v
+    }
 
   /** `ops_widen_sql` fixture: en+de slices committed with n_chars as
     * INT (v1, v2), `ALTER TABLE … ALTER COLUMN n_chars TYPE BIGINT` as
@@ -372,18 +365,15 @@ private[graft] object EntryHelpers {
     * Int.MaxValue — only a genuinely widened table can hold them. The
     * query's pruning probe runs a long-literal predicate over the
     * mixed int/long file history. */
-  val txWidDone =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   def txWidenedVersion(s: SparkSession, dir: String, wh: String): Long =
-    txWidDone.computeIfAbsent(dir, _ => {
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"), col("n_chars"))
+    Fixture.once("db.wid", dir) {
+      val docs = langDocs(s, dir)
       val tbl = s"$wh/db/wid"
-      graft.sources.TxTable.commit(
+      TxTable.commit(
         docs.filter(col("lang") === "en")
           .withColumn("n_chars", col("n_chars").cast("int")),
         tbl, "overwrite")
-      graft.sources.TxTable.commit(
+      TxTable.commit(
         docs.filter(col("lang") === "de")
           .withColumn("n_chars", col("n_chars").cast("int")),
         tbl, "append")
@@ -392,13 +382,13 @@ private[graft] object EntryHelpers {
         .withColumn("n_chars", col("n_chars") + lit(3000000000L))
         .createOrReplaceTempView("graft_wid_fr")
       s.sql("INSERT INTO graft_tx.db.wid SELECT * FROM graft_wid_fr")
-      val v = graft.sources.TxTable.latestVersion(tbl).getOrElse(0L)
+      val v = latest(tbl)
       require(v == 4L, s"expected widen v3 + insert v4, got v$v")
-      val ops = graft.sources.TxTable.history(tbl).map(_._2)
+      val ops = TxTable.history(tbl).map(_._2)
       require(ops == Seq("overwrite", "append", "widen", "append"),
         s"unexpected op history: ${ops.mkString(", ")}")
-      java.lang.Long.valueOf(v)
-    }).longValue()
+      v
+    }
 
   /** `ops_merge_evolve` fixture: en+de accumulate (v1, v2), then one
     * `MERGE WITH SCHEMA EVOLUTION` whose source carries a NEW `score`
@@ -409,19 +399,12 @@ private[graft] object EntryHelpers {
     * column, fr rows insert with it, and the untouched en rows read
     * NULL (require-pinned; refusal arms — type conflicts, partitioned
     * targets — suite-pinned in TxRowLevelSpec). */
-  val txMrgEvoDone =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   def txMergeEvolvedVersion(s: SparkSession, dir: String,
                             wh: String): Long =
-    txMrgEvoDone.computeIfAbsent(dir, _ => {
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"), col("n_chars"))
+    Fixture.once("db.mrgevo", dir) {
       val tbl = s"$wh/db/mrgevo"
-      graft.sources.TxTable.commit(
-        docs.filter(col("lang") === "en"), tbl, "overwrite")
-      graft.sources.TxTable.commit(
-        docs.filter(col("lang") === "de"), tbl, "append")
-      docs.filter(col("lang").isin("de", "fr"))
+      langSplitTable(s, dir, tbl, langs = Seq("en", "de"))
+        .filter(col("lang").isin("de", "fr"))
         .withColumn("score", col("n_chars") % 100)
         .createOrReplaceTempView("graft_mrgevo_src")
       s.sql(
@@ -430,14 +413,14 @@ private[graft] object EntryHelpers {
           |ON t.doc_id = s.doc_id
           |WHEN MATCHED THEN UPDATE SET *
           |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-      val v = graft.sources.TxTable.latestVersion(tbl).getOrElse(0L)
+      val v = latest(tbl)
       require(v == 4L,
         s"expected evolve v3 + merge v4, got v$v")
-      val ops = graft.sources.TxTable.history(tbl).map(_._2)
+      val ops = TxTable.history(tbl).map(_._2)
       require(ops == Seq("overwrite", "append", "evolve", "merge"),
         s"unexpected op history: ${ops.mkString(", ")}")
-      java.lang.Long.valueOf(v)
-    }).longValue()
+      v
+    }
 
   /** `ops_merge_evolve_part` fixture (`db.mrgevop`): the PARTITIONED
     * twin of `db.mrgevo` — the target is `PARTITIONED BY (lang)`, so
@@ -446,20 +429,13 @@ private[graft] object EntryHelpers {
     * itself: v3 is the metadata-only evolve (score slots BEFORE the
     * partition column, the hive invariant), v4 the merge whose
     * star-shaped actions were extended by-name with the new column. */
-  val txMrgEvoPartDone =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   def txMergeEvolvedPartVersion(s: SparkSession, dir: String,
                                 wh: String): Long =
-    txMrgEvoPartDone.computeIfAbsent(dir, _ => {
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"), col("n_chars"))
+    Fixture.once("db.mrgevop", dir) {
       val tbl = s"$wh/db/mrgevop"
-      graft.sources.TxTable.commit(
-        docs.filter(col("lang") === "en"), tbl, "overwrite",
+      langSplitTable(s, dir, tbl, langs = Seq("en", "de"),
         partitionBy = Some(Seq("lang")))
-      graft.sources.TxTable.commit(
-        docs.filter(col("lang") === "de"), tbl, "append")
-      docs.filter(col("lang").isin("de", "fr"))
+        .filter(col("lang").isin("de", "fr"))
         .withColumn("score", col("n_chars") % 100)
         .createOrReplaceTempView("graft_mrgevop_src")
       s.sql(
@@ -468,21 +444,23 @@ private[graft] object EntryHelpers {
           |ON t.doc_id = s.doc_id
           |WHEN MATCHED THEN UPDATE SET *
           |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-      val v = graft.sources.TxTable.latestVersion(tbl).getOrElse(0L)
+      val v = latest(tbl)
       require(v == 4L, s"expected evolve v3 + merge v4, got v$v")
-      val ops = graft.sources.TxTable.history(tbl).map(_._2)
+      val ops = TxTable.history(tbl).map(_._2)
       require(ops == Seq("overwrite", "append", "evolve", "merge"),
         s"unexpected op history: ${ops.mkString(", ")}")
       // the evolved column slots BEFORE the partition column
-      val m = graft.sources.TxTable.readManifest(
-        java.nio.file.Paths.get(tbl), v)
+      val m = TxTable.readManifest(java.nio.file.Paths.get(tbl), v)
       val names = org.apache.spark.sql.types.DataType
         .fromJson(m.schemaJson)
         .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames
       require(names.toSeq == Seq("doc_id", "n_chars", "score", "lang"),
         s"unexpected evolved order: ${names.mkString(", ")}")
-      java.lang.Long.valueOf(v)
-    }).longValue()
+      v
+    }
+
+  /** The deletion-vector opt-in every merge-on-read fixture seeds with. */
+  private val DvOn = Map(TxTable.DvProperty -> "true")
 
   /** `ops_delete_mor` / `ops_purge_dv` fixture: a table (`db.mor`)
     * created with `tx.deletionVectors=true`, so the SQL DELETE commits
@@ -492,38 +470,26 @@ private[graft] object EntryHelpers {
     * TxDvSpec). v5 is the purge: tombstones folded into a clean layout,
     * only the de-bearing files rewritten, dvDirs empty. Both versions
     * stay time-travelable. Returns (v4, v5). */
-  val txMorDone = new java.util.concurrent.ConcurrentHashMap[
-    String, (java.lang.Long, java.lang.Long)]()
   def txMorVersions(s: SparkSession, dir: String,
-                    wh: String): (Long, Long) = {
-    val p = txMorDone.computeIfAbsent(dir, _ => {
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"), col("n_chars"))
+                    wh: String): (Long, Long) =
+    Fixture.once("db.mor", dir) {
       val tbl = s"$wh/db/mor"
-      graft.sources.TxTable.commit(
-        docs.filter(col("lang") === "en"), tbl, "overwrite",
-        properties = Map(graft.sources.TxTable.DvProperty -> "true"))
-      graft.sources.TxTable.commit(
-        docs.filter(col("lang") === "de"), tbl, "append")
-      graft.sources.TxTable.commit(
-        docs.filter(col("lang") === "fr"), tbl, "append")
+      langSplitTable(s, dir, tbl, properties = DvOn): Unit
       s.sql("DELETE FROM graft_tx.db.mor WHERE lang = 'de'")
       val root = java.nio.file.Paths.get(tbl)
-      val (m3, m4) = (graft.sources.TxTable.readManifest(root, 3L),
-        graft.sources.TxTable.readManifest(root, 4L))
+      val (m3, m4) = (TxTable.readManifest(root, 3L),
+        TxTable.readManifest(root, 4L))
       require(m4.files == m3.files && m4.dvDirs.size == 1,
         s"expected a merge-on-read delete (same files, one sidecar), " +
           s"got ${m4.files.size} files / ${m4.dvDirs.size} sidecars")
-      val v5 = graft.sources.TxTable.purgeDeletes(s, tbl)
-      val m5 = graft.sources.TxTable.readManifest(root, v5)
+      val v5 = TxTable.purgeDeletes(s, tbl)
+      val m5 = TxTable.readManifest(root, v5)
       require(v5 == 5L && m5.dvDirs.isEmpty &&
         m4.files.toSet.intersect(m5.files.toSet).nonEmpty,
         s"expected the purge to commit v5 clearing DVs and carrying " +
           s"untouched files, got v$v5 / ${m5.dvDirs.size} sidecars")
-      (java.lang.Long.valueOf(4L), java.lang.Long.valueOf(v5))
-    })
-    (p._1.longValue(), p._2.longValue())
-  }
+      (4L, v5)
+    }
 
   /** `ops_update_mor` fixture: like `db.upd` but on a
     * `tx.deletionVectors=true` table (`db.morupd`), so the SQL UPDATE
@@ -531,35 +497,25 @@ private[graft] object EntryHelpers {
     * VERBATIM, the matched de rows tombstone into a sidecar, and ONLY
     * their updated copies stage as appended files (require-pinned;
     * suite-pinned in TxDvSpec). Commits v4. */
-  val txMorUpdDone =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   def txMorUpdatedVersion(s: SparkSession, dir: String, wh: String): Long =
-    txMorUpdDone.computeIfAbsent(dir, _ => {
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"), col("n_chars"))
+    Fixture.once("db.morupd", dir) {
       val tbl = s"$wh/db/morupd"
-      graft.sources.TxTable.commit(
-        docs.filter(col("lang") === "en"), tbl, "overwrite",
-        properties = Map(graft.sources.TxTable.DvProperty -> "true"))
-      graft.sources.TxTable.commit(
-        docs.filter(col("lang") === "de"), tbl, "append")
-      graft.sources.TxTable.commit(
-        docs.filter(col("lang") === "fr"), tbl, "append")
+      langSplitTable(s, dir, tbl, properties = DvOn): Unit
       s.sql(
         "UPDATE graft_tx.db.morupd SET n_chars = n_chars + 1000 " +
           "WHERE lang = 'de'")
-      val v = graft.sources.TxTable.latestVersion(tbl).getOrElse(0L)
+      val v = latest(tbl)
       require(v == 4L, s"expected the MoR update to commit v4, got v$v")
       val root = java.nio.file.Paths.get(tbl)
-      val (m3, m4) = (graft.sources.TxTable.readManifest(root, 3L),
-        graft.sources.TxTable.readManifest(root, 4L))
+      val (m3, m4) = (TxTable.readManifest(root, 3L),
+        TxTable.readManifest(root, 4L))
       require(m3.files.forall(m4.files.contains) &&
         m4.files.size > m3.files.size && m4.dvDirs.size == 1,
         s"expected a merge-on-read update (all files carried + copies " +
           s"appended, one sidecar), got ${m4.files.size} files vs " +
           s"${m3.files.size} / ${m4.dvDirs.size} sidecars")
-      java.lang.Long.valueOf(v)
-    }).longValue()
+      v
+    }
 
   /** `ops_merge_mor` fixture: the `db.mrg` three-clause MERGE replayed
     * on a `tx.deletionVectors=true` table (`db.mormrg`) — the affected
@@ -567,21 +523,11 @@ private[graft] object EntryHelpers {
     * their updated copies + the es inserts append, and EVERY pre-merge
     * data file carries forward verbatim (require-pinned; suite-pinned
     * in TxDvSpec). Commits v4. */
-  val txMorMrgDone =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   def txMorMergedVersion(s: SparkSession, dir: String, wh: String): Long =
-    txMorMrgDone.computeIfAbsent(dir, _ => {
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"), col("n_chars"))
+    Fixture.once("db.mormrg", dir) {
       val tbl = s"$wh/db/mormrg"
-      graft.sources.TxTable.commit(
-        docs.filter(col("lang") === "en"), tbl, "overwrite",
-        properties = Map(graft.sources.TxTable.DvProperty -> "true"))
-      graft.sources.TxTable.commit(
-        docs.filter(col("lang") === "de"), tbl, "append")
-      graft.sources.TxTable.commit(
-        docs.filter(col("lang") === "fr"), tbl, "append")
-      docs.filter(col("lang").isin("fr", "es"))
+      langSplitTable(s, dir, tbl, properties = DvOn)
+        .filter(col("lang").isin("fr", "es"))
         .createOrReplaceTempView("graft_mormrg_src")
       s.sql(
         """MERGE INTO graft_tx.db.mormrg t
@@ -592,17 +538,17 @@ private[graft] object EntryHelpers {
           |WHEN NOT MATCHED THEN
           |  INSERT (doc_id, lang, n_chars)
           |  VALUES (s.doc_id, s.lang, s.n_chars)""".stripMargin)
-      val v = graft.sources.TxTable.latestVersion(tbl).getOrElse(0L)
+      val v = latest(tbl)
       require(v == 4L, s"expected the MoR merge to commit v4, got v$v")
       val root = java.nio.file.Paths.get(tbl)
-      val (m3, m4) = (graft.sources.TxTable.readManifest(root, 3L),
-        graft.sources.TxTable.readManifest(root, 4L))
+      val (m3, m4) = (TxTable.readManifest(root, 3L),
+        TxTable.readManifest(root, 4L))
       require(m3.files.forall(m4.files.contains) && m4.dvDirs.size == 1,
         s"expected a merge-on-read MERGE (all files carried, one " +
           s"sidecar), got ${m4.files.size} files vs ${m3.files.size} / " +
           s"${m4.dvDirs.size} sidecars")
-      java.lang.Long.valueOf(v)
-    }).longValue()
+      v
+    }
 
   /** `ops_txchanges` fixture: a DV-opted table (`db.chg`) whose history
     * is one insert per language then a MoR DELETE and a MoR UPDATE —
@@ -610,61 +556,42 @@ private[graft] object EntryHelpers {
     * versions exactly: inserts read directly, the delete's rows served
     * from its own sidecar (left-semi over affected files, no table
     * diff), the update as a pre/postimage pair. */
-  val txChgDone =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   def txChangesVersion(s: SparkSession, dir: String, wh: String): Long =
-    txChgDone.computeIfAbsent(dir, _ => {
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"), col("n_chars"))
+    Fixture.once("db.chg", dir) {
       val tbl = s"$wh/db/chg"
-      graft.sources.TxTable.commit(
-        docs.filter(col("lang") === "en"), tbl, "overwrite",
-        properties = Map(graft.sources.TxTable.DvProperty -> "true"))
-      graft.sources.TxTable.commit(
-        docs.filter(col("lang") === "de"), tbl, "append")
+      langSplitTable(s, dir, tbl, langs = Seq("en", "de"),
+        properties = DvOn): Unit
       s.sql("DELETE FROM graft_tx.db.chg " +
         "WHERE lang = 'de' AND n_chars > 400")
       s.sql("UPDATE graft_tx.db.chg SET n_chars = n_chars + 1000 " +
         "WHERE lang = 'en' AND n_chars <= 300")
-      val v = graft.sources.TxTable.latestVersion(tbl).getOrElse(0L)
+      val v = latest(tbl)
       require(v == 4L,
         s"expected delete+update to commit v3+v4, got v$v")
-      java.lang.Long.valueOf(v)
-    }).longValue()
+      v
+    }
 
   /** `ops_zorder_sql` fixture: a sixth table (`db.zord`), z-order
     * rewritten THROUGH the SQL procedure surface exactly once per
     * (JVM, corpus dir) — `CALL graft_tx.system.zorder(...)` commits v4
     * (three commits + the rewrite), rows unchanged. */
-  val txZordDone =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   def txZorderedVersion(s: SparkSession, dir: String, wh: String): Long =
-    txZordDone.computeIfAbsent(dir, _ => {
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-      val tbl = s"$wh/db/zord"
-      graft.sources.TxTable.commit(
-        docs.filter(col("lang") === "en"), tbl, "overwrite")
-      graft.sources.TxTable.commit(
-        docs.filter(col("lang") === "de"), tbl, "append")
-      graft.sources.TxTable.commit(
-        docs.filter(col("lang") === "fr"), tbl, "append")
+    Fixture.once("db.zord", dir) {
+      langSplitTable(s, dir, s"$wh/db/zord"): Unit
       val v = s.sql(
         "CALL graft_tx.system.zorder('db.zord', 'doc_id', 'n_chars', 4)")
         .head().getLong(0)
       require(v == 4L, s"expected the SQL zorder to commit v4, got v$v")
-      java.lang.Long.valueOf(v)
-    }).longValue()
+      v
+    }
 
   /** `sink_txcheck` fixture: a CHECK-constrained table (`db.chk`)
     * created and filled THROUGH pure SQL exactly once per (JVM, corpus
     * dir) — TBLPROPERTIES register two constraints at CREATE, both
     * hold on the inserted slices, and every INSERT paid the
     * enforcement pass (TxTable.commit scaladoc). Lands at v3. */
-  val txChkDone =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   def txCheckedVersion(s: SparkSession, dir: String, wh: String): Long =
-    txChkDone.computeIfAbsent(dir, _ => {
+    Fixture.once("db.chk", dir) {
       s.sql(
         """CREATE TABLE graft_tx.db.chk
           |(doc_id BIGINT, lang STRING, n_chars BIGINT)
@@ -672,18 +599,15 @@ private[graft] object EntryHelpers {
           |  'check.chars_positive' = 'n_chars > 0',
           |  'check.lang_known' =
           |    "lang IN ('en', 'de', 'fr', 'es', 'zh')")""".stripMargin)
-      Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-        .createOrReplaceTempView("graft_chk_src")
+      langDocs(s, dir).createOrReplaceTempView("graft_chk_src")
       s.sql("INSERT INTO graft_tx.db.chk SELECT doc_id, lang, n_chars " +
         "FROM graft_chk_src WHERE lang IN ('en', 'de')")
       s.sql("INSERT INTO graft_tx.db.chk SELECT doc_id, lang, n_chars " +
         "FROM graft_chk_src WHERE lang = 'fr'")
-      val v = graft.sources.TxTable.latestVersion(s"$wh/db/chk")
-        .getOrElse(0L)
+      val v = latest(s"$wh/db/chk")
       require(v == 3L, s"expected the constrained fixture at v3, got v$v")
-      java.lang.Long.valueOf(v)
-    }).longValue()
+      v
+    }
 
   /** `ops_constraint_sql` fixture: the CHECK-constraint LIFECYCLE
     * through pure SQL (`db.altc`) — CREATE unconstrained, INSERT the
@@ -693,22 +617,18 @@ private[graft] object EntryHelpers {
     * version, `UNSET` withdraws one promise, and the formerly-refused
     * slice then lands. Proves SET → enforce → UNSET → admit end to
     * end; versions pinned at every step. */
-  val txAltDone =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   def txAlteredVersion(s: SparkSession, dir: String, wh: String): Long =
-    txAltDone.computeIfAbsent(dir, _ => {
+    Fixture.once("db.altc", dir) {
       s.sql("CREATE TABLE graft_tx.db.altc " +
         "(doc_id BIGINT, lang STRING, n_chars BIGINT)")
-      Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-        .createOrReplaceTempView("graft_altc_src")
+      langDocs(s, dir).createOrReplaceTempView("graft_altc_src")
       s.sql("INSERT INTO graft_tx.db.altc SELECT doc_id, lang, " +
         "n_chars FROM graft_altc_src WHERE lang = 'en'")
       s.sql("""ALTER TABLE graft_tx.db.altc SET TBLPROPERTIES (
         |  'check.chars_positive' = 'n_chars > 0',
         |  'check.lang_en' = "lang = 'en'")""".stripMargin)
       val tbl = s"$wh/db/altc"
-      val vSet = graft.sources.TxTable.latestVersion(tbl).getOrElse(0L)
+      val vSet = latest(tbl)
       require(vSet == 3L,
         s"expected ONE atomic version for the two-property SET, got v$vSet")
       val refused =
@@ -717,16 +637,16 @@ private[graft] object EntryHelpers {
         catch { case e: Exception if e.getMessage != null &&
           e.getMessage.contains("lang_en") => true }
       require(refused, "the de INSERT must refuse against check.lang_en")
-      require(graft.sources.TxTable.latestVersion(tbl) == Some(3L),
+      require(TxTable.latestVersion(tbl) == Some(3L),
         "a refused INSERT must commit no version")
       s.sql(
         "ALTER TABLE graft_tx.db.altc UNSET TBLPROPERTIES ('check.lang_en')")
       s.sql("INSERT INTO graft_tx.db.altc SELECT doc_id, lang, " +
         "n_chars FROM graft_altc_src WHERE lang = 'de'")
-      val v = graft.sources.TxTable.latestVersion(tbl).getOrElse(0L)
+      val v = latest(tbl)
       require(v == 5L, s"expected the altered fixture at v5, got v$v")
-      java.lang.Long.valueOf(v)
-    }).longValue()
+      v
+    }
 
   /** `ops_evolve_sql` fixture: metadata-only schema evolution through
     * pure SQL (`db.evo`) — CREATE, INSERT the en slice, `ADD COLUMNS
@@ -735,26 +655,21 @@ private[graft] object EntryHelpers {
     * `DROP COLUMN n_chars` (files keep the bytes; the schema stops
     * projecting them). The certified read crosses files written under
     * THREE different schemas; versions pinned at every step. */
-  val txEvoDone =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   def txEvolvedVersion(s: SparkSession, dir: String, wh: String): Long =
-    txEvoDone.computeIfAbsent(dir, _ => {
+    Fixture.once("db.evo", dir) {
       s.sql("CREATE TABLE graft_tx.db.evo " +
         "(doc_id BIGINT, lang STRING, n_chars BIGINT)")
-      Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-        .createOrReplaceTempView("graft_evo_src")
+      langDocs(s, dir).createOrReplaceTempView("graft_evo_src")
       s.sql("INSERT INTO graft_tx.db.evo SELECT doc_id, lang, " +
         "n_chars FROM graft_evo_src WHERE lang = 'en'")
       s.sql("ALTER TABLE graft_tx.db.evo ADD COLUMNS (flag BIGINT)")
       s.sql("INSERT INTO graft_tx.db.evo SELECT doc_id, lang, " +
         "n_chars, n_chars % 7 FROM graft_evo_src WHERE lang = 'de'")
       s.sql("ALTER TABLE graft_tx.db.evo DROP COLUMN n_chars")
-      val v = graft.sources.TxTable.latestVersion(s"$wh/db/evo")
-        .getOrElse(0L)
+      val v = latest(s"$wh/db/evo")
       require(v == 5L, s"expected the evolved fixture at v5, got v$v")
-      java.lang.Long.valueOf(v)
-    }).longValue()
+      v
+    }
 
   /** `join_spj_bucket` fixture: TWO tables laid out
     * `PARTITIONED BY (bucket(8, doc_id))` — hidden partitioning, no
@@ -762,58 +677,55 @@ private[graft] object EntryHelpers {
     * KeyGroupedPartitioning over the bucket transform and whose join
     * on doc_id plans with ZERO exchanges under v2 bucketing
     * (TxTransforms / TxBucketFunction scaladoc). */
-  val txBucketDone =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   def txBucketVersion(s: SparkSession, dir: String, wh: String): Long =
-    txBucketDone.computeIfAbsent(dir, _ => {
+    Fixture.once("db.bka", dir) {
       val docs = Tables.documents(s, dir)
       val spec = Seq(graft.sources.TxTransforms.PartitionField(
         "doc_id_bucket", "bucket[8]", "doc_id"))
-      graft.sources.TxTable.commit(
+      TxTable.commit(
         docs.select(col("doc_id"), col("n_chars")),
         s"$wh/db/bka", "overwrite", partitionSpec = Some(spec))
-      graft.sources.TxTable.commit(
+      TxTable.commit(
         docs.select(col("doc_id"), col("lang")),
         s"$wh/db/bkb", "overwrite", partitionSpec = Some(spec))
-      java.lang.Long.valueOf(1L)
-    }).longValue()
+      1L
+    }
+
+  /** `events` projected to the (event_id, ts, user_id) shape the
+    * time-layout fixtures commit. */
+  private def tsEvents(s: SparkSession, dir: String): DataFrame =
+    Tables.events(s, dir)
+      .select(col("event_id"), col("ts"), col("user_id"))
 
   /** `scan_days_prune` fixture (`db.evd`): events laid out
     * `PARTITIONED BY (days(ts))` — hidden partitioning over the
     * timestamp itself, no manual date column; a ts range predicate
     * prunes whole day directories through the projected day bounds. */
-  val txDaysDone =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   def txDaysVersion(s: SparkSession, dir: String, wh: String): Long =
-    txDaysDone.computeIfAbsent(dir, _ => {
-      val ev = Tables.events(s, dir)
-        .select(col("event_id"), col("ts"), col("user_id"))
-      graft.sources.TxTable.commit(ev, s"$wh/db/evd", "overwrite",
+    Fixture.once("db.evd", dir) {
+      TxTable.commit(tsEvents(s, dir), s"$wh/db/evd", "overwrite",
         partitionSpec = Some(Seq(graft.sources.TxTransforms
           .PartitionField("ts_day", "days", "ts"))))
-      java.lang.Long.valueOf(1L)
-    }).longValue()
+      1L
+    }
 
   /** `scan_hours_prune` fixture (`db.evh`): ONE day of events laid out
     * `PARTITIONED BY (hours(ts))` — the finer time grain (r19) for
     * hot-path tables whose queries probe hour windows; 24 hour
     * directories, an hour-range predicate prunes through the projected
     * ordinal bounds exactly like days. */
-  val txHoursDone =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   def txHoursVersion(s: SparkSession, dir: String, wh: String): Long =
-    txHoursDone.computeIfAbsent(dir, _ => {
-      val ev = Tables.events(s, dir)
-        .select(col("event_id"), col("ts"), col("user_id"))
+    Fixture.once("db.evh", dir) {
+      val ev = tsEvents(s, dir)
         .filter(col("ts") >= lit(java.sql.Timestamp.valueOf(
           "2024-01-10 00:00:00")) &&
           col("ts") < lit(java.sql.Timestamp.valueOf(
             "2024-01-11 00:00:00")))
-      graft.sources.TxTable.commit(ev, s"$wh/db/evh", "overwrite",
+      TxTable.commit(ev, s"$wh/db/evh", "overwrite",
         partitionSpec = Some(Seq(graft.sources.TxTransforms
           .PartitionField("ts_hour", "hours", "ts"))))
-      java.lang.Long.valueOf(1L)
-    }).longValue()
+      1L
+    }
 
   /** `scan_ts_prune` fixture (`db.evt`): events committed
     * UNPARTITIONED but range-clustered on `ts` (8 range buckets → 8
@@ -823,16 +735,12 @@ private[graft] object EntryHelpers {
     * epoch-micros min/max per file, and a raw `ts` range predicate
     * proves files out at planning (the most common filter on event
     * tables, finally prunable without a days/hours relayout). */
-  val txTsDone =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   def txTsVersion(s: SparkSession, dir: String, wh: String): Long =
-    txTsDone.computeIfAbsent(dir, _ => {
-      val ev = Tables.events(s, dir)
-        .select(col("event_id"), col("ts"), col("user_id"))
-        .repartitionByRange(8, col("ts"))
-      graft.sources.TxTable.commit(ev, s"$wh/db/evt", "overwrite")
-      java.lang.Long.valueOf(1L)
-    }).longValue()
+    Fixture.once("db.evt", dir) {
+      TxTable.commit(tsEvents(s, dir).repartitionByRange(8, col("ts")),
+        s"$wh/db/evt", "overwrite")
+      1L
+    }
 
   /** `ops_tags` fixture (`db.tgq`): three versions (en / +de / +fr),
     * v2 tagged 'pre_fr' through the CALL surface, then a retain=1
@@ -840,29 +748,19 @@ private[graft] object EntryHelpers {
     * require-asserted to have stopped expiry at exactly v1 (prefix
     * contiguity below the lowest tag). The certified read resolves the
     * tag by NAME through SQL time travel. */
-  val txTagsDone =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   def txTagsVersion(s: SparkSession, dir: String, wh: String): Long =
-    txTagsDone.computeIfAbsent(dir, _ => {
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"), col("n_chars"))
+    Fixture.once("db.tgq", dir) {
       val tbl = s"$wh/db/tgq"
-      graft.sources.TxTable.commit(docs.filter(col("lang") === "en"),
-        tbl, "overwrite")
-      graft.sources.TxTable.commit(docs.filter(col("lang") === "de"),
-        tbl, "append")
-      graft.sources.TxTable.commit(docs.filter(col("lang") === "fr"),
-        tbl, "append")
+      langSplitTable(s, dir, tbl): Unit
       require(s.sql("CALL graft_tx.system.tag('db.tgq', 'pre_fr', 2)")
         .head().getLong(0) == 2L)
-      val st = graft.sources.TxTable.vacuum(tbl, retain = 1,
-        minAgeMillis = 0L)
+      val st = TxTable.vacuum(tbl, retain = 1, minAgeMillis = 0L)
       require(st.expiredVersions == Seq(1L),
         s"the tag must pin expiry below v2, vacuum expired " +
           s"${st.expiredVersions}")
-      require(graft.sources.TxTable.versions(tbl) == Seq(2L, 3L))
-      java.lang.Long.valueOf(2L)
-    }).longValue()
+      require(TxTable.versions(tbl) == Seq(2L, 3L))
+      2L
+    }
 
   /** `ops_txlog_meta` fixture (`db.lmt`): five commits under a
     * checkpoint interval no commit reaches (periodic checkpoints never
@@ -870,28 +768,20 @@ private[graft] object EntryHelpers {
     * operator repair, `CALL system.checkpoint`, bounds it to 0. The
     * pre-repair staleness is require-pinned HERE; the certified rows
     * are the post-repair summary. */
-  val txLogMetaDone =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   def txLogMetaVersion(s: SparkSession, dir: String, wh: String): Long =
-    txLogMetaDone.computeIfAbsent(dir, _ => {
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"), col("n_chars"))
+    Fixture.once("db.lmt", dir) {
       val tbl = s"$wh/db/lmt"
-      graft.sources.TxTable.commit(docs.filter(col("lang") === "en"),
-        tbl, "overwrite",
-        properties = Map(
-          graft.sources.TxTable.CheckpointIntervalProperty -> "1000"))
-      Seq("de", "fr", "es", "ja").foreach(l =>
-        graft.sources.TxTable.commit(docs.filter(col("lang") === l),
-          tbl, "append"): Unit)
-      val before = graft.sources.TxTable.logSummary(tbl)
-      require(before == graft.sources.TxTable.LogSummary(5L, None, 4L),
+      langSplitTable(s, dir, tbl,
+        langs = Seq("en", "de", "fr", "es", "ja"),
+        properties = Map(TxTable.CheckpointIntervalProperty -> "1000")): Unit
+      val before = TxTable.logSummary(tbl)
+      require(before == TxTable.LogSummary(5L, None, 4L),
         s"expected a 4-delta stale log before the repair, got $before")
       val v = s.sql("CALL graft_tx.system.checkpoint('db.lmt')")
         .head().getLong(0)
       require(v == 5L, s"checkpoint repaired at v$v, expected v5")
-      java.lang.Long.valueOf(v)
-    }).longValue()
+      v
+    }
 
   /** `stream_txcdf_cdc` fixture (`db.cdc`): a `tx.changeDataFeed=true`
     * table whose history crosses every change-commit kind the cdc
@@ -900,28 +790,19 @@ private[graft] object EntryHelpers {
     * files), v4 SQL DELETE (short en docs: delete change files).
     * Session-stable because the SQL path resolves through a named
     * catalog (Spark caches catalog instances by name). */
-  val txCdcDone =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   def txCdcVersion(s: SparkSession, dir: String, wh: String): Long =
-    txCdcDone.computeIfAbsent(dir, _ => {
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"), col("n_chars"))
+    Fixture.once("db.cdc", dir) {
       val tbl = s"$wh/db/cdc"
-      graft.sources.TxTable.commit(docs.filter(col("lang") === "en"),
-        tbl, "overwrite",
-        properties = Map(graft.sources.TxTable.CdfProperty -> "true"))
-      graft.sources.TxTable.commit(docs.filter(col("lang") === "de"),
-        tbl, "append")
-      s.conf.set("spark.sql.catalog.graft_tx", "graft.sources.TxCatalog")
-      s.conf.set("spark.sql.catalog.graft_tx.root", wh)
+      langSplitTable(s, dir, tbl, langs = Seq("en", "de"),
+        properties = Map(TxTable.CdfProperty -> "true")): Unit
       s.sql("UPDATE graft_tx.db.cdc SET n_chars = n_chars + 1000 " +
         "WHERE lang = 'de'").collect(): Unit
       s.sql("DELETE FROM graft_tx.db.cdc " +
         "WHERE lang = 'en' AND n_chars < 200").collect(): Unit
-      val v = graft.sources.TxTable.latestVersion(tbl).getOrElse(0L)
+      val v = latest(tbl)
       require(v == 4L, s"expected the cdc fixture at v4, got v$v")
-      java.lang.Long.valueOf(v)
-    }).longValue()
+      v
+    }
 
   /** `ops_partitions_meta` fixture (`db.pmeta`): a lang-partitioned
     * table with a DETERMINISTIC file layout — the frame hash-clusters
@@ -929,22 +810,18 @@ private[graft] object EntryHelpers {
     * in exactly ONE task and the hive write emits exactly ONE file per
     * value; that determinism is what lets DuckDB replay the
     * `t$partitions` view's n_files column. */
-  val txPmetaDone =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   def txPmetaVersion(s: SparkSession, dir: String, wh: String): Long =
-    txPmetaDone.computeIfAbsent(dir, _ => {
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"), col("n_chars"))
+    Fixture.once("db.pmeta", dir) {
+      val docs = langDocs(s, dir)
       val tbl = s"$wh/db/pmeta"
-      graft.sources.TxTable.commit(
+      TxTable.commit(
         docs.filter(col("lang").isin("en", "de", "fr"))
           .repartition(8, col("lang")),
         tbl, "overwrite", partitionBy = Some(Seq("lang")))
-      graft.sources.TxTable.commit(
+      TxTable.commit(
         docs.filter(col("lang") === "es").repartition(1), tbl, "append")
-      java.lang.Long.valueOf(
-        graft.sources.TxTable.latestVersion(tbl).getOrElse(0L))
-    }).longValue()
+      latest(tbl)
+    }
 
   /** `sink_txpart` fixture: a PARTITIONED table (`db.part`,
     * `PARTITIONED BY (lang)`) in the shared SQL warehouse — one
@@ -952,22 +829,19 @@ private[graft] object EntryHelpers {
     * so the certified read spans multiple commit dirs AND partition
     * values, the case hive path discovery cannot serve and the
     * manifest-driven scan must (TxTable.readVersion scaladoc). */
-  val txPartDone =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   def txPartitionedVersion(s: SparkSession, dir: String, wh: String): Long =
-    txPartDone.computeIfAbsent(dir, _ => {
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"), col("n_chars"))
+    Fixture.once("db.part", dir) {
+      val docs = langDocs(s, dir)
       val tbl = s"$wh/db/part"
-      graft.sources.TxTable.commit(
+      TxTable.commit(
         docs.filter(col("lang").isin("en", "de", "fr")), tbl,
         "overwrite", partitionBy = Some(Seq("lang")))
-      graft.sources.TxTable.commit(
+      TxTable.commit(
         docs.filter(col("lang") === "es"), tbl, "append")
-      val v = graft.sources.TxTable.latestVersion(tbl).getOrElse(0L)
+      val v = latest(tbl)
       require(v == 2L, s"expected the partitioned fixture at v2, got v$v")
-      java.lang.Long.valueOf(v)
-    }).longValue()
+      v
+    }
 
   /** `join_dpp` dim fixture: a tiny FILE-backed lang dimension next to
     * the partitioned fact (`db.part`). File-backed matters: an
@@ -975,82 +849,76 @@ private[graft] object EntryHelpers {
     * PartitionPruning rule runs, and DPP requires a selective Filter
     * node on the dim side — the real fact-dim shape. Written once per
     * warehouse. */
-  val dimDone =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   def langDimDir(s: SparkSession, wh: String): String =
-    dimDone.computeIfAbsent(wh, _ => {
+    Fixture.once("dim_lang", wh) {
       val d = s"$wh/dim_lang"
       import s.implicits._
       Seq(("en", "major"), ("de", "major"), ("fr", "minor"),
         ("es", "minor")).toDF("lang", "tier")
         .coalesce(1).write.mode("overwrite").parquet(d)
       d
-    })
+    }
 
   /** `join_spj` fixture: a SECOND lang-partitioned table (`db.partw`,
     * one per-lang stats row per partition) next to `db.part` — the
     * co-partitioned pair a storage-partitioned join aligns without a
     * shuffle. */
-  val txSpjDone =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   def txSpjVersion(s: SparkSession, dir: String, wh: String): Long =
-    txSpjDone.computeIfAbsent(dir, _ => {
+    Fixture.once("db.partw", dir) {
       txPartitionedVersion(s, dir, wh): Unit
       val docs = Tables.documents(s, dir)
         .filter(col("lang").isin("en", "de", "fr", "es"))
         .groupBy("lang").agg(count(lit(1)).as("docs"))
       val tbl = s"$wh/db/partw"
-      graft.sources.TxTable.commit(docs, tbl, "overwrite",
+      TxTable.commit(docs, tbl, "overwrite",
         partitionBy = Some(Seq("lang")))
-      java.lang.Long.valueOf(
-        graft.sources.TxTable.latestVersion(tbl).getOrElse(0L))
-    }).longValue()
+      latest(tbl)
+    }
+
+  /** The partition-reload shape shared by `db.dyn` and `db.rpw`: en/de/fr
+    * committed `PARTITIONED BY (lang)` as v1, then `reload` — given the
+    * (doc_id, n_chars, lang) documents — rewrites the `lang` partition
+    * through SQL as v2. Require-pinned on the manifests: v2 is one `op`
+    * commit, every other partition's files carry forward VERBATIM, and
+    * every old `lang` file is replaced. */
+  private def partitionReload(s: SparkSession, dir: String, tbl: String,
+                              lang: String, op: String)(
+      reload: DataFrame => Unit): Long = {
+    val docs = Tables.documents(s, dir)
+      .select(col("doc_id"), col("n_chars"), col("lang"))
+    TxTable.commit(
+      docs.filter(col("lang").isin("en", "de", "fr")), tbl,
+      "overwrite", partitionBy = Some(Seq("lang")))
+    reload(docs)
+    val m1 = TxTable.readManifest(java.nio.file.Paths.get(tbl), 1L)
+    val m2 = TxTable.readManifest(java.nio.file.Paths.get(tbl), 2L)
+    require(m2.op == op, s"expected a $op commit, got '${m2.op}'")
+    def inLang(f: String) = f.split('/').contains(s"lang=$lang")
+    val kept = m1.files.filterNot(inLang)
+    require(kept.nonEmpty && kept.forall(m2.files.contains),
+      s"non-$lang partition files must carry forward VERBATIM through " +
+        s"the $op commit")
+    require(m1.files.filter(inLang).forall(f => !m2.files.contains(f)),
+      s"$lang partition files must be replaced")
+    2L
+  }
 
   /** `ops_dynoverwrite` fixture: a lang-partitioned table (`db.dyn`)
     * whose fr partition is reloaded via SQL `INSERT OVERWRITE` under
     * partitionOverwriteMode=dynamic (one `dynoverwrite` commit — the
     * daily-partition-reload shape). The en/de partitions' files must
     * carry forward VERBATIM — require-pinned here on the manifest. */
-  val txDynDone =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   def txDynVersion(s: SparkSession, dir: String, wh: String): Long =
-    txDynDone.computeIfAbsent(dir, _ => {
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), col("n_chars"), col("lang"))
-      val tbl = s"$wh/db/dyn"
-      graft.sources.TxTable.commit(
-        docs.filter(col("lang").isin("en", "de", "fr")), tbl,
-        "overwrite", partitionBy = Some(Seq("lang")))
-      docs.filter(col("lang") === "fr")
-        .withColumn("n_chars", col("n_chars") + 100000)
-        .createOrReplaceTempView("graft_dyn_fr")
-      val old = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try s.sql(
-        "INSERT OVERWRITE graft_tx.db.dyn SELECT * FROM graft_dyn_fr")
-      finally old match {
-        case Some(v) =>
-          s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None =>
-          s.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    Fixture.once("db.dyn", dir) {
+      partitionReload(s, dir, s"$wh/db/dyn", "fr", "dynoverwrite") { docs =>
+        docs.filter(col("lang") === "fr")
+          .withColumn("n_chars", col("n_chars") + 100000)
+          .createOrReplaceTempView("graft_dyn_fr")
+        GraftSession.withConf(s,
+            "spark.sql.sources.partitionOverwriteMode" -> "dynamic")(
+          s.sql("INSERT OVERWRITE graft_tx.db.dyn SELECT * FROM graft_dyn_fr"))
       }
-      val m1 = graft.sources.TxTable.readManifest(
-        java.nio.file.Paths.get(tbl), 1L)
-      val m2 = graft.sources.TxTable.readManifest(
-        java.nio.file.Paths.get(tbl), 2L)
-      require(m2.op == "dynoverwrite",
-        s"expected a dynoverwrite commit, got '${m2.op}'")
-      def lang(f: String) = f.split('/').collectFirst {
-        case seg if seg.startsWith("lang=") => seg.stripPrefix("lang=") }
-      val keptOld = m1.files.filter(f => !lang(f).contains("fr"))
-      require(keptOld.nonEmpty && keptOld.forall(m2.files.contains),
-        "en/de partition files must carry forward VERBATIM through " +
-          "the dynamic overwrite")
-      require(m1.files.filter(f => lang(f).contains("fr"))
-          .forall(f => !m2.files.contains(f)),
-        "fr partition files must be replaced")
-      java.lang.Long.valueOf(2L)
-    }).longValue()
+    }
 
   /** `ops_replacewhere` fixture: a lang-partitioned table (`db.rpw`)
     * whose de partition is backfilled via SQL `INSERT OVERWRITE …
@@ -1058,37 +926,17 @@ private[graft] object EntryHelpers {
     * OverwriteByExpression filter and executes as ONE atomic
     * `replacewhere` commit (TxTable.replaceWhere); en/fr files carry
     * forward verbatim, require-pinned on the manifest. */
-  val txRpwDone =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   def txRpwVersion(s: SparkSession, dir: String, wh: String): Long =
-    txRpwDone.computeIfAbsent(dir, _ => {
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), col("n_chars"), col("lang"))
-      val tbl = s"$wh/db/rpw"
-      graft.sources.TxTable.commit(
-        docs.filter(col("lang").isin("en", "de", "fr")), tbl,
-        "overwrite", partitionBy = Some(Seq("lang")))
-      docs.filter(col("lang") === "de")
-        .select(col("doc_id"), (col("n_chars") + 500000).as("n_chars"))
-        .createOrReplaceTempView("graft_rpw_de")
-      s.sql(
-        """INSERT OVERWRITE graft_tx.db.rpw PARTITION (lang = 'de')
-          |SELECT doc_id, n_chars FROM graft_rpw_de""".stripMargin)
-      val m1 = graft.sources.TxTable.readManifest(
-        java.nio.file.Paths.get(tbl), 1L)
-      val m2 = graft.sources.TxTable.readManifest(
-        java.nio.file.Paths.get(tbl), 2L)
-      require(m2.op == "replacewhere",
-        s"expected a replacewhere commit, got '${m2.op}'")
-      def isDe(f: String) = f.contains("lang=de")
-      val kept = m1.files.filterNot(isDe)
-      require(kept.nonEmpty && kept.forall(m2.files.contains),
-        "en/fr partition files must carry forward VERBATIM through " +
-          "the scoped overwrite")
-      require(m1.files.filter(isDe).forall(f => !m2.files.contains(f)),
-        "de partition files must be replaced")
-      java.lang.Long.valueOf(2L)
-    }).longValue()
+    Fixture.once("db.rpw", dir) {
+      partitionReload(s, dir, s"$wh/db/rpw", "de", "replacewhere") { docs =>
+        docs.filter(col("lang") === "de")
+          .select(col("doc_id"), (col("n_chars") + 500000).as("n_chars"))
+          .createOrReplaceTempView("graft_rpw_de")
+        s.sql(
+          """INSERT OVERWRITE graft_tx.db.rpw PARTITION (lang = 'de')
+            |SELECT doc_id, n_chars FROM graft_rpw_de""".stripMargin)
+      }
+    }
 
   /** `join_dfp` fixture: an UNPARTITIONED table (`db.dfp`) committed in
     * three per-lang slices with per-file BLOOMS on doc_id, plus a
@@ -1096,15 +944,12 @@ private[graft] object EntryHelpers {
     * interleave across lang slices (min/max can rarely prove a file
     * out), so pruning the de/fr files at runtime is the BLOOM's win —
     * dynamic file pruning on a high-cardinality join key. */
-  val txDfpDone =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   def txDfpDimDir(s: SparkSession, dir: String, wh: String): String =
-    txDfpDone.computeIfAbsent(dir, _ => {
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"), col("n_chars"))
+    Fixture.once("db.dfp", dir) {
+      val docs = langDocs(s, dir)
       val tbl = s"$wh/db/dfp"
       Seq("en", "de", "fr").zipWithIndex.foreach { case (l, i) =>
-        graft.sources.TxTable.commit(docs.filter(col("lang") === l), tbl,
+        TxTable.commit(docs.filter(col("lang") === l), tbl,
           if (i == 0) "overwrite" else "append",
           bloomColumns = Seq("doc_id"))
       }
@@ -1115,7 +960,7 @@ private[graft] object EntryHelpers {
             .as("grp"))
         .coalesce(1).write.mode("overwrite").parquet(d)
       d
-    })
+    }
 
   /** Every node of an executed plan, descending through AQE query
     * stages (QueryStageExec is leaf-like — plain collect stops at it).
@@ -1408,13 +1253,11 @@ private[graft] object EntryHelpers {
     * topology never reads it and JSON-in-JSON escaping would be pure
     * fixture noise.
     *
-    * Memoized per corpus dir (the ivfIndexCache pattern): the JSONL
+    * Memoized per corpus dir (the [[ivfIndexFor]] pattern): the JSONL
     * export is FIXTURE preparation, not the operator under test, so
     * re-timing the query measures the dirtail SOURCE machinery, not a
     * repeated distributed text write. Files are immutable once renamed —
     * exactly the source's contract — so reuse is safe within a session. */
-  val dirtailCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   /** The dirtail JSONL wire schema (ts as epoch-micros on the wire,
     * decoded to TimestampType) — ONE definition shared by every dirtail
     * query; four inline copies previously invited silent divergence of
@@ -1433,7 +1276,7 @@ private[graft] object EntryHelpers {
         org.apache.spark.sql.types.DoubleType)))
 
   def dirtailEventsDir(s: SparkSession, dir: String): String =
-    dirtailCache.computeIfAbsent(dir, _ => buildDirtailEventsDir(s, dir))
+    Fixture.once("dirtail", dir)(buildDirtailEventsDir(s, dir))
 
   private def buildDirtailEventsDir(s: SparkSession, dir: String): String = {
     val src = scratchDir("graft-dirtail-src-")

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -18,12 +17,12 @@ import scala.collection.mutable
   *
   * Bench-contract note: this main is measurement-only tooling — it never
   * runs in the driver's bench and declares no queries. Same session conf
-  * as [[Bench]] so plans match what the bench executes.
+  * and warmup as [[Bench]] ([[GraftSession]]) so plans and per-query
+  * numbers match what the bench executes.
   */
 object PerfProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val tag = sys.env.getOrElse("SPARK_GRAFT_PROBE_TAG", "r21")
     val reps = sys.env.getOrElse("SPARK_GRAFT_PROBE_REPS", "3").toInt
     val phase = sys.env.getOrElse("SPARK_GRAFT_PROBE_PHASE", "before")
@@ -33,44 +32,8 @@ object PerfProbe {
     val extraConf = sys.env.getOrElse("SPARK_GRAFT_PROBE_CONF", "")
       .split(";").map(_.trim).filter(_.contains("="))
       .map { kv => val i = kv.indexOf('='); (kv.take(i), kv.drop(i + 1)) }
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        "134217728")
-      // AQE coalescing floor: the default 1 MiB minPartitionSize collapses
-      // byte-small but CPU-DENSE shuffles (expression-heavy windows,
-      // verify joins) to 1-2 tasks — measured 0.64 s single-task window in
-      // dedup_jaccard_pruned. 64 KiB keeps those parallel; at production
-      // shuffle sizes this floor never binds (partitions are >> 1 MiB).
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        "65536")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-    // overrides LAST so experiments win over the Bench-matching defaults
-    val spark = extraConf.foldLeft(builder0)(
-      (b, kv) => b.config(kv._1, kv._2)).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // identical warmup to Bench so per-query numbers are comparable
-    try {
-      spark.range(1000).selectExpr("sum(id)").collect(): Unit
-      Tables.Names.foreach { t =>
-        try Tables.table(spark, sfDir, t).limit(1).collect(): Unit
-        catch { case _: Throwable => () }
-      }
-      SparkEntry.queries.get("filter_eq").foreach(fn => fn(spark, sfDir).count(): Unit)
-      Seq("sim_topk", "dedup_minhash", "sim_ivfpq", "sim_ivf",
-        "sim_ivf_indexed").foreach(n =>
-        SparkEntry.queries.get(n).foreach { fn =>
-          try fn(spark, sfDir).limit(1).collect(): Unit
-          catch { case _: Throwable => () }
-        })
-      graft.ext.Dedup.unpersistAll()
-    } catch { case _: Throwable => () }
+    val spark = GraftSession.start(GraftSession.envCores, extraConf.toSeq)
+    GraftSession.warmup(spark, sfDir)
 
     final case class JobRec(id: Int, desc: String, start: Long,
                             var end: Long = -1L, var stages: Int = 0,

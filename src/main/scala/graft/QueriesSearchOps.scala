@@ -287,8 +287,6 @@ private[graft] object QueriesSearchOps {
     // (sources/TxCatalog.scala scaladoc) -----
     "sink_txlog_sql" -> ((s: SparkSession, dir: String) => {
       val wh = EntryHelpers.txCatalogWarehouse(s, dir)
-      s.conf.set("spark.sql.catalog.graft_tx", "graft.sources.TxCatalog")
-      s.conf.set("spark.sql.catalog.graft_tx.root", wh)
       s.sql(
         """SELECT CAST(1 AS BIGINT) AS version, doc_id, lang, n_chars
           |FROM graft_tx.db.t VERSION AS OF 1
@@ -444,8 +442,6 @@ private[graft] object QueriesSearchOps {
     // table's content after two enforced SQL INSERTs -----
     "sink_txcheck" -> ((s: SparkSession, dir: String) => {
       val wh = EntryHelpers.txCatalogWarehouse(s, dir)
-      s.conf.set("spark.sql.catalog.graft_tx", "graft.sources.TxCatalog")
-      s.conf.set("spark.sql.catalog.graft_tx.root", wh)
       EntryHelpers.txCheckedVersion(s, dir, wh): Unit
       s.sql(
         """SELECT doc_id, lang, n_chars FROM graft_tx.db.chk
@@ -459,8 +455,6 @@ private[graft] object QueriesSearchOps {
     // every version; atomicity + rejection arms in TxConstraintSpec) -----
     "ops_constraint_sql" -> ((s: SparkSession, dir: String) => {
       val wh = EntryHelpers.txCatalogWarehouse(s, dir)
-      s.conf.set("spark.sql.catalog.graft_tx", "graft.sources.TxCatalog")
-      s.conf.set("spark.sql.catalog.graft_tx.root", wh)
       EntryHelpers.txAlteredVersion(s, dir, wh): Unit
       s.sql(
         """SELECT doc_id, lang, n_chars FROM graft_tx.db.altc
@@ -474,8 +468,6 @@ private[graft] object QueriesSearchOps {
     // projects away everywhere (suite: TxEvolveSpec) -----
     "ops_evolve_sql" -> ((s: SparkSession, dir: String) => {
       val wh = EntryHelpers.txCatalogWarehouse(s, dir)
-      s.conf.set("spark.sql.catalog.graft_tx", "graft.sources.TxCatalog")
-      s.conf.set("spark.sql.catalog.graft_tx.root", wh)
       EntryHelpers.txEvolvedVersion(s, dir, wh): Unit
       s.sql(
         """SELECT doc_id, lang, flag FROM graft_tx.db.evo
@@ -488,8 +480,6 @@ private[graft] object QueriesSearchOps {
     // moves rows between files, never changes them) -----
     "ops_zorder_sql" -> ((s: SparkSession, dir: String) => {
       val wh = EntryHelpers.txCatalogWarehouse(s, dir)
-      s.conf.set("spark.sql.catalog.graft_tx", "graft.sources.TxCatalog")
-      s.conf.set("spark.sql.catalog.graft_tx.root", wh)
       val v = EntryHelpers.txZorderedVersion(s, dir, wh)
       s.sql(
         s"""SELECT CAST($v AS BIGINT) AS version, doc_id, lang, n_chars
@@ -503,8 +493,6 @@ private[graft] object QueriesSearchOps {
     // through the manifest-driven scan, with a partition predicate -----
     "sink_txpart" -> ((s: SparkSession, dir: String) => {
       val wh = EntryHelpers.txCatalogWarehouse(s, dir)
-      s.conf.set("spark.sql.catalog.graft_tx", "graft.sources.TxCatalog")
-      s.conf.set("spark.sql.catalog.graft_tx.root", wh)
       EntryHelpers.txPartitionedVersion(s, dir, wh): Unit
       s.sql(
         """SELECT doc_id, n_chars, lang FROM graft_tx.db.part
@@ -519,8 +507,6 @@ private[graft] object QueriesSearchOps {
     // (the executed scan planned only the matching groups) -----
     "join_dpp" -> ((s: SparkSession, dir: String) => {
       val wh = EntryHelpers.txCatalogWarehouse(s, dir)
-      s.conf.set("spark.sql.catalog.graft_tx", "graft.sources.TxCatalog")
-      s.conf.set("spark.sql.catalog.graft_tx.root", wh)
       EntryHelpers.txPartitionedVersion(s, dir, wh): Unit
       val dim = EntryHelpers.langDimDir(s, wh)
       def q() = s.sql(
@@ -550,8 +536,6 @@ private[graft] object QueriesSearchOps {
     // the pruning (TxFlatScan + TxRuntimeFilter.survivors) -----
     "join_dfp" -> ((s: SparkSession, dir: String) => {
       val wh = EntryHelpers.txCatalogWarehouse(s, dir)
-      s.conf.set("spark.sql.catalog.graft_tx", "graft.sources.TxCatalog")
-      s.conf.set("spark.sql.catalog.graft_tx.root", wh)
       val dim = EntryHelpers.txDfpDimDir(s, dir, wh)
       def q() = s.sql(
         s"""SELECT f.doc_id, f.lang, f.n_chars FROM graft_tx.db.dfp f
@@ -578,8 +562,6 @@ private[graft] object QueriesSearchOps {
     // manifest) — the daily-partition-reload shape at 100 TB -----
     "ops_dynoverwrite" -> ((s: SparkSession, dir: String) => {
       val wh = EntryHelpers.txCatalogWarehouse(s, dir)
-      s.conf.set("spark.sql.catalog.graft_tx", "graft.sources.TxCatalog")
-      s.conf.set("spark.sql.catalog.graft_tx.root", wh)
       EntryHelpers.txDynVersion(s, dir, wh): Unit
       s.sql(
         """SELECT doc_id, lang, n_chars FROM graft_tx.db.dyn
@@ -592,8 +574,6 @@ private[graft] object QueriesSearchOps {
     // non-null rows vs the DuckDB replay -----
     "ops_nullskip" -> ((s: SparkSession, dir: String) => {
       val wh = EntryHelpers.txCatalogWarehouse(s, dir)
-      s.conf.set("spark.sql.catalog.graft_tx", "graft.sources.TxCatalog")
-      s.conf.set("spark.sql.catalog.graft_tx.root", wh)
       val docs = Tables.documents(s, dir)
         .select(col("doc_id"), col("lang"), col("n_chars"))
       val tbl = s"$wh/db/nul"
@@ -638,8 +618,6 @@ private[graft] object QueriesSearchOps {
     // fixture-pinned) — the backfill-a-range shape -----
     "ops_replacewhere" -> ((s: SparkSession, dir: String) => {
       val wh = EntryHelpers.txCatalogWarehouse(s, dir)
-      s.conf.set("spark.sql.catalog.graft_tx", "graft.sources.TxCatalog")
-      s.conf.set("spark.sql.catalog.graft_tx.root", wh)
       EntryHelpers.txRpwVersion(s, dir, wh): Unit
       s.sql(
         """SELECT doc_id, lang, n_chars FROM graft_tx.db.rpw
@@ -653,8 +631,6 @@ private[graft] object QueriesSearchOps {
     // delegation left) -----
     "count_tx_partcol" -> ((s: SparkSession, dir: String) => {
       val wh = EntryHelpers.txCatalogWarehouse(s, dir)
-      s.conf.set("spark.sql.catalog.graft_tx", "graft.sources.TxCatalog")
-      s.conf.set("spark.sql.catalog.graft_tx.root", wh)
       EntryHelpers.txPartitionedVersion(s, dir, wh): Unit
       EntryHelpers.withSqlConf(s,
         "spark.sql.parquet.aggregatePushdown" -> "true") {
@@ -682,8 +658,6 @@ private[graft] object QueriesSearchOps {
     // rather than hash-compared -----
     "ops_partitions_meta" -> ((s: SparkSession, dir: String) => {
       val wh = EntryHelpers.txCatalogWarehouse(s, dir)
-      s.conf.set("spark.sql.catalog.graft_tx", "graft.sources.TxCatalog")
-      s.conf.set("spark.sql.catalog.graft_tx.root", wh)
       EntryHelpers.txPmetaVersion(s, dir, wh): Unit
       val full = s.sql(
         """SELECT part, n_files, n_rows, bytes
@@ -711,8 +685,6 @@ private[graft] object QueriesSearchOps {
     // catalog's V2 bucket function lets Spark align the groups -----
     "join_spj_bucket" -> ((s: SparkSession, dir: String) => {
       val wh = EntryHelpers.txCatalogWarehouse(s, dir)
-      s.conf.set("spark.sql.catalog.graft_tx", "graft.sources.TxCatalog")
-      s.conf.set("spark.sql.catalog.graft_tx.root", wh)
       EntryHelpers.txBucketVersion(s, dir, wh): Unit
       EntryHelpers.withSqlConf(s,
         "spark.sql.sources.v2.bucketing.enabled" -> "true",
@@ -743,8 +715,6 @@ private[graft] object QueriesSearchOps {
     // strict-bound tightening); the kept-path count is plan-pinned -----
     "scan_days_prune" -> ((s: SparkSession, dir: String) => {
       val wh = EntryHelpers.txCatalogWarehouse(s, dir)
-      s.conf.set("spark.sql.catalog.graft_tx", "graft.sources.TxCatalog")
-      s.conf.set("spark.sql.catalog.graft_tx.root", wh)
       EntryHelpers.txDaysVersion(s, dir, wh): Unit
       val df = s.sql(
         """SELECT event_id, user_id FROM graft_tx.db.evd
@@ -764,8 +734,6 @@ private[graft] object QueriesSearchOps {
     // summary -----
     "ops_txlog_meta" -> ((s: SparkSession, dir: String) => {
       val wh = EntryHelpers.txCatalogWarehouse(s, dir)
-      s.conf.set("spark.sql.catalog.graft_tx", "graft.sources.TxCatalog")
-      s.conf.set("spark.sql.catalog.graft_tx.root", wh)
       EntryHelpers.txLogMetaVersion(s, dir, wh): Unit
       s.sql(
         """SELECT latest_version, checkpoint_version, replay_deltas
@@ -778,8 +746,6 @@ private[graft] object QueriesSearchOps {
     // needed; kept-path plan-pinned like the transform arms -----
     "scan_ts_prune" -> ((s: SparkSession, dir: String) => {
       val wh = EntryHelpers.txCatalogWarehouse(s, dir)
-      s.conf.set("spark.sql.catalog.graft_tx", "graft.sources.TxCatalog")
-      s.conf.set("spark.sql.catalog.graft_tx.root", wh)
       EntryHelpers.txTsVersion(s, dir, wh): Unit
       val df = s.sql(
         """SELECT event_id, user_id FROM graft_tx.db.evt
@@ -805,8 +771,6 @@ private[graft] object QueriesSearchOps {
     // like the days arm -----
     "scan_hours_prune" -> ((s: SparkSession, dir: String) => {
       val wh = EntryHelpers.txCatalogWarehouse(s, dir)
-      s.conf.set("spark.sql.catalog.graft_tx", "graft.sources.TxCatalog")
-      s.conf.set("spark.sql.catalog.graft_tx.root", wh)
       EntryHelpers.txHoursVersion(s, dir, wh): Unit
       val df = s.sql(
         """SELECT event_id, user_id FROM graft_tx.db.evh
@@ -821,8 +785,6 @@ private[graft] object QueriesSearchOps {
     }),
     "join_spj" -> ((s: SparkSession, dir: String) => {
       val wh = EntryHelpers.txCatalogWarehouse(s, dir)
-      s.conf.set("spark.sql.catalog.graft_tx", "graft.sources.TxCatalog")
-      s.conf.set("spark.sql.catalog.graft_tx.root", wh)
       EntryHelpers.txSpjVersion(s, dir, wh): Unit
       // the certified read itself runs under the SPJ confs (scoped —
       // withSqlConf materializes before restoring) with the exchange
@@ -1013,8 +975,6 @@ private[graft] object QueriesSearchOps {
     // travel (`VERSION AS OF 'pre_fr'`) -----
     "ops_tags" -> ((s: SparkSession, dir: String) => {
       val wh = EntryHelpers.txCatalogWarehouse(s, dir)
-      s.conf.set("spark.sql.catalog.graft_tx", "graft.sources.TxCatalog")
-      s.conf.set("spark.sql.catalog.graft_tx.root", wh)
       EntryHelpers.txTagsVersion(s, dir, wh): Unit
       s.sql(
         """SELECT doc_id, lang, n_chars
@@ -1083,8 +1043,6 @@ private[graft] object QueriesSearchOps {
     // bytes, never rows) -----
     "ops_optimize_sql" -> ((s: SparkSession, dir: String) => {
       val wh = EntryHelpers.txCatalogWarehouse(s, dir)
-      s.conf.set("spark.sql.catalog.graft_tx", "graft.sources.TxCatalog")
-      s.conf.set("spark.sql.catalog.graft_tx.root", wh)
       val v = EntryHelpers.txOptCompactedVersion(s, dir, wh)
       s.sql(
         s"""SELECT CAST($v AS BIGINT) AS version, doc_id, lang, n_chars
@@ -1100,8 +1058,6 @@ private[graft] object QueriesSearchOps {
     // version -----
     "ops_delete_sql" -> ((s: SparkSession, dir: String) => {
       val wh = EntryHelpers.txCatalogWarehouse(s, dir)
-      s.conf.set("spark.sql.catalog.graft_tx", "graft.sources.TxCatalog")
-      s.conf.set("spark.sql.catalog.graft_tx.root", wh)
       val v = EntryHelpers.txDeletedVersion(s, dir, wh)
       s.sql(
         s"""SELECT CAST($v AS BIGINT) AS version, doc_id, lang, n_chars
@@ -1115,8 +1071,6 @@ private[graft] object QueriesSearchOps {
     // certified output is the post-update snapshot via SQL time travel -----
     "ops_update_sql" -> ((s: SparkSession, dir: String) => {
       val wh = EntryHelpers.txCatalogWarehouse(s, dir)
-      s.conf.set("spark.sql.catalog.graft_tx", "graft.sources.TxCatalog")
-      s.conf.set("spark.sql.catalog.graft_tx.root", wh)
       val v = EntryHelpers.txUpdatedVersion(s, dir, wh)
       s.sql(
         s"""SELECT CAST($v AS BIGINT) AS version, doc_id, lang, n_chars
@@ -1130,8 +1084,6 @@ private[graft] object QueriesSearchOps {
     // from the ON equi-conjunct bounded by the source's measured min/max) -----
     "ops_merge_sql" -> ((s: SparkSession, dir: String) => {
       val wh = EntryHelpers.txCatalogWarehouse(s, dir)
-      s.conf.set("spark.sql.catalog.graft_tx", "graft.sources.TxCatalog")
-      s.conf.set("spark.sql.catalog.graft_tx.root", wh)
       val v = EntryHelpers.txMergedVersion(s, dir, wh)
       s.sql(
         s"""SELECT CAST($v AS BIGINT) AS version, doc_id, lang, n_chars
@@ -1148,8 +1100,6 @@ private[graft] object QueriesSearchOps {
     // RENAMED column still skips files (stats survive) -----
     "ops_rename_sql" -> ((s: SparkSession, dir: String) => {
       val wh = EntryHelpers.txCatalogWarehouse(s, dir)
-      s.conf.set("spark.sql.catalog.graft_tx", "graft.sources.TxCatalog")
-      s.conf.set("spark.sql.catalog.graft_tx.root", wh)
       val v = EntryHelpers.txRenamedVersion(s, dir, wh)
       val m = graft.sources.TxTable.readManifest(
         java.nio.file.Paths.get(s"$wh/db/ren"), v)
@@ -1177,8 +1127,6 @@ private[graft] object QueriesSearchOps {
     // int-recorded stats — the exactness contract of the widen -----
     "ops_widen_sql" -> ((s: SparkSession, dir: String) => {
       val wh = EntryHelpers.txCatalogWarehouse(s, dir)
-      s.conf.set("spark.sql.catalog.graft_tx", "graft.sources.TxCatalog")
-      s.conf.set("spark.sql.catalog.graft_tx.root", wh)
       val v = EntryHelpers.txWidenedVersion(s, dir, wh)
       val m = graft.sources.TxTable.readManifest(
         java.nio.file.Paths.get(s"$wh/db/wid"), v)
@@ -1212,8 +1160,6 @@ private[graft] object QueriesSearchOps {
     // (EntryHelpers.txMergeEvolvedVersion pins the op history) -----
     "ops_merge_evolve" -> ((s: SparkSession, dir: String) => {
       val wh = EntryHelpers.txCatalogWarehouse(s, dir)
-      s.conf.set("spark.sql.catalog.graft_tx", "graft.sources.TxCatalog")
-      s.conf.set("spark.sql.catalog.graft_tx.root", wh)
       val v = EntryHelpers.txMergeEvolvedVersion(s, dir, wh)
       s.sql(
         s"""SELECT CAST($v AS BIGINT) AS version, doc_id, lang, n_chars,
@@ -1228,8 +1174,6 @@ private[graft] object QueriesSearchOps {
     // en rows read NULL, updated de / inserted fr rows carry it -----
     "ops_merge_evolve_part" -> ((s: SparkSession, dir: String) => {
       val wh = EntryHelpers.txCatalogWarehouse(s, dir)
-      s.conf.set("spark.sql.catalog.graft_tx", "graft.sources.TxCatalog")
-      s.conf.set("spark.sql.catalog.graft_tx.root", wh)
       val v = EntryHelpers.txMergeEvolvedPartVersion(s, dir, wh)
       s.sql(
         s"""SELECT CAST($v AS BIGINT) AS version, doc_id, lang, n_chars,
@@ -1244,8 +1188,6 @@ private[graft] object QueriesSearchOps {
     // a regression to a data scan fails the GATE, not just the suite -----
     "count_tx_footer" -> ((s: SparkSession, dir: String) => {
       val wh = EntryHelpers.txCatalogWarehouse(s, dir)
-      s.conf.set("spark.sql.catalog.graft_tx", "graft.sources.TxCatalog")
-      s.conf.set("spark.sql.catalog.graft_tx.root", wh)
       EntryHelpers.txOptCompactedVersion(s, dir, wh): Unit
       // withSqlConf materializes under the enabled conf and hands the
       // gate a local frame — the conf must not leak into other queries
@@ -1268,8 +1210,6 @@ private[graft] object QueriesSearchOps {
     // carry it. Plan-pinned in the gate like count_tx_footer -----
     "count_tx_footer_part" -> ((s: SparkSession, dir: String) => {
       val wh = EntryHelpers.txCatalogWarehouse(s, dir)
-      s.conf.set("spark.sql.catalog.graft_tx", "graft.sources.TxCatalog")
-      s.conf.set("spark.sql.catalog.graft_tx.root", wh)
       EntryHelpers.txPartitionedVersion(s, dir, wh): Unit
       EntryHelpers.withSqlConf(s,
         "spark.sql.parquet.aggregatePushdown" -> "true") {
@@ -1291,8 +1231,6 @@ private[graft] object QueriesSearchOps {
     // DV-aware SQL scan (DvReadRule anti-joins the tombstones) -----
     "ops_delete_mor" -> ((s: SparkSession, dir: String) => {
       val wh = EntryHelpers.txCatalogWarehouse(s, dir)
-      s.conf.set("spark.sql.catalog.graft_tx", "graft.sources.TxCatalog")
-      s.conf.set("spark.sql.catalog.graft_tx.root", wh)
       val (v4, _) = EntryHelpers.txMorVersions(s, dir, wh)
       s.sql(
         s"""SELECT CAST($v4 AS BIGINT) AS version, doc_id, lang, n_chars
@@ -1306,8 +1244,6 @@ private[graft] object QueriesSearchOps {
     // touched-file bytes; same oracle shape as the CoW ops_update_sql -----
     "ops_update_mor" -> ((s: SparkSession, dir: String) => {
       val wh = EntryHelpers.txCatalogWarehouse(s, dir)
-      s.conf.set("spark.sql.catalog.graft_tx", "graft.sources.TxCatalog")
-      s.conf.set("spark.sql.catalog.graft_tx.root", wh)
       val v = EntryHelpers.txMorUpdatedVersion(s, dir, wh)
       s.sql(
         s"""SELECT CAST($v AS BIGINT) AS version, doc_id, lang, n_chars
@@ -1321,8 +1257,6 @@ private[graft] object QueriesSearchOps {
     // shape as the CoW ops_merge_sql -----
     "ops_merge_mor" -> ((s: SparkSession, dir: String) => {
       val wh = EntryHelpers.txCatalogWarehouse(s, dir)
-      s.conf.set("spark.sql.catalog.graft_tx", "graft.sources.TxCatalog")
-      s.conf.set("spark.sql.catalog.graft_tx.root", wh)
       val v = EntryHelpers.txMorMergedVersion(s, dir, wh)
       s.sql(
         s"""SELECT CAST($v AS BIGINT) AS version, doc_id, lang, n_chars
@@ -1338,8 +1272,6 @@ private[graft] object QueriesSearchOps {
     // size (TxChanges scaladoc) -----
     "ops_txchanges" -> ((s: SparkSession, dir: String) => {
       val wh = EntryHelpers.txCatalogWarehouse(s, dir)
-      s.conf.set("spark.sql.catalog.graft_tx", "graft.sources.TxCatalog")
-      s.conf.set("spark.sql.catalog.graft_tx.root", wh)
       val v = EntryHelpers.txChangesVersion(s, dir, wh)
       graft.sources.TxChanges.between(s, s"$wh/db/chg", 0L, v)
         .select(col("_commit_version"), col("_change_type"),
@@ -1351,8 +1283,6 @@ private[graft] object QueriesSearchOps {
     // fixture-pinned), content identical to the MoR view of v4 -----
     "ops_purge_dv" -> ((s: SparkSession, dir: String) => {
       val wh = EntryHelpers.txCatalogWarehouse(s, dir)
-      s.conf.set("spark.sql.catalog.graft_tx", "graft.sources.TxCatalog")
-      s.conf.set("spark.sql.catalog.graft_tx.root", wh)
       val (_, v5) = EntryHelpers.txMorVersions(s, dir, wh)
       s.sql(
         s"""SELECT CAST($v5 AS BIGINT) AS version, doc_id, lang, n_chars

@@ -1,39 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // empty-filter count() answered from parquet footers — the analog of
-      // the reference's estimated_document_count (No_Sql.py:416)
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      // events.ts is TIMESTAMP(NANOS); read as long, converted in Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // same join-strategy config as Bench (AQE runtime SMJ→SHJ only —
-      // the r21 static preference was dropped after the r22 A/B, see
-      // Bench.scala) so the correctness gate certifies the exact
-      // physical plans the bench runs
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        "134217728")
-      // AQE coalescing floor: the default 1 MiB minPartitionSize collapses
-      // byte-small but CPU-DENSE shuffles (expression-heavy windows,
-      // verify joins) to 1-2 tasks — measured 0.64 s single-task window in
-      // dedup_jaccard_pruned. 64 KiB keeps those parallel; at production
-      // shuffle sizes this floor never binds (partitions are >> 1 MiB).
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        "65536")
-      // SQL functions + the tx-catalog row-level rule (UPDATE/MERGE)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start(GraftSession.envCores)
     new java.io.File(outDir).mkdirs()
     // optional subset for local iteration (same contract as Bench):
     // SPARK_GRAFT_ONLY=q1,q2 dumps and declares only those queries

@@ -265,9 +265,19 @@ object IvfIndex {
              query: Seq[Double], k: Int, nprobe: Int,
              rescore: Boolean = false,
              vecCol: String = "embedding",
-             candidates: Int = 0): DataFrame =
+             candidates: Int = 0): DataFrame = {
+    // argument checks BEFORE the probe: invalid arguments must not pay
+    // (or launch) the centroid job
+    requireCandidates(candidates, rescore)
     topKPqCells(spark, path, idCol, query, k,
       probe(spark, path, query, nprobe), rescore, vecCol, candidates)
+  }
+
+  private def requireCandidates(candidates: Int, rescore: Boolean): Unit =
+    require(candidates == 0 || rescore,
+      "a candidate pool wider than k only means anything with " +
+        "rescore = true — without the exact rescore there is no " +
+        "second ranking to cut it back to k")
 
   /** [[topKPq]] with the probed cells PRECOMPUTED (a prefix of
     * [[rankCellsMany]]'s ranked list) — the batch/sweep entry point that
@@ -278,10 +288,7 @@ object IvfIndex {
                                  rescore: Boolean = false,
                                  vecCol: String = "embedding",
                                  candidates: Int = 0): DataFrame = {
-    require(candidates == 0 || rescore,
-      "a candidate pool wider than k only means anything with " +
-        "rescore = true — without the exact rescore there is no " +
-        "second ranking to cut it back to k")
+    requireCandidates(candidates, rescore)
     val codebook = spark.read.parquet(s"$path/codebook")
     val meta = new String(Files.readAllBytes(Paths.get(path, "meta.json")))
     val numSub = "\"numSub\":(\\d+)".r.findFirstMatchIn(meta).get.group(1).toInt

@@ -127,8 +127,10 @@ object Triangles {
     *
     * Each round is one degree aggregate + two semi-join filters on the
     * node key — no cartesian, no driver-side graph; the surviving edge
-    * set is re-persisted per round (TrackedCache) so lineage stays flat,
-    * the [[Components.connectedComponents]] iteration discipline.
+    * set and each round's degree frame are EAGER `localCheckpoint`s, so
+    * lineage stays flat, and the previous round's checkpoint is freed
+    * via [[Components.freeCheckpoint]] once the next one is materialized
+    * — the [[Components.connectedComponents]] iteration discipline.
     * Convergence within `maxRounds` is REQUIRED loudly: peeling removes
     * at least one node per non-final round, so rounds are bounded by the
     * peel depth, not |V| — certified queries pick a bound their oracle

@@ -598,7 +598,14 @@ private[graft] object TxBucketFunction
   }
 }
 
-private[sources] object TxCatalog {
+private[graft] object TxCatalog {
+  /** Register a TxCatalog named `name` over the warehouse `root` on the
+    * session conf — the two keys the class scaladoc documents. */
+  def register(spark: SparkSession, name: String, root: String): Unit = {
+    spark.conf.set(s"spark.sql.catalog.$name", classOf[TxCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$name.root", root)
+  }
+
   /** Identity partition transforms → column names; anything fancier
     * (bucket, days, truncate, ...) refuses loudly — accepting a clause
     * the layout cannot honor would misrepresent the table. */

@@ -14,9 +14,7 @@ class BucketingSpec extends SparkSpec {
     // at test scale AQE would broadcast the dim and hide the bucketing —
     // disable auto-broadcast so the plan shows the co-located SMJ that a
     // 100 TB fact-fact join would use
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       Bucketing.writeBucketed(orders, "bkt_orders", s"$dir/o", "o_custkey", 8)
       Bucketing.writeBucketed(customer, "bkt_customer", s"$dir/c", "c_custkey", 8)
 
@@ -39,16 +37,13 @@ class BucketingSpec extends SparkSpec {
         orders("o_custkey") === customer("c_custkey")).count()
       assert(n == expect)
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.sql("DROP TABLE IF EXISTS bkt_orders")
       spark.sql("DROP TABLE IF EXISTS bkt_customer")
     }
   }
 
   test("declared join_bucketed: the only Exchange is the final aggregation") {
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val df = SparkEntry.queries("join_bucketed")(spark, "/root/testdata/sf0.001")
       df.collect()
       val plan = df.queryExecution.executedPlan.toString
@@ -61,7 +56,6 @@ class BucketingSpec extends SparkSpec {
       assert(!plan.contains("Exchange hashpartitioning(c_custkey"), plan.take(2000))
       assert(!plan.contains("BroadcastExchange"), plan.take(2000))
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.sql("DROP TABLE IF EXISTS graft_bkt_orders")
       spark.sql("DROP TABLE IF EXISTS graft_bkt_customer")
     }

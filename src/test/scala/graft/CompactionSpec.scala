@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{Compaction, OrcTable}
+import graft.sources.{Compaction, OrcTable, TxCatalog}
 
 /** Compaction planning and the ORC codec round trip. */
 class CompactionSpec extends SparkSpec {
@@ -97,8 +97,7 @@ class CompactionSpec extends SparkSpec {
     import spark.implicits._
     import graft.sources.TxTable
     val wh = java.nio.file.Files.createTempDirectory("cmpw-sql-").toString
-    spark.conf.set("spark.sql.catalog.txcw", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.txcw.root", wh)
+    TxCatalog.register(spark, "txcw", wh)
     val tbl = s"$wh/db/t"
     TxTable.commit(Seq((1L, "a"), (2L, "a")).toDF("id", "g"), tbl,
       "overwrite")
@@ -128,8 +127,7 @@ class CompactionSpec extends SparkSpec {
     import spark.implicits._
     import graft.sources.TxTable
     val wh = java.nio.file.Files.createTempDirectory("zow-sql-").toString
-    spark.conf.set("spark.sql.catalog.txzw", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.txzw.root", wh)
+    TxCatalog.register(spark, "txzw", wh)
     val tbl = s"$wh/db/t"
     // two commits: one low-id slab (in scope), one high-id (out)
     TxTable.commit((0L until 64L).map(i => (i, i % 16, (i * 7) % 16))

@@ -60,6 +60,20 @@ class IvfIndexSpec extends SparkSpec {
     assert(composed == plain)
   }
 
+  test("IVF-PQ rejects candidates without rescore before any Spark job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq-arg").toString
+    IvfIndex.buildPq(vecs, "vec_id", "embedding", "label", dir, numSub = 3)
+    val group = s"graft-ivfpq-arg-${System.nanoTime()}"
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, "invalid topKPq arguments")
+    try intercept[IllegalArgumentException](
+      IvfIndex.topKPq(spark, dir, "vec_id", Seq(1.0, 0.05, 0.0),
+        k = 3, nprobe = 2, candidates = 10))
+    finally sc.clearJobGroup()
+    // the centroid probe would have run as a job in this group
+    assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty)
+  }
+
   test("IVF-PQ prunes codes AND rescore scans; vectors never shuffle") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq-pl").toString
     IvfIndex.buildPq(vecs, "vec_id", "embedding", "label", dir, numSub = 3)

@@ -4,19 +4,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole suite (Spark startup is ~2s;
-  * per-suite sessions would dominate test time). */
+  * per-suite sessions would dominate test time), on the same
+  * [[GraftSession]] profile the mains run, pinned to four cores. */
 object TestSpark {
+  val Cores = 4
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet is TIMESTAMP(NANOS): same legacy read as Verify/Bench
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // SQL functions + the tx-catalog row-level rule (UPDATE/MERGE)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.start(Cores)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
@@ -45,6 +38,12 @@ abstract class SparkSpec extends AnyFunSuite {
       org.apache.spark.sql.Row(5L, "Eve", 52.0, "hr", 120000.0, 30.0))
     spark.createDataFrame(rows.asJava, schema)
   }
+
+  /** Run `body` with SQL confs toggled, restoring each key's prior value
+    * (or unsetting it) afterwards, so a scoped toggle never overrides the
+    * [[GraftSession]] profile for the suites that run after it. */
+  def withConf[T](pairs: (String, String)*)(body: => T): T =
+    GraftSession.withConf(spark, pairs: _*)(body)
 
   def ids(df: DataFrame): Seq[Long] =
     df.select("emp_id").collect().map(_.getLong(0)).sorted.toSeq

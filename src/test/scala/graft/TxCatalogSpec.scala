@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.Row
 
 
-import graft.sources.TxTable
+import graft.sources.{TxCatalog, TxTable}
 
 /** The DSv2 TxCatalog: SQL name resolution, VERSION/TIMESTAMP time
   * travel, pushdown reaching the delegated parquet scan, and the loud
@@ -20,8 +20,7 @@ class TxCatalogSpec extends SparkSpec {
     TxTable.commit(t1, s"$wh/db/t", "overwrite")   // v1
     TxTable.commit(t2, s"$wh/db/t", "append")      // v2
     TxTable.commit(t2, s"$wh/db/t", "overwrite")   // v3
-    spark.conf.set("spark.sql.catalog.txspec", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.txspec.root", wh)
+    TxCatalog.register(spark, "txspec", wh)
     wh
   }
 
@@ -80,8 +79,7 @@ class TxCatalogSpec extends SparkSpec {
 
   test("whole-table COUNT/MIN/MAX answer from parquet footers") {
     warehouse
-    spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-    try {
+    withConf("spark.sql.parquet.aggregatePushdown" -> "true") {
       val df = spark.sql("SELECT count(*), min(id), max(id) FROM txspec.db.t")
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("PushedAggregation: [COUNT"),
@@ -101,15 +99,13 @@ class TxCatalogSpec extends SparkSpec {
       assert(!f.queryExecution.executedPlan.toString
         .contains("PushedAggregation: [COUNT"))
       assert(f.head().getLong(0) == 1L)
-    } finally
-      spark.conf.set("spark.sql.parquet.aggregatePushdown", "false")
+    }
   }
 
   test("PARTITIONED tables push global data-column aggregates to footers") {
     import spark.implicits._
     val wh = Files.createTempDirectory("txagg-part-").toString
-    spark.conf.set("spark.sql.catalog.txap", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.txap.root", wh)
+    TxCatalog.register(spark, "txap", wh)
     graft.sources.TxTable.commit(
       Seq((1L, "a", 10L), (2L, "a", 20L), (3L, "b", 5L))
         .toDF("id", "grp", "n"),
@@ -117,8 +113,7 @@ class TxCatalogSpec extends SparkSpec {
     graft.sources.TxTable.commit(
       Seq((4L, "c", 40L)).toDF("id", "grp", "n"),
       s"$wh/db/p", "append")
-    spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-    try {
+    withConf("spark.sql.parquet.aggregatePushdown" -> "true") {
       // global COUNT/MIN/MAX over DATA columns: one delegated footer
       // builder over every file's data schema — grouping is irrelevant
       val df = spark.sql(
@@ -141,8 +136,7 @@ class TxCatalogSpec extends SparkSpec {
         .contains("PushedAggregation"))
       assert(g.collect().map(x => (x.getString(0), x.getLong(1))).toMap ==
         Map("a" -> 2L, "b" -> 1L, "c" -> 1L))
-    } finally
-      spark.conf.set("spark.sql.parquet.aggregatePushdown", "false")
+    }
   }
 
   test("a DV-bearing snapshot refuses the plain scan when DvReadRule is absent") {
@@ -175,8 +169,7 @@ class TxCatalogSpec extends SparkSpec {
     assert(e.getMessage.contains("GraftExtensions"), e.getMessage)
     // the registered session (this suite's) still reads it fine through
     // DvReadRule's swap — the guard never fires on the supported path
-    spark.conf.set("spark.sql.catalog.txgd", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.txgd.root", wh)
+    TxCatalog.register(spark, "txgd", wh)
     assert(spark.sql("SELECT id FROM txgd.db.g").collect()
       .map(_.getLong(0)).toSeq == Seq(2L))
   }

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.sources.{TxChanges, TxTable}
+import graft.sources.{TxCatalog, TxChanges, TxTable}
 
 /** Batch change-data-feed (`TxChanges.between`): exact per-version
   * change rows, cost bounded by changed files — inserts read directly,
@@ -36,8 +36,7 @@ class TxChangesSpec extends SparkSpec {
 
   test("MoR delete/update/merge serve exact changes from their sidecars") {
     val wh = Files.createTempDirectory("txchg-cat-").toString
-    spark.conf.set("spark.sql.catalog.txchg", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.txchg.root", wh)
+    TxCatalog.register(spark, "txchg", wh)
     spark.sql("CREATE TABLE txchg.db.t (id BIGINT, n BIGINT) " +
       "TBLPROPERTIES ('tx.deletionVectors' = 'true')")
     spark.sql("INSERT INTO txchg.db.t SELECT id, id * 10 " +

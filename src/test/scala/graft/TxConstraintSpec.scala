@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.sources.TxTable
+import graft.sources.{TxCatalog, TxTable}
 
 /** CHECK constraints on the tx table: the commit-time data-quality
   * gate — SQL-standard semantics (FALSE violates, NULL passes), loud
@@ -53,8 +53,7 @@ class TxConstraintSpec extends SparkSpec {
 
   test("row-level rewrites cannot introduce violations") {
     val wh = Files.createTempDirectory("txcheck-sql-").toString
-    spark.conf.set("spark.sql.catalog.txck", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.txck.root", wh)
+    TxCatalog.register(spark, "txck", wh)
     spark.sql("CREATE TABLE txck.db.t (id BIGINT, n BIGINT) " +
       "TBLPROPERTIES ('check.n_positive' = 'n > 0')")
     spark.sql("INSERT INTO txck.db.t VALUES (1, 5), (2, 7)")
@@ -108,8 +107,7 @@ class TxConstraintSpec extends SparkSpec {
 
   test("SQL ALTER TABLE SET/UNSET TBLPROPERTIES drives check.* constraints") {
     val wh = Files.createTempDirectory("txcheck-alter-").toString
-    spark.conf.set("spark.sql.catalog.txal", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.txal.root", wh)
+    TxCatalog.register(spark, "txal", wh)
     spark.sql("CREATE TABLE txal.db.t (id BIGINT, n BIGINT)")
     spark.sql("INSERT INTO txal.db.t VALUES (1, 5), (2, 7)")
     // SET registers (validating existing data) and then enforces

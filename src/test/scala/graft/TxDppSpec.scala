@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.sources.{TxFlatScan, TxPartitionedScan, TxRuntimeFilter, TxStats, TxTable}
+import graft.sources.{TxCatalog, TxFlatScan, TxPartitionedScan, TxRuntimeFilter, TxStats, TxTable}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -57,8 +57,7 @@ class TxDppSpec extends SparkSpec {
   test("fact-dim join prunes fact value groups at runtime") {
     val (tbl, dim) = fixture()
     val wh = tbl.stripSuffix("/tbl")
-    spark.conf.set("spark.sql.catalog.txdpp", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.txdpp.root", wh)
+    TxCatalog.register(spark, "txdpp", wh)
     dim.createOrReplaceTempView("txdpp_dim")
     val q = spark.sql(
       """SELECT f.id, f.chars FROM txdpp.tbl f
@@ -84,8 +83,7 @@ class TxDppSpec extends SparkSpec {
   test("DPP result equals the non-DPP plan; unknown shapes keep everything") {
     val (tbl, dim) = fixture()
     val wh = tbl.stripSuffix("/tbl")
-    spark.conf.set("spark.sql.catalog.txdpp2", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.txdpp2.root", wh)
+    TxCatalog.register(spark, "txdpp2", wh)
     dim.createOrReplaceTempView("txdpp2_dim")
     def run() = spark.sql(
       """SELECT f.id, f.chars, d.flag FROM txdpp2.tbl f
@@ -93,12 +91,9 @@ class TxDppSpec extends SparkSpec {
         |WHERE d.flag <> 'keep'
         |ORDER BY f.id""".stripMargin)
     val withDpp = run().collect()
-    val old = spark.conf.get(
-      "spark.sql.optimizer.dynamicPartitionPruning.enabled", "true")
-    spark.conf.set(
-      "spark.sql.optimizer.dynamicPartitionPruning.enabled", "false")
-    val without = try run().collect() finally spark.conf.set(
-      "spark.sql.optimizer.dynamicPartitionPruning.enabled", old)
+    val without = withConf(
+      "spark.sql.optimizer.dynamicPartitionPruning.enabled" -> "false")(
+      run().collect())
     assert(withDpp.toSeq == without.toSeq)
     assert(withDpp.length == 200) // de + fr
   }
@@ -127,8 +122,7 @@ class TxDppSpec extends SparkSpec {
       TxTable.commit(slice, tbl, if (k == 0) "overwrite" else "append")
     }
     val wh = tbl.stripSuffix("/tbl")
-    spark.conf.set("spark.sql.catalog.txdfp", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.txdfp.root", wh)
+    TxCatalog.register(spark, "txdfp", wh)
     val dimDir = Files.createTempDirectory("txdfp-dim-").toString
     Seq((5L, "keep"), (2050L, "keep"), (7L, "drop"))
       .toDF("id", "flag").write.mode("overwrite").parquet(dimDir)
@@ -163,8 +157,7 @@ class TxDppSpec extends SparkSpec {
         bloomColumns = Seq("id"))
     }
     val wh = tbl.stripSuffix("/tbl")
-    spark.conf.set("spark.sql.catalog.txdfb", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.txdfb.root", wh)
+    TxCatalog.register(spark, "txdfb", wh)
     val dimDir = Files.createTempDirectory("txdfb-dim-").toString
     // both keep keys ≡ 0 (mod 3): only commit-0's file can hold them
     Seq((6L, "keep"), (33L, "keep"), (7L, "drop"))
@@ -207,8 +200,7 @@ class TxDppSpec extends SparkSpec {
         tbl, if (k == 0) "overwrite" else "append")
     }
     val wh = tbl.stripSuffix("/tbl")
-    spark.conf.set("spark.sql.catalog.txmet", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.txmet.root", wh)
+    TxCatalog.register(spark, "txmet", wh)
     val dimDir = Files.createTempDirectory("txmet-dim-").toString
     Seq((2010L, "keep")).toDF("id", "flag")
       .write.mode("overwrite").parquet(dimDir)
@@ -248,8 +240,7 @@ class TxDppSpec extends SparkSpec {
       (3L, "de", 30L)).toDF("id", "lang", "chars")
     TxTable.commit(fact, tbl, "overwrite", partitionBy = Some(Seq("lang")))
     val wh = tbl.stripSuffix("/tbl")
-    spark.conf.set("spark.sql.catalog.txdpp3", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.txdpp3.root", wh)
+    TxCatalog.register(spark, "txdpp3", wh)
     Seq(("en", 1)).toDF("lang", "w").createOrReplaceTempView("txdpp3_dim")
     val q = spark.sql(
       """SELECT f.id FROM txdpp3.tbl f

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.sources.TxTable
+import graft.sources.{TxCatalog, TxTable}
 
 /** Merge-on-read DELETE via deletion vectors: the `tx.deletionVectors`
   * table property routes DELETE to a tombstone-sidecar commit whose
@@ -200,8 +200,7 @@ class TxDvSpec extends SparkSpec {
 
   test("MoR UPDATE: tombstone + appended copies, files unchanged") {
     val wh = Files.createTempDirectory("txdv-upd-").toString
-    spark.conf.set("spark.sql.catalog.txdvu", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.txdvu.root", wh)
+    TxCatalog.register(spark, "txdvu", wh)
     spark.sql("CREATE TABLE txdvu.db.t (id BIGINT, n BIGINT) " +
       "TBLPROPERTIES ('tx.deletionVectors' = 'true')")
     spark.sql("INSERT INTO txdvu.db.t SELECT id, id * 10 " +
@@ -253,8 +252,7 @@ class TxDvSpec extends SparkSpec {
 
   test("MoR MERGE: only affected rows tombstone + stage; files carried") {
     val wh = Files.createTempDirectory("txdv-mrg-").toString
-    spark.conf.set("spark.sql.catalog.txdvm", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.txdvm.root", wh)
+    TxCatalog.register(spark, "txdvm", wh)
     spark.sql("CREATE TABLE txdvm.db.t (id BIGINT, n BIGINT) " +
       "TBLPROPERTIES ('tx.deletionVectors' = 'true')")
     spark.sql("INSERT INTO txdvm.db.t SELECT id, id * 10 " +
@@ -308,8 +306,7 @@ class TxDvSpec extends SparkSpec {
   test("SQL end-to-end: TBLPROPERTIES opt-in, DELETE is MoR, SELECT " +
       "applies tombstones, ALTER TABLE UNSET reverts to copy-on-write") {
     val wh = Files.createTempDirectory("txdv-sql-").toString
-    spark.conf.set("spark.sql.catalog.txdv", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.txdv.root", wh)
+    TxCatalog.register(spark, "txdv", wh)
     spark.sql("CREATE TABLE txdv.db.t (id BIGINT, n BIGINT) " +
       "TBLPROPERTIES ('tx.deletionVectors' = 'true')")
     spark.sql("INSERT INTO txdv.db.t SELECT id, id * 10 " +

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.sources.TxTable
+import graft.sources.{TxCatalog, TxTable}
 import org.apache.spark.sql.functions._
 
 /** Dynamic partition overwrite (commit mode `dynoverwrite`, Spark's
@@ -71,16 +71,14 @@ class TxDynOverwriteSpec extends SparkSpec {
   test("SQL INSERT OVERWRITE: dynamic under the conf, static truncates") {
     import spark.implicits._
     val wh = Files.createTempDirectory("txdyn-sql-").toString
-    spark.conf.set("spark.sql.catalog.txdo", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.txdo.root", wh)
+    TxCatalog.register(spark, "txdo", wh)
     mk(s"$wh/t")
     // table order is (id, n, lang) — partition columns last; INSERT
     // resolves by position
     Seq((9L, 90L, "en")).toDF("id", "n", "lang")
       .createOrReplaceTempView("txdo_src")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try spark.sql("INSERT OVERWRITE txdo.t SELECT * FROM txdo_src")
-    finally spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    withConf("spark.sql.sources.partitionOverwriteMode" -> "dynamic")(
+      spark.sql("INSERT OVERWRITE txdo.t SELECT * FROM txdo_src"))
     assert(TxTable.readManifest(Paths.get(s"$wh/t"), 2L).op
       == "dynoverwrite")
     assert(spark.sql("SELECT id FROM txdo.t ORDER BY id")

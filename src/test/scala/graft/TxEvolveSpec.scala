@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 
-import graft.sources.TxTable
+import graft.sources.{TxCatalog, TxTable}
 
 /** Metadata-only schema evolution (ALTER TABLE ADD/DROP COLUMN →
   * TxTable.evolveColumns): one `evolve` manifest version, no data
@@ -59,8 +59,7 @@ class TxEvolveSpec extends SparkSpec {
 
   test("SQL ALTER TABLE ADD/DROP COLUMN drives the same engine") {
     val wh = Files.createTempDirectory("txevolve-sql-").toString
-    spark.conf.set("spark.sql.catalog.txev", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.txev.root", wh)
+    TxCatalog.register(spark, "txev", wh)
     spark.sql("CREATE TABLE txev.db.t (id BIGINT, s STRING)")
     spark.sql("INSERT INTO txev.db.t VALUES (1, 'a'), (2, 'b')")
     spark.sql("ALTER TABLE txev.db.t ADD COLUMNS (score BIGINT)")
@@ -136,8 +135,7 @@ class TxEvolveSpec extends SparkSpec {
     // the SQL surface refuses positions, defaults, and type changes
     // (RENAME COLUMN is a supported arm now — TxRenameSpec)
     val wh = Files.createTempDirectory("txevolve-ref-").toString
-    spark.conf.set("spark.sql.catalog.txrf", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.txrf.root", wh)
+    TxCatalog.register(spark, "txrf", wh)
     spark.sql("CREATE TABLE txrf.db.t (id BIGINT, s STRING)")
     spark.sql("INSERT INTO txrf.db.t VALUES (1, 'a')")
     assert(intercept[Exception](spark.sql(

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-import graft.sources.{TxTable, TxStats}
+import graft.sources.{TxCatalog, TxStats, TxTable}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.EqualTo
 
@@ -155,8 +155,7 @@ class TxLogSpec extends SparkSpec {
     assert(TxTable.read(spark, tbl).count() == 28L)
     // the operator repair: one CALL restores bounded snapshot-load cost
     val wh = Files.createTempDirectory("txlog-wh-")
-    spark.conf.set("spark.sql.catalog.txlogck", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.txlogck.root", wh.toString)
+    TxCatalog.register(spark, "txlogck", wh.toString)
     Files.createDirectories(wh.resolve("db"))
     Files.createSymbolicLink(wh.resolve("db").resolve("t"),
       Paths.get(tbl)): Unit
@@ -337,12 +336,11 @@ class TxLogSpec extends SparkSpec {
     // proleptic literal conversion excludes() uses by several days — a
     // stat would wrongly prune; the footer's legacyDateTime marker
     // gates the stat off (value columns unaffected)
-    spark.conf.set("spark.sql.parquet.datetimeRebaseModeInWrite", "LEGACY")
-    try TxTable.commit(
+    withConf("spark.sql.parquet.datetimeRebaseModeInWrite" -> "LEGACY")(
+      TxTable.commit(
       Seq((1L, java.sql.Timestamp.valueOf("1000-01-05 00:00:00"),
         java.sql.Date.valueOf("1000-01-05"))).toDF("id", "ts", "d")
-        .coalesce(1), tbl, "overwrite")
-    finally spark.conf.unset("spark.sql.parquet.datetimeRebaseModeInWrite")
+        .coalesce(1), tbl, "overwrite"))
     val m = TxTable.readManifest(Paths.get(tbl), 1L)
     val cols = m.stats.values.flatMap(_.keySet).toSet
     assert(cols.contains("id"), s"integral stats must still record: $cols")

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.sources.{TxStats, TxTable}
+import graft.sources.{TxCatalog, TxStats, TxTable}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{EqualTo, IsNotNull, IsNull}
@@ -101,8 +101,7 @@ class TxNullStatsSpec extends SparkSpec {
     TxTable.commit(frame((1L, 10L)).coalesce(1), tbl, "overwrite")
     TxTable.commit(frame((2L, null)).coalesce(1), tbl, "append")
     val wh = tbl.stripSuffix("/tbl")
-    spark.conf.set("spark.sql.catalog.txns", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.txns.root", wh)
+    TxCatalog.register(spark, "txns", wh)
     val q = spark.sql("SELECT id FROM txns.tbl WHERE x IS NOT NULL")
     assert(q.collect().map(_.getLong(0)).toSeq == Seq(1L))
     assert(q.queryExecution.executedPlan.toString

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.sources.TxTable
+import graft.sources.{TxCatalog, TxTable}
 import org.apache.spark.sql.functions._
 
 /** Partition-column aggregates served from the MANIFEST (+ footer row
@@ -23,16 +23,12 @@ class TxPartAggSpec extends SparkSpec {
     wh
   }
 
-  private def withPush[T](body: => T): T = {
-    spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-    try body
-    finally spark.conf.unset("spark.sql.parquet.aggregatePushdown")
-  }
+  private def withPush[T](body: => T): T =
+    withConf("spark.sql.parquet.aggregatePushdown" -> "true")(body)
 
   test("MIN/MAX/COUNT on a partition column serve from metadata as a LocalScan") {
     val wh = mk("txpagg-")
-    spark.conf.set("spark.sql.catalog.tpa", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.tpa.root", wh)
+    TxCatalog.register(spark, "tpa", wh)
     withPush {
       val q = spark.sql(
         """SELECT count(*) AS n, count(lang) AS nl,
@@ -55,8 +51,7 @@ class TxPartAggSpec extends SparkSpec {
     TxTable.commit(
       Seq((1L, 2), (2L, 10), (3L, 9)).toDF("id", "bucket"),
       s"$wh/t", "overwrite", partitionBy = Some(Seq("bucket")))
-    spark.conf.set("spark.sql.catalog.tpai", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.tpai.root", wh)
+    TxCatalog.register(spark, "tpai", wh)
     withPush {
       val r = spark.sql(
         "SELECT min(bucket) AS lo, max(bucket) AS hi FROM tpai.t")
@@ -67,8 +62,7 @@ class TxPartAggSpec extends SparkSpec {
 
   test("declines: conf off, filters present, grouped, or data columns mixed in") {
     val wh = mk("txpagg-d-")
-    spark.conf.set("spark.sql.catalog.tpad", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.tpad.root", wh)
+    TxCatalog.register(spark, "tpad", wh)
     def planOf(sql: String): String = {
       val q = spark.sql(sql)
       q.collect(): Unit

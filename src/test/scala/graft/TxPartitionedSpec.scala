@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.{TxStats, TxTable}
+import graft.sources.{TxCatalog, TxStats, TxTable}
 
 /** Partition-column layout on the tx table: hive-style commit layout,
   * values recorded as min=max stats (partition pruning IS the skipping
@@ -91,8 +91,7 @@ class TxPartitionedSpec extends SparkSpec {
 
   test("SQL: CREATE PARTITIONED BY + INSERT inherit the layout and prune scans") {
     val wh = Files.createTempDirectory("txpart-sql-").toString
-    spark.conf.set("spark.sql.catalog.txpart", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.txpart.root", wh)
+    TxCatalog.register(spark, "txpart", wh)
     spark.sql("CREATE TABLE txpart.db.pt (id BIGINT, lang STRING, " +
       "n BIGINT) PARTITIONED BY (lang)")
     assert(TxTable.readManifest(Paths.get(s"$wh/db/pt"), 1L)
@@ -211,8 +210,7 @@ class TxPartitionedSpec extends SparkSpec {
 
   test("row-level DELETE and SQL UPDATE/MERGE rewrite partitioned tables correctly") {
     val wh = Files.createTempDirectory("txpart-rl-").toString
-    spark.conf.set("spark.sql.catalog.txprl", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.txprl.root", wh)
+    TxCatalog.register(spark, "txprl", wh)
     val tbl = s"$wh/db/rl"
     TxTable.commit(
       Seq((1L, "en", 5L), (2L, "de", 7L), (3L, "de", 9L), (4L, "fr", 2L))
@@ -342,8 +340,7 @@ class TxPartitionedSpec extends SparkSpec {
   test("the partitioned scan reports its size: small tables broadcast") {
     import spark.implicits._
     val wh = Files.createTempDirectory("txpart-stat-").toString
-    spark.conf.set("spark.sql.catalog.txpstat", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.txpstat.root", wh)
+    TxCatalog.register(spark, "txpstat", wh)
     spark.sql("CREATE TABLE txpstat.db.dim (id BIGINT, lang STRING) " +
       "PARTITIONED BY (lang)")
     spark.sql("INSERT INTO txpstat.db.dim VALUES (1, 'en'), (2, 'de')")

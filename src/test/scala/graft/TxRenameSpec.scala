@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.sources.TxTable
+import graft.sources.{TxCatalog, TxTable}
 import org.apache.spark.sql.functions._
 
 /** ALTER TABLE RENAME COLUMN through the column mapping
@@ -134,8 +134,7 @@ class TxRenameSpec extends SparkSpec {
 
   test("SQL: ALTER TABLE RENAME COLUMN; reads, predicates, UPDATE, MoR DELETE, compaction") {
     val wh = Files.createTempDirectory("txrename-sql-").toString
-    spark.conf.set("spark.sql.catalog.txrn", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.txrn.root", wh)
+    TxCatalog.register(spark, "txrn", wh)
     spark.sql("CREATE TABLE txrn.db.t (id BIGINT, n BIGINT) " +
       "TBLPROPERTIES ('tx.deletionVectors' = 'true')")
     spark.sql("INSERT INTO txrn.db.t SELECT id, id * 10 FROM range(1, 6)")
@@ -181,13 +180,11 @@ class TxRenameSpec extends SparkSpec {
   test("aggregate pushdown declines on a renamed column but COUNT(*) still pushes") {
     import spark.implicits._
     val wh = Files.createTempDirectory("txrename-agg-").toString
-    spark.conf.set("spark.sql.catalog.txra", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.txra.root", wh)
+    TxCatalog.register(spark, "txra", wh)
     TxTable.commit(Seq((1L, 10L), (2L, 20L)).toDF("id", "n"),
       s"$wh/db/t", "overwrite")
     TxTable.renameColumn(spark, s"$wh/db/t", "n", "amount"): Unit
-    spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-    try {
+    withConf("spark.sql.parquet.aggregatePushdown" -> "true") {
       val c = spark.sql("SELECT count(*) FROM txra.db.t")
       assert(c.queryExecution.executedPlan.toString
         .contains("PushedAggregation: [COUNT"))
@@ -202,7 +199,6 @@ class TxRenameSpec extends SparkSpec {
       assert(i.queryExecution.executedPlan.toString
         .contains("PushedAggregation: [COUNT"))
       assert(i.head().getLong(1) == 1L)
-    } finally
-      spark.conf.set("spark.sql.parquet.aggregatePushdown", "false")
+    }
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.sources.TxTable
+import graft.sources.{TxCatalog, TxTable}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{EqualTo, GreaterThan}
 
@@ -78,8 +78,7 @@ class TxReplaceWhereSpec extends SparkSpec {
   test("SQL: INSERT OVERWRITE with a static PARTITION spec scopes to it") {
     import spark.implicits._
     val wh = Files.createTempDirectory("txrw-sql-").toString
-    spark.conf.set("spark.sql.catalog.txrw", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.txrw.root", wh)
+    TxCatalog.register(spark, "txrw", wh)
     val df = Seq((1L, 10L, "en"), (2L, 20L, "de"), (3L, 30L, "fr"))
       .toDF("id", "n", "lang")
     TxTable.commit(df, s"$wh/t", "overwrite",
@@ -98,8 +97,7 @@ class TxReplaceWhereSpec extends SparkSpec {
   test("DataFrameWriterV2 overwrite(condition) routes through replaceWhere") {
     import spark.implicits._
     val wh = Files.createTempDirectory("txrw-w2-").toString
-    spark.conf.set("spark.sql.catalog.txrw2", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.txrw2.root", wh)
+    TxCatalog.register(spark, "txrw2", wh)
     TxTable.commit(
       Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "s"), s"$wh/t",
       "overwrite")

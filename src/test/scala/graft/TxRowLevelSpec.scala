@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.sources.TxTable
+import graft.sources.{TxCatalog, TxTable}
 
 /** SQL `UPDATE` / `MERGE INTO` on the tx catalog (TxRowLevel): the
   * stats-pruned copy-on-write contract, the version-free no-op paths,
@@ -12,8 +12,7 @@ class TxRowLevelSpec extends SparkSpec {
 
   private lazy val warehouse: String = {
     val wh = Files.createTempDirectory("txrl-spec-").toString
-    spark.conf.set("spark.sql.catalog.txrl", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.txrl.root", wh)
+    TxCatalog.register(spark, "txrl", wh)
     wh
   }
 

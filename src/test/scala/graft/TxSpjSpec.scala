@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.sources.TxTable
+import graft.sources.{TxCatalog, TxTable}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -34,18 +34,11 @@ class TxSpjSpec extends SparkSpec {
     }) ++ kids.flatMap(shuffles)
   }
 
-  private def withSpj[T](body: => T): T = {
-    val pairs = Seq(
+  private def withSpj[T](extra: (String, String)*)(body: => T): T =
+    withConf(Seq(
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.enabled" -> "false")
-    val olds = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally olds.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+      "spark.sql.adaptive.enabled" -> "false") ++ extra: _*)(body)
 
   private def mkTables(): (String, String) = {
     import spark.implicits._
@@ -64,11 +57,9 @@ class TxSpjSpec extends SparkSpec {
 
   test("co-partitioned tx-tx join runs with ZERO shuffles") {
     val (a, b) = mkTables()
-    spark.conf.set("spark.sql.catalog.spja", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.spja.root", a.stripSuffix("/tbl"))
-    spark.conf.set("spark.sql.catalog.spjb", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.spjb.root", b.stripSuffix("/tbl"))
-    withSpj {
+    TxCatalog.register(spark, "spja", a.stripSuffix("/tbl"))
+    TxCatalog.register(spark, "spjb", b.stripSuffix("/tbl"))
+    withSpj() {
       val q = spark.sql(
         """SELECT f.lang, count(*) AS n, sum(f.chars * d.weight) AS wsum
           |FROM spja.tbl f JOIN spjb.tbl d ON f.lang = d.lang
@@ -85,17 +76,15 @@ class TxSpjSpec extends SparkSpec {
 
   test("SPJ result equals the shuffle plan's result") {
     val (a, b) = mkTables()
-    spark.conf.set("spark.sql.catalog.spjc", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.spjc.root", a.stripSuffix("/tbl"))
-    spark.conf.set("spark.sql.catalog.spjd", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.spjd.root", b.stripSuffix("/tbl"))
+    TxCatalog.register(spark, "spjc", a.stripSuffix("/tbl"))
+    TxCatalog.register(spark, "spjd", b.stripSuffix("/tbl"))
     def run(): Seq[(Long, String, Double)] = spark.sql(
       """SELECT f.id, f.lang, d.weight
         |FROM spjc.tbl f JOIN spjd.tbl d ON f.lang = d.lang
         |ORDER BY f.id, d.weight""".stripMargin)
       .collect().map(r =>
         (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq
-    val spj = withSpj(run())
+    val spj = withSpj()(run())
     val classic = run() // default confs: broadcast/shuffle path
     assert(spj == classic)
     assert(spj.size == 1500)
@@ -107,9 +96,8 @@ class TxSpjSpec extends SparkSpec {
     val df = (1 to 200).map(i =>
       (i.toLong, Seq("en", "de")(i % 2), i.toLong)).toDF("id", "lang", "n")
     TxTable.commit(df, t, "overwrite", partitionBy = Some(Seq("lang")))
-    spark.conf.set("spark.sql.catalog.spjg", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.spjg.root", t.stripSuffix("/tbl"))
-    withSpj {
+    TxCatalog.register(spark, "spjg", t.stripSuffix("/tbl"))
+    withSpj() {
       val q = spark.sql(
         "SELECT lang, sum(n) AS s FROM spjg.tbl GROUP BY lang")
       val rows = q.collect().map(r => (r.getString(0), r.getLong(1)))
@@ -138,15 +126,12 @@ class TxSpjSpec extends SparkSpec {
       a, "overwrite", partitionBy = Some(Seq("idb")))
     TxTable.commit(bucketed((1 to 400 by 4).map(i => (i.toLong, i * 3L))),
       b, "overwrite", partitionBy = Some(Seq("idb")))
-    spark.conf.set("spark.sql.catalog.spjk", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.spjk.root", a.stripSuffix("/tbl"))
-    spark.conf.set("spark.sql.catalog.spjl", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.spjl.root", b.stripSuffix("/tbl"))
+    TxCatalog.register(spark, "spjk", a.stripSuffix("/tbl"))
+    TxCatalog.register(spark, "spjl", b.stripSuffix("/tbl"))
     // partition keys (idb) are a strict SUBSET of the join keys
     // (idb, id): co-partition on the subset is sound (equal idb ⇒ same
     // group) but gated behind Spark's requireAllClusterKeysForCoPartition
-    spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-    try withSpj {
+    withSpj("spark.sql.requireAllClusterKeysForCoPartition" -> "false") {
       val q = spark.sql(
         """SELECT f.id, f.v, d.v AS dv FROM spjk.tbl f
           |JOIN spjl.tbl d ON f.idb = d.idb AND f.id = d.id""".stripMargin)
@@ -157,8 +142,7 @@ class TxSpjSpec extends SparkSpec {
       assert(shuffles(q.queryExecution.executedPlan).isEmpty,
         "expected a shuffle-free bucket-co-partitioned join, got:\n" +
           q.queryExecution.executedPlan)
-    } finally spark.conf.unset(
-      "spark.sql.requireAllClusterKeysForCoPartition")
+    }
   }
 
   test("mismatched partition sets still join shuffle-free (pushPartValues)") {
@@ -175,13 +159,10 @@ class TxSpjSpec extends SparkSpec {
     TxTable.commit(
       Seq(("en", 1L), ("de", 2L)).toDF("lang", "w"),
       b, "overwrite", partitionBy = Some(Seq("lang")))
-    spark.conf.set("spark.sql.catalog.spjm", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.spjm.root", a.stripSuffix("/tbl"))
-    spark.conf.set("spark.sql.catalog.spjn", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.spjn.root", b.stripSuffix("/tbl"))
-    spark.conf.set(
-      "spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-    try withSpj {
+    TxCatalog.register(spark, "spjm", a.stripSuffix("/tbl"))
+    TxCatalog.register(spark, "spjn", b.stripSuffix("/tbl"))
+    withSpj(
+        "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true") {
       val q = spark.sql(
         """SELECT f.id, d.w FROM spjm.tbl f
           |JOIN spjn.tbl d ON f.lang = d.lang""".stripMargin)
@@ -192,8 +173,7 @@ class TxSpjSpec extends SparkSpec {
       assert(shuffles(q.queryExecution.executedPlan).isEmpty,
         "expected a shuffle-free join across mismatched partition " +
           "sets, got:\n" + q.queryExecution.executedPlan)
-    } finally spark.conf.unset(
-      "spark.sql.sources.v2.bucketing.pushPartValues.enabled")
+    }
   }
 
   test("a scan that prunes the partition column away reports unknown partitioning") {
@@ -202,9 +182,8 @@ class TxSpjSpec extends SparkSpec {
     val df = (1 to 50).map(i => (i.toLong, Seq("en", "de")(i % 2)))
       .toDF("id", "lang")
     TxTable.commit(df, t, "overwrite", partitionBy = Some(Seq("lang")))
-    spark.conf.set("spark.sql.catalog.spju", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.spju.root", t.stripSuffix("/tbl"))
-    withSpj {
+    TxCatalog.register(spark, "spju", t.stripSuffix("/tbl"))
+    withSpj() {
       // no lang in the projection: the key expressions could not
       // resolve — the scan must fall back rather than lie
       assert(spark.sql("SELECT id FROM spju.tbl WHERE id <= 3")

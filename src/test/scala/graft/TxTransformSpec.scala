@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.sources.{TxTable, TxTransforms}
+import graft.sources.{TxCatalog, TxTable, TxTransforms}
 import org.apache.spark.sql.functions._
 
 /** Hidden partitioning (TxTransforms scaladoc): bucket/days/truncate
@@ -18,8 +18,7 @@ class TxTransformSpec extends SparkSpec {
 
   private val warehouse: String = {
     val wh = Files.createTempDirectory("graft-txtr-wh-").toString
-    spark.conf.set("spark.sql.catalog.txtr", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.txtr.root", wh)
+    TxCatalog.register(spark, "txtr", wh)
     Files.createDirectories(Paths.get(s"$wh/db"))
     wh
   }
@@ -266,14 +265,10 @@ class TxTransformSpec extends SparkSpec {
         : Unit
     }
     link("bja", a); link("bjb", b)
-    val confs = Seq(
-      "spark.sql.sources.v2.bucketing.enabled" -> "true",
-      "spark.sql.requireAllClusterKeysForCoPartition" -> "false",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.map { case (k, _) =>
-      k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    withConf(
+        "spark.sql.sources.v2.bucketing.enabled" -> "true",
+        "spark.sql.requireAllClusterKeysForCoPartition" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val q = spark.sql(
         """SELECT a.id, a.x, b.y FROM txtr.db.bja a
           |JOIN txtr.db.bjb b ON a.id = b.id""".stripMargin)
@@ -281,9 +276,6 @@ class TxTransformSpec extends SparkSpec {
       val plan = q.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"),
         s"co-bucketed SPJ must be exchange-free:\n${plan.take(1200)}")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.sources.{TxStats, TxTable}
+import graft.sources.{TxCatalog, TxStats, TxTable}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.EqualTo
 import org.apache.spark.sql.types._
@@ -108,8 +108,7 @@ class TxWidenSpec extends SparkSpec {
   test("SQL: ALTER TABLE ... ALTER COLUMN TYPE widens through the catalog") {
     import spark.implicits._
     val wh = Files.createTempDirectory("txwiden-cat-").toString
-    spark.conf.set("spark.sql.catalog.txw", "graft.sources.TxCatalog")
-    spark.conf.set("spark.sql.catalog.txw.root", wh)
+    TxCatalog.register(spark, "txw", wh)
     TxTable.commit(Seq((7, "a")).toDF("n", "s"), s"$wh/t", "overwrite")
     spark.sql("ALTER TABLE txw.t ALTER COLUMN n TYPE BIGINT")
     val m = TxTable.readManifest(Paths.get(s"$wh/t"), 2L)

@@ -185,24 +185,21 @@ private[graft] object EntryHelpers {
       .select(col("doc_id"), col("lang"), col("n_chars"))
 
   /** The seed of the SQL-warehouse fixtures: [[langDocs]] committed to
-    * `tbl` one language per commit — the first overwrites, the middle
-    * ones append, the last uses `lastMode` — so every data file's
-    * manifest stats carry min=max=lang and a `lang` predicate provably
-    * touches only that language's files. `properties` and `partitionBy`
-    * go on the first commit (later commits inherit them). Returns the
-    * projected documents for the fixture's own follow-up slices. */
+    * `tbl` one language per commit — the first overwrites, the rest
+    * append — so every data file's manifest stats carry min=max=lang
+    * and a `lang` predicate provably touches only that language's
+    * files. `properties` and `partitionBy` go on the first commit
+    * (later commits inherit them). Returns the projected documents for
+    * the fixture's own follow-up slices. */
   def langSplitTable(s: SparkSession, dir: String, tbl: String,
                      langs: Seq[String] = Seq("en", "de", "fr"),
                      properties: Map[String, String] = Map.empty,
-                     partitionBy: Option[Seq[String]] = None,
-                     lastMode: String = "append"): DataFrame = {
+                     partitionBy: Option[Seq[String]] = None): DataFrame = {
     val docs = langDocs(s, dir)
     langs.zipWithIndex.foreach { case (l, i) =>
       val first = i == 0
       TxTable.commit(docs.filter(col("lang") === l), tbl,
-        if (first) "overwrite"
-        else if (i == langs.size - 1) lastMode
-        else "append",
+        if (first) "overwrite" else "append",
         properties = if (first) properties else Map.empty,
         partitionBy = if (first) partitionBy else None): Unit
     }
@@ -246,7 +243,9 @@ private[graft] object EntryHelpers {
             "JVM still hits this JVM-global binding)")
       val wh = Fixture.once("txcatalog", dir) {
         val wh = scratchDir("graft-txcat-")
-        langSplitTable(s, dir, s"$wh/db/t", lastMode = "overwrite"): Unit
+        val tbl = s"$wh/db/t"
+        val docs = langSplitTable(s, dir, tbl, langs = Seq("en", "de"))
+        TxTable.commit(docs.filter(col("lang") === "fr"), tbl, "overwrite"): Unit
         wh
       }
       TxCatalogBinding.dir = dir

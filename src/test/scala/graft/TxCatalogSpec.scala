@@ -79,27 +79,25 @@ class TxCatalogSpec extends SparkSpec {
 
   test("whole-table COUNT/MIN/MAX answer from parquet footers") {
     warehouse
-    withConf("spark.sql.parquet.aggregatePushdown" -> "true") {
-      val df = spark.sql("SELECT count(*), min(id), max(id) FROM txspec.db.t")
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("PushedAggregation: [COUNT"),
-        s"expected a pushed aggregation in:\n$plan")
-      val r = df.head() // v3 head snapshot: the single (3, "c", 30.0) row
-      assert((r.getLong(0), r.getLong(1), r.getLong(2)) == (1L, 3L, 3L))
-      // time travel composes: v1 holds ids 1, 2
-      val tt = spark.sql(
-        "SELECT count(*), max(id) FROM txspec.db.t VERSION AS OF 1")
-      assert(tt.queryExecution.executedPlan.toString
-        .contains("PushedAggregation: [COUNT"))
-      assert((tt.head().getLong(0), tt.head().getLong(1)) == (2L, 2L))
-      // a FILTERED aggregate must NOT push (our filters are residual by
-      // contract — a footer count cannot apply them)
-      val f = spark.sql(
-        "SELECT count(*) FROM txspec.db.t VERSION AS OF 1 WHERE id > 1")
-      assert(!f.queryExecution.executedPlan.toString
-        .contains("PushedAggregation: [COUNT"))
-      assert(f.head().getLong(0) == 1L)
-    }
+    val df = spark.sql("SELECT count(*), min(id), max(id) FROM txspec.db.t")
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("PushedAggregation: [COUNT"),
+      s"expected a pushed aggregation in:\n$plan")
+    val r = df.head() // v3 head snapshot: the single (3, "c", 30.0) row
+    assert((r.getLong(0), r.getLong(1), r.getLong(2)) == (1L, 3L, 3L))
+    // time travel composes: v1 holds ids 1, 2
+    val tt = spark.sql(
+      "SELECT count(*), max(id) FROM txspec.db.t VERSION AS OF 1")
+    assert(tt.queryExecution.executedPlan.toString
+      .contains("PushedAggregation: [COUNT"))
+    assert((tt.head().getLong(0), tt.head().getLong(1)) == (2L, 2L))
+    // a FILTERED aggregate must NOT push (our filters are residual by
+    // contract — a footer count cannot apply them)
+    val f = spark.sql(
+      "SELECT count(*) FROM txspec.db.t VERSION AS OF 1 WHERE id > 1")
+    assert(!f.queryExecution.executedPlan.toString
+      .contains("PushedAggregation: [COUNT"))
+    assert(f.head().getLong(0) == 1L)
   }
 
   test("PARTITIONED tables push global data-column aggregates to footers") {
@@ -113,30 +111,28 @@ class TxCatalogSpec extends SparkSpec {
     graft.sources.TxTable.commit(
       Seq((4L, "c", 40L)).toDF("id", "grp", "n"),
       s"$wh/db/p", "append")
-    withConf("spark.sql.parquet.aggregatePushdown" -> "true") {
-      // global COUNT/MIN/MAX over DATA columns: one delegated footer
-      // builder over every file's data schema — grouping is irrelevant
-      val df = spark.sql(
-        "SELECT count(*), min(id), max(n) FROM txap.db.p")
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("PushedAggregation: [COUNT"),
-        s"expected a pushed aggregation in:\n$plan")
-      val r = df.head()
-      assert((r.getLong(0), r.getLong(1), r.getLong(2)) == (4L, 1L, 40L))
-      // an aggregate touching the PARTITION column cannot answer from
-      // file bytes — falls back to the scan, same (correct) answer
-      val p = spark.sql("SELECT count(*), max(grp) FROM txap.db.p")
-      assert(!p.queryExecution.executedPlan.toString
-        .contains("PushedAggregation"))
-      assert((p.head().getLong(0), p.head().getString(1)) == (4L, "c"))
-      // grouped aggregates fall back too
-      val g = spark.sql(
-        "SELECT grp, count(*) AS c FROM txap.db.p GROUP BY grp")
-      assert(!g.queryExecution.executedPlan.toString
-        .contains("PushedAggregation"))
-      assert(g.collect().map(x => (x.getString(0), x.getLong(1))).toMap ==
-        Map("a" -> 2L, "b" -> 1L, "c" -> 1L))
-    }
+    // global COUNT/MIN/MAX over DATA columns: one delegated footer
+    // builder over every file's data schema — grouping is irrelevant
+    val df = spark.sql(
+      "SELECT count(*), min(id), max(n) FROM txap.db.p")
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("PushedAggregation: [COUNT"),
+      s"expected a pushed aggregation in:\n$plan")
+    val r = df.head()
+    assert((r.getLong(0), r.getLong(1), r.getLong(2)) == (4L, 1L, 40L))
+    // an aggregate touching the PARTITION column cannot answer from
+    // file bytes — falls back to the scan, same (correct) answer
+    val p = spark.sql("SELECT count(*), max(grp) FROM txap.db.p")
+    assert(!p.queryExecution.executedPlan.toString
+      .contains("PushedAggregation"))
+    assert((p.head().getLong(0), p.head().getString(1)) == (4L, "c"))
+    // grouped aggregates fall back too
+    val g = spark.sql(
+      "SELECT grp, count(*) AS c FROM txap.db.p GROUP BY grp")
+    assert(!g.queryExecution.executedPlan.toString
+      .contains("PushedAggregation"))
+    assert(g.collect().map(x => (x.getString(0), x.getLong(1))).toMap ==
+      Map("a" -> 2L, "b" -> 1L, "c" -> 1L))
   }
 
   test("a DV-bearing snapshot refuses the plain scan when DvReadRule is absent") {

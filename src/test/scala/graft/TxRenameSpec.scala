@@ -184,21 +184,19 @@ class TxRenameSpec extends SparkSpec {
     TxTable.commit(Seq((1L, 10L), (2L, 20L)).toDF("id", "n"),
       s"$wh/db/t", "overwrite")
     TxTable.renameColumn(spark, s"$wh/db/t", "n", "amount"): Unit
-    withConf("spark.sql.parquet.aggregatePushdown" -> "true") {
-      val c = spark.sql("SELECT count(*) FROM txra.db.t")
-      assert(c.queryExecution.executedPlan.toString
-        .contains("PushedAggregation: [COUNT"))
-      assert(c.head().getLong(0) == 2L)
-      // min over the renamed column: declined, not wrong
-      val m = spark.sql("SELECT min(amount) FROM txra.db.t")
-      assert(!m.queryExecution.executedPlan.toString
-        .contains("PushedAggregation: [MIN"))
-      assert(m.head().getLong(0) == 10L)
-      // min over a never-renamed column still pushes
-      val i = spark.sql("SELECT count(*), min(id) FROM txra.db.t")
-      assert(i.queryExecution.executedPlan.toString
-        .contains("PushedAggregation: [COUNT"))
-      assert(i.head().getLong(1) == 1L)
-    }
+    val c = spark.sql("SELECT count(*) FROM txra.db.t")
+    assert(c.queryExecution.executedPlan.toString
+      .contains("PushedAggregation: [COUNT"))
+    assert(c.head().getLong(0) == 2L)
+    // min over the renamed column: declined, not wrong
+    val m = spark.sql("SELECT min(amount) FROM txra.db.t")
+    assert(!m.queryExecution.executedPlan.toString
+      .contains("PushedAggregation: [MIN"))
+    assert(m.head().getLong(0) == 10L)
+    // min over a never-renamed column still pushes
+    val i = spark.sql("SELECT count(*), min(id) FROM txra.db.t")
+    assert(i.queryExecution.executedPlan.toString
+      .contains("PushedAggregation: [COUNT"))
+    assert(i.head().getLong(1) == 1L)
   }
 }

@@ -2,15 +2,12 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // Optional comma-separated subset filter for local iteration.
+    val only = SparkEntry.only("bench")
     val spark = GraftSession.start(GraftSession.envCores)
     GraftSession.warmup(spark, sfDir)
-    // Optional comma-separated subset filter for local iteration.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach(_.diff(SparkEntry.queries.keySet).foreach(n =>
-      System.err.println(s"[bench] WARNING: unknown query '$n' in SPARK_GRAFT_ONLY")))
     val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
+      case Some(names) => SparkEntry.queries.filter(kv => names.contains(kv._1))
       case None        => SparkEntry.queries
     }
     // Contention sentinel: the same trivial query timed immediately

@@ -26,8 +26,7 @@ object PerfProbe {
     val tag = sys.env.getOrElse("SPARK_GRAFT_PROBE_TAG", "r21")
     val reps = sys.env.getOrElse("SPARK_GRAFT_PROBE_REPS", "3").toInt
     val phase = sys.env.getOrElse("SPARK_GRAFT_PROBE_PHASE", "before")
-    val names = sys.env.getOrElse("SPARK_GRAFT_ONLY", "")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val names = SparkEntry.only("probe").getOrElse(Seq.empty)
     // experimental conf overrides: SPARK_GRAFT_PROBE_CONF="k=v;k=v"
     val extraConf = sys.env.getOrElse("SPARK_GRAFT_PROBE_CONF", "")
       .split(";").map(_.trim).filter(_.contains("="))
@@ -73,44 +72,41 @@ object PerfProbe {
     java.nio.file.Files.createDirectories(planDir): Unit
 
     names.foreach { name =>
-      SparkEntry.queries.get(name) match {
-        case None => System.err.println(s"[probe] unknown query '$name'")
-        case Some(fn) =>
-          // plan artifact (fresh DF so session-memoized fixtures warm here);
-          // the FIRST fn() call is timed separately — it pays any eager
-          // fixture construction (tx-table writes, streaming drains) that
-          // the bench times inside the query but a warm rep does not
-          val tBuild0 = System.nanoTime()
-          val df0 = try Some(fn(spark, sfDir)) catch { case e: Throwable =>
-            System.err.println(s"[probe] $name build FAILED: $e"); None }
-          println(f"[probe] $name build ${(System.nanoTime() - tBuild0) / 1e9}%.3f s (first fn() call)")
-          val planTxt =
-            try df0.map(_.queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode))
-              .getOrElse("build failed")
-            catch { case e: Throwable => s"explain failed: $e" }
-          java.nio.file.Files.write(
-            planDir.resolve(s"${name}_$phase.txt"),
-            planTxt.getBytes("UTF-8")): Unit
-          graft.ext.Dedup.unpersistAll()
-          val times = (1 to reps).map { i =>
-            jobs.synchronized(jobs.clear())
-            val t0 = System.nanoTime()
-            try { fn(spark, sfDir).count(): Unit }
-            catch { case e: Throwable =>
-              System.err.println(s"[probe] $name FAILED: $e") }
-            val sec = (System.nanoTime() - t0) / 1e9
-            val snap = jobs.synchronized(jobs.values.toSeq)
-            println(f"[probe] $name rep$i $sec%.3f s  jobs=${snap.size}")
-            if (i == reps) snap.foreach { j =>
-              val dur = if (j.end > 0) j.end - j.start else -1
-              println(f"[probe]   job ${j.id}%4d ${dur}%6d ms stages=${j.stages}%3d taskMs=${j.taskMs}%7d  ${j.desc.take(90)}")
-            }
-            graft.ext.Dedup.unpersistAll()
-            sec
-          }
-          println(f"[probe] $name MIN ${times.min}%.3f s over $reps reps")
+      val fn = SparkEntry.queries(name)
+      // plan artifact (fresh DF so session-memoized fixtures warm here);
+      // the FIRST fn() call is timed separately — it pays any eager
+      // fixture construction (tx-table writes, streaming drains) that
+      // the bench times inside the query but a warm rep does not
+      val tBuild0 = System.nanoTime()
+      val df0 = try Some(fn(spark, sfDir)) catch { case e: Throwable =>
+        System.err.println(s"[probe] $name build FAILED: $e"); None }
+      println(f"[probe] $name build ${(System.nanoTime() - tBuild0) / 1e9}%.3f s (first fn() call)")
+      val planTxt =
+        try df0.map(_.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode))
+          .getOrElse("build failed")
+        catch { case e: Throwable => s"explain failed: $e" }
+      java.nio.file.Files.write(
+        planDir.resolve(s"${name}_$phase.txt"),
+        planTxt.getBytes("UTF-8")): Unit
+      graft.ext.Dedup.unpersistAll()
+      val times = (1 to reps).map { i =>
+        jobs.synchronized(jobs.clear())
+        val t0 = System.nanoTime()
+        try { fn(spark, sfDir).count(): Unit }
+        catch { case e: Throwable =>
+          System.err.println(s"[probe] $name FAILED: $e") }
+        val sec = (System.nanoTime() - t0) / 1e9
+        val snap = jobs.synchronized(jobs.values.toSeq)
+        println(f"[probe] $name rep$i $sec%.3f s  jobs=${snap.size}")
+        if (i == reps) snap.foreach { j =>
+          val dur = if (j.end > 0) j.end - j.start else -1
+          println(f"[probe]   job ${j.id}%4d ${dur}%6d ms stages=${j.stages}%3d taskMs=${j.taskMs}%7d  ${j.desc.take(90)}")
+        }
+        graft.ext.Dedup.unpersistAll()
+        sec
       }
+      println(f"[probe] $name MIN ${times.min}%.3f s over $reps reps")
     }
     spark.stop()
   }

@@ -214,13 +214,13 @@ private[graft] object QueriesSearchOps {
       TextStats.lmScore(Tables.documents(s, dir), "doc_id", "text")
         .orderBy("doc_id")),
     // ----- the ROUTED arm forced over the cap (r19 —
-    // TextStats.lmScoreAuto scaladoc): maxVocab=1 makes every corpus
+    // TextStats.lmScore scaladoc): maxVocab=1 makes every corpus
     // exceed the broadcast budget, so the count-table lookups run as
     // plain shuffle joins — and the integer arithmetic answers the
     // IDENTICAL oracle as text_lmscore, certifying that at 100× the
     // query switches plans instead of refusing -----
     "text_lmscore_big" -> ((s: SparkSession, dir: String) =>
-      TextStats.lmScoreAuto(Tables.documents(s, dir), "doc_id", "text",
+      TextStats.lmScore(Tables.documents(s, dir), "doc_id", "text",
           maxVocab = 1L)
         .orderBy("doc_id")),
     // ----- winnowing fingerprints (TextStats.winnowFingerprints

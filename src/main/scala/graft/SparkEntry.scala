@@ -51,4 +51,20 @@ object SparkEntry {
     QueriesCore.oracles ++ QueriesDedupSim.oracles ++
       QueriesTextSampling.oracles ++ QueriesEventsStreaming.oracles ++
       QueriesJoinsOlap.oracles ++ QueriesSearchOps.oracles
+
+  /** The `SPARK_GRAFT_ONLY=q1,q2` subset a main runs, in written order
+    * with names trimmed; None when the variable is unset. An unknown name
+    * ends the program with one stderr line and exit status 2, before it
+    * starts a Spark session, instead of silently running a smaller set. */
+  def only(main: String): Option[Seq[String]] =
+    sys.env.get("SPARK_GRAFT_ONLY").map { v =>
+      val names = v.split(",").map(_.trim).filter(_.nonEmpty).toSeq.distinct
+      val unknown = names.filterNot(queries.contains)
+      if (unknown.nonEmpty) {
+        System.err.println(s"[$main] unknown query in SPARK_GRAFT_ONLY: " +
+          unknown.mkString(", "))
+        sys.exit(2)
+      }
+      names
+    }
 }

@@ -5,17 +5,13 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = GraftSession.start(GraftSession.envCores)
-    new java.io.File(outDir).mkdirs()
     // optional subset for local iteration (same contract as Bench):
     // SPARK_GRAFT_ONLY=q1,q2 dumps and declares only those queries
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val only = SparkEntry.only("verify")
+    val spark = GraftSession.start(GraftSession.envCores)
+    new java.io.File(outDir).mkdirs()
     val selected = only match {
-      case Some(names) =>
-        names.diff(SparkEntry.queries.keySet)
-          .foreach(n => System.err.println(s"[verify] unknown query: $n"))
-        SparkEntry.queries.view.filterKeys(names).toMap
+      case Some(names) => SparkEntry.queries.view.filterKeys(names.toSet).toMap
       case None => SparkEntry.queries
     }
     selected.foreach { case (name, fn) =>

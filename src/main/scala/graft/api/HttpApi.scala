@@ -26,9 +26,10 @@ import java.net.InetSocketAddress
   * The server itself is intentionally thin: every decision (validation,
   * budgets, typed errors, job cancellation) lives in [[QueryService]],
   * which is what the engine-level tests certify — this class only moves
-  * bytes. Handlers run on a daemon cached pool, one thread per in-flight
-  * request, each of which spends its life blocked on the service call —
-  * the same threading shape as the reference's `asyncio.to_thread`.
+  * bytes. Handlers run on a daemon cached pool, and each request runs
+  * whole on its handler thread — compiler, catalog and Spark actions;
+  * deadlines only cancel its tagged jobs from [[graft.exec.Executor]]'s
+  * one shared reaper — the shape of the reference's `asyncio.to_thread`.
   */
 final class HttpApi(service: QueryService, port: Int = 0) {
 

@@ -98,34 +98,25 @@ final class QueryService(spark: SparkSession, catalog: Catalog) {
     if (req.timeoutSec < 5 || req.timeoutSec > 60)
       return Left(QueryError("timeout must be in [5, 60] seconds", "HTTP_ERROR", 422, None))
     try {
-      // Stage 1: generation gets ≤ 70% of the budget (app_server.py:221).
-      // The compiler runs as an interruptible FutureTask: on timeout it is
-      // cancel(true)'d so the thread is interrupted rather than abandoned —
-      // a plain Future would keep running (and keep a pool thread pinned)
-      // long after the client got its 408.
+      // Stage 1: generation gets ≤ 70% of the budget (app_server.py:221),
+      // checked when the inline compiler returns: a CPU-bound compiler
+      // polls no interrupt, so another thread could only abandon it. Its
+      // input bounds its time (HttpApi's 1 MiB body cap, NlCompiler's
+      // digit-run cap).
       val genBudget = req.timeoutSec * 0.7
       val genStart = System.nanoTime()
-      val genTask = new java.util.concurrent.FutureTask[QuerySpec](() => gen())
-      Executor.blockingEc.execute(genTask)
-      val spec =
-        try genTask.get((genBudget * 1000).toLong,
-          java.util.concurrent.TimeUnit.MILLISECONDS)
-        catch {
-          case _: java.util.concurrent.TimeoutException =>
-            genTask.cancel(true) // interrupt the abandoned compiler thread
-            throw new GenTimeout(
-              f"Query generation timed out after $genBudget%.1f seconds")
-          case e: java.util.concurrent.ExecutionException =>
-            throw e.getCause // surface the compiler's own error unchanged
-        }
+      val spec = gen()
       val genSec = secs(genStart)
+      if (genSec > genBudget)
+        throw new GenTimeout(
+          f"Query generation timed out after $genBudget%.1f seconds")
 
       // Stage 2: DB phase gets the remainder − 1 s buffer, floor 2 s
-      // (app_server.py:229-232). The phase runs under Executor's shared
-      // tag + flag + delayed-reaper harness so a timeout CANCELS the
-      // underlying Spark jobs — including one submitted in the narrow race
-      // between the timeout and the first cancel — rather than leaving a
-      // zombie scan/collect burning executors after the client's 408.
+      // (app_server.py:229-232). The phase runs under Executor's
+      // tag + flag + repeating-reaper harness on this thread, so a timeout
+      // CANCELS the underlying Spark jobs (the nested count's too) rather
+      // than leaving a zombie scan/collect burning executors after the
+      // client's 408; the 408 arrives when the in-flight job is cancelled.
       val remaining = math.max(req.timeoutSec - genSec - 1.0, 2.0)
       val dbStart = System.nanoTime()
       // resolve() runs INSIDE the budgeted, cancellable phase: first
@@ -134,10 +125,10 @@ final class QueryService(spark: SparkSession, catalog: Catalog) {
       // asyncio.wait_for budget (app_server.py:229-245) — outside it,
       // the client's timeout simply would not be honored
       val result = Executor.runCancellable(spark.sparkContext, "graft-query",
-          (remaining * 1000).toLong) { cancelled =>
-        if (cancelled.get()) throw new DbTimeout("cancelled before start")
+          (remaining * 1000).toLong) { expired =>
+        if (expired.get()) throw new DbTimeout("cancelled before start")
         val df = catalog.resolve(req.db, req.collection)
-        Executor.exec(df, spec, req.limit, generationSec = genSec)
+        Executor.exec(df, spec, req.limit)
       }.getOrElse(throw new DbTimeout(
         f"Database query timed out after $remaining%.1f seconds"))
       val dbSec = secs(dbStart)

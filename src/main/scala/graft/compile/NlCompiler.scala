@@ -1,6 +1,6 @@
 package graft.compile
 
-import graft.ir.{FilterExpr, QuerySpec}
+import graft.ir.{FilterExpr, QuerySpec, UnsupportedQueryException}
 
 /** Deterministic NL → [[QuerySpec]] compiler — an exact reimplementation of
   * the reference's keyword-rule fallback `_create_fallback_query`
@@ -21,6 +21,12 @@ object NlCompiler {
 
   private val digits = """\d+""".r
 
+  /** Significant digits of `Double.MaxValue` (≈1.8e308). A wider literal
+    * exceeds the exact range of every column type, so FilterCompiler's
+    * narrowing would refuse it anyway; refusing it here keeps
+    * BigInteger's quadratic parse off arbitrarily long digit runs. */
+  private val MaxSignificantDigits = 309
+
   /** Dept synonym table, insertion order = dict iteration order
     * (No_Sql.py:344-357). Shared with [[NlColumnCompiler]] so the scalar
     * and column compilers can never drift. */
@@ -38,7 +44,9 @@ object NlCompiler {
     val t = text.toLowerCase
     // Python's int() is arbitrary precision (No_Sql.py:325); BigInt here so a
     // 10+-digit run compiles a filter instead of throwing NumberFormatException.
-    val firstNum: Option[BigInt] = digits.findFirstIn(t).map(BigInt(_))
+    // Parsed only when rule 1, 2 or 5 consumes it: the other rules ignore it.
+    val digitRun = digits.findFirstIn(t)
+    lazy val n = number(digitRun.get)
 
     // Rule 1: salary (No_Sql.py:322-331). The literal stays BigInt all the
     // way into FilterExpr — FilterCompiler.rawTyped narrows it to the
@@ -46,8 +54,7 @@ object NlCompiler {
     // exact range instead of silently rounding (Python int comparisons are
     // arbitrary-precision; a rounded double would diverge).
     if (Seq("salary", "earn", "pay", "income").exists(t.contains) &&
-        firstNum.isDefined) {
-      val n = firstNum.get
+        digitRun.isDefined) {
       val f =
         if (Seq("above", "over", "more", "greater", ">").exists(t.contains))
           FilterExpr.Gt("salary", n)
@@ -59,8 +66,7 @@ object NlCompiler {
 
     // Rule 2: age (No_Sql.py:334-341) — NO else branch: digits present but
     // no direction word falls through to the later rules.
-    if (t.contains("age") && firstNum.isDefined) {
-      val n = firstNum.get
+    if (t.contains("age") && digitRun.isDefined) {
       if (Seq("older", "above", "over").exists(t.contains))
         return QuerySpec(FilterExpr.Gt("age", n))
       if (Seq("younger", "below", "under").exists(t.contains))
@@ -78,8 +84,7 @@ object NlCompiler {
       return QuerySpec(FilterExpr.True, projection = Seq("name"))
 
     // Rule 5: experience (No_Sql.py:366-373) — again no else branch.
-    if (t.contains("experience") && firstNum.isDefined) {
-      val n = firstNum.get
+    if (t.contains("experience") && digitRun.isDefined) {
       if (Seq("more", "over", "above").exists(t.contains))
         return QuerySpec(FilterExpr.Gt("experience_years", n))
       if (Seq("less", "under", "below").exists(t.contains))
@@ -88,5 +93,14 @@ object NlCompiler {
 
     // Rule 6: default find-all (No_Sql.py:375-377)
     QuerySpec()
+  }
+
+  private def number(run: String): BigInt = {
+    val significant = run.dropWhile(_ == '0')
+    if (significant.length > MaxSignificantDigits)
+      throw new UnsupportedQueryException(
+        s"numeric literal has ${significant.length} significant digits; " +
+          s"at most $MaxSignificantDigits fit any column type")
+    if (significant.isEmpty) BigInt(0) else BigInt(significant)
   }
 }

@@ -1,21 +1,20 @@
 package graft.exec
 
-import graft.compile.{FilterCompiler, NlCompiler}
+import graft.compile.FilterCompiler
 import graft.ir.{FilterExpr, MongoJson, QuerySpec, UnsupportedQueryException}
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
-import java.util.concurrent.Executors
+import java.util.concurrent.{ScheduledThreadPoolExecutor, TimeUnit}
 import java.util.concurrent.atomic.AtomicBoolean
-import scala.concurrent.{Await, ExecutionContext, Future, TimeoutException}
-import scala.concurrent.duration._
+import scala.util.control.NonFatal
 
 /** Execution of a [[QuerySpec]] over a DataFrame — the Spark analog of the
   * reference's `run_mongo_query` (/root/reference/No_Sql.py:379-445):
-  * filter → total-matching count → projection → clamped limit → sanitize,
-  * wrapped in the response envelope's per-phase timings
-  * (app_server.py:84-93, 258-268).
+  * filter → total-matching count → projection → clamped limit → sanitize.
+  * The response envelope's per-phase timings (app_server.py:84-93) are
+  * taken by the caller, [[graft.api.QueryService]].
   *
   * Plan-shape notes (SURVEY.md §4): the filter is one Column conjunction →
   * Catalyst pushes it into the Parquet scan (`PushedFilters`); the
@@ -23,27 +22,19 @@ import scala.concurrent.duration._
   * limit lands on `CollectLimitExec`. The count's metadata fast path
   * (`estimated_document_count`, No_Sql.py:416) maps to Spark's Parquet
   * footer count — `spark.sql.parquet.aggregatePushdown=true` is set in the
-  * session builders (Verify.scala, Bench.scala) so an empty-filter `count()`
+  * session profile ([[graft.GraftSession]]) so an empty-filter `count()`
   * never scans data.
   */
 object Executor {
 
-  /** Per-phase timings, mirroring `query_generation_time` /
-    * `db_execution_time` / `execution_time` (app_server.py:84-93). */
-  final case class Timings(generationSec: Double, dbSec: Double,
-                           totalSec: Double)
-
   /** Result envelope (app_server.py:84-93): total matching count, the
-    * (≤ limit) sanitized rows — both as a lazy frame and collected like the
-    * reference's `list(cursor)` (No_Sql.py:405) — the echoed query, timings,
-    * and whether the count degraded to `len(results)` on timeout
-    * (No_Sql.py:419-421). */
+    * (≤ limit) sanitized rows collected like the reference's `list(cursor)`
+    * (No_Sql.py:405), the echoed query, and whether the count degraded to
+    * `len(results)` on timeout (No_Sql.py:419-421). */
   final case class QueryResult(
       totalMatching: Long,
-      rows: DataFrame,
       results: Seq[String],
       mongoQueryJson: String,
-      timings: Timings,
       countDegraded: Boolean)
 
   /** Limit clamp [1, 1000] (No_Sql.py:397; app_server.py:78). */
@@ -70,61 +61,48 @@ object Executor {
     spec.limit.map(n => projected.limit(clampLimit(n))).getOrElse(projected)
   }
 
-  /** Daemon cached pool for BLOCKING Spark actions driven under `Await`.
-    * `ExecutionContext.global` is a fixed-size fork-join pool: parking
-    * blocking `count()`/`collect()` calls there starves every other future
-    * under concurrent requests, so `Await` fires spurious timeouts before
-    * the work has even been scheduled. A cached pool grows with concurrent
-    * blocked actions and shrinks back when idle. */
-  private[graft] val blockingEc: ExecutionContext =
-    ExecutionContext.fromExecutorService(
-      Executors.newCachedThreadPool { r =>
-        val t = new Thread(r, "graft-blocking")
-        t.setDaemon(true)
-        t
-      })
+  /** The one thread that enforces every deadline in the process. It only
+    * flips flags and posts job cancellations, so one thread serves any
+    * number of concurrent requests; cancelled reapers leave its queue at
+    * once instead of waiting out their delay. */
+  private val deadlines = {
+    val s = new ScheduledThreadPoolExecutor(1, { (r: Runnable) =>
+      val t = new Thread(r, "graft-deadline")
+      t.setDaemon(true)
+      t
+    })
+    s.setRemoveOnCancelPolicy(true)
+    s
+  }
 
-  /** Shared timed-cancellation harness for Spark actions — the tag + flag +
-    * delayed-reaper pattern, factored so every timed phase (count timeout,
-    * the service's DB phase) reaps its jobs the same way.
+  /** Timed, cancellable phase run INLINE on the calling thread.
     *
-    * Cancellation is job-TAG based (`cancelJobsWithTag`), not job-group:
-    * `body` receives a `cancelled` flag to check after the tag is attached —
-    * either the worker sees the flag and never submits, or the job carries
-    * the tag and the cancel reaps it. One narrow window remains (flag read
-    * false → timeout cancels nothing → job submits), so the timeout path
-    * issues a SECOND delayed cancel that lands after any such straggler has
-    * registered; a job that slips past both would have had to spend >200 ms
-    * between the flag check and submission. */
+    * Cancellation is job-TAG based: the tag goes on the caller's thread, so
+    * every Spark job `body` submits carries it, and a nested phase (the
+    * count inside the service's DB phase) inherits the outer tag by
+    * construction. At the deadline, and every 200 ms after it until `body`
+    * returns, the reaper sets `expired` and cancels the tag's jobs — a job
+    * submitted after a flag check that raced the deadline is still reaped
+    * by the next tick. `body` should check `expired` before starting work.
+    * Returns None once the deadline has passed, whether `body` returned or
+    * failed (a cancelled job surfaces as an exception). */
   private[graft] def runCancellable[T](sc: SparkContext, tagPrefix: String,
       timeoutMs: Long)(body: AtomicBoolean => T): Option[T] = {
     val tag = s"$tagPrefix-${java.util.UUID.randomUUID()}"
-    val cancelled = new AtomicBoolean(false)
-    implicit val ec: ExecutionContext = blockingEc
-    // job tags are THREAD-local: a nested timed phase (the count inside
-    // the service's DB phase) submits from a different pool thread, so
-    // the CALLER's tags must ride along or the outer timeout's cancel
-    // misses the nested job entirely — and the pool thread's tag set is
-    // reset afterwards so a reused thread never carries stale tags for
-    // a later reaper to hit
-    val inherited = sc.getJobTags()
-    val fut = Future {
-      sc.clearJobTags()
-      inherited.foreach(sc.addJobTag)
+    val expired = new AtomicBoolean(false)
+    val reaper = deadlines.scheduleWithFixedDelay(() => {
+      expired.set(true)
+      sc.cancelJobsWithTag(tag)
+    }, timeoutMs, 200L, TimeUnit.MILLISECONDS)
+    try {
       sc.addJobTag(tag)
-      try body(cancelled)
-      finally sc.clearJobTags()
-    }
-    try Some(Await.result(fut, timeoutMs.millis))
-    catch {
-      case _: TimeoutException =>
-        cancelled.set(true)
-        sc.cancelJobsWithTag(tag)
-        Future { // reap a submit that raced past the first cancel
-          Thread.sleep(200)
-          if (!fut.isCompleted) sc.cancelJobsWithTag(tag)
-        }: Unit
-        None
+      val out = body(expired)
+      if (expired.get()) None else Some(out)
+    } catch {
+      case NonFatal(_) if expired.get() => None
+    } finally {
+      reaper.cancel(false)
+      sc.removeJobTag(tag)
     }
   }
 
@@ -137,23 +115,21 @@ object Executor {
   def countWithTimeout(df: DataFrame, timeoutMs: Long,
                        fallback: => Long): (Long, Boolean) =
     runCancellable(df.sparkSession.sparkContext, "graft-count", timeoutMs) {
-      cancelled =>
-        if (cancelled.get()) None // timeout already fired: don't submit
+      expired =>
+        if (expired.get()) None // timeout already fired: don't submit
         else try Some(df.count())
-        catch { case scala.util.control.NonFatal(_) => None }
+        catch { case NonFatal(_) => None }
     } match {
       case Some(Some(n)) => (n, false)
       case _             => (fallback, true)
     }
 
-  /** Full reference-parity execution: collected rows + total-matching count
-    * + per-phase timings. Count runs on the UNlimited, UNprojected filtered
+  /** Full reference-parity execution: collected rows + total-matching
+    * count. Count runs on the UNlimited, UNprojected filtered
     * frame (No_Sql.py:414-416); empty filter takes the metadata-count path
     * (aggregate pushdown); count timeout degrades to `results.length`. */
   def exec(df: DataFrame, spec: QuerySpec, limit: Int = DefaultLimit,
-           generationSec: Double = 0.0,
            countTimeoutMs: Long = CountTimeoutMs): QueryResult = {
-    val t0 = System.nanoTime()
     val rows = Sanitizer.sanitize(
       plan(df, spec.copy(limit = Some(spec.limit.getOrElse(limit)))))
     val results = rows.toJSON.collect().toSeq // list(cursor), No_Sql.py:405
@@ -162,18 +138,6 @@ object Executor {
     val filtered = plan(df, spec.copy(projection = Nil, limit = None))
     val (total, degraded) =
       countWithTimeout(filtered, countTimeoutMs, results.length.toLong)
-    val dbSec = (System.nanoTime() - t0) / 1e9
-    QueryResult(total, rows, results, MongoJson.toJson(spec),
-      Timings(generationSec, dbSec, generationSec + dbSec), degraded)
-  }
-
-  /** End-to-end NL pipeline (the reference's POST /query path, SURVEY.md
-    * §3.1): NL → QuerySpec (timed generation phase) → exec (timed DB phase). */
-  def runNl(df: DataFrame, text: String,
-            limit: Int = DefaultLimit): QueryResult = {
-    val t0 = System.nanoTime()
-    val spec = NlCompiler.compile(text)
-    val genSec = (System.nanoTime() - t0) / 1e9
-    exec(df, spec, limit, generationSec = genSec)
+    QueryResult(total, results, MongoJson.toJson(spec), degraded)
   }
 }

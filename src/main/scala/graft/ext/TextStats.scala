@@ -935,54 +935,35 @@ object TextStats {
     *
     * Scale shape: trigram explosion is one codegen'd pass
     * (`sequence`/`transform`/`substr` builtins, no UDF); both count
-    * tables aggregate with map-side combine and are BROADCAST back
-    * (character-trigram vocabulary is bounded — ~1M entries at any
-    * corpus size; loud refusal above `maxVocab` with the shuffle-join
-    * alternative named); one final per-doc aggregation. Documents
-    * shorter than 3 characters emit nothing. */
+    * tables aggregate with map-side combine; one final per-doc
+    * aggregation. Documents shorter than 3 characters emit nothing.
+    *
+    * PLAN ROUTING (the `asofJoinAuto`/`coActivityEdgesAuto` discipline):
+    * one bounded fetch of the trigram counts is both the guard and the
+    * broadcast side. Under `maxVocab` (character-trigram vocabulary is
+    * bounded — ~1M entries at any corpus size) the fetched rows and the
+    * bigram counts broadcast back; above it the count tables stay
+    * distributed and the lookups become plain shuffle joins, so at 100×
+    * the corpus the query switches plans instead of dying. The two arms
+    * are BIT-IDENTICAL: the score is a ratio of integer sums, and a
+    * join's physical strategy cannot change which rows meet — both
+    * answer the same oracle (the forced over-cap arm is
+    * differential-certified in TextStatsSpec and oracle-certified as
+    * `text_lmscore_big`). Cost of the shuffle arm: the trigram table
+    * shuffles on `tri` and on `bi` instead of streaming past two
+    * broadcasts — the standard large-build-side trade, with AQE free to
+    * pick better at runtime. */
   def lmScore(df: DataFrame, idCol: String, textCol: String,
               maxVocab: Long = 2000000L): DataFrame = {
     val tris = lmTrigrams(df, idCol, textCol)
     val c3 = tris.groupBy(col("tri")).agg(count(lit(1)).as("c3"))
     // ONE collect serves both the vocabulary guard and the broadcast:
     // a broadcast join collects its build side to the driver anyway, so
-    // a separate count() job ran the (cached) trigram aggregation twice
-    // for nothing. The fetch is bounded BEFORE materializing — limit
-    // (maxVocab + 1) makes the guard itself cap-sized, so an over-cap
-    // vocabulary fails loudly instead of OOMing the driver collecting
-    // it; the fetched rows are complete (and reusable as the broadcast
-    // side) exactly when the guard passes.
-    val c3Rows = c3.limit(vocabFetchCap(maxVocab)).collect()
-    require(c3Rows.length <= maxVocab,
-      s"lmScore: ${c3Rows.length} distinct trigrams exceeds " +
-        s"maxVocab=$maxVocab — the count tables no longer broadcast; " +
-        "raise the cap, or use lmScoreAuto to switch to shuffle joins " +
-        "automatically")
-    val c3Local = df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(c3Rows: _*), c3.schema)
-    lmFinish(tris, broadcast(c3Local), broadcastC2 = true)
-  }
-
-  /** [[lmScore]] with PLAN ROUTING instead of a refusal (the
-    * `asofJoinAuto`/`coActivityEdgesAuto` discipline): the same bounded
-    * fetch that guards the broadcast arm IS the router — under the cap
-    * the fetched rows broadcast exactly as [[lmScore]] does; above it
-    * the count tables stay distributed and the lookups become plain
-    * shuffle joins, so at 100× the corpus the query switches plans
-    * instead of dying. The two arms are BIT-IDENTICAL: the score is a
-    * ratio of integer sums, and a join's physical strategy cannot
-    * change which rows meet — both answer the same oracle (the forced
-    * over-cap arm is differential-certified in TextStatsSpec and
-    * oracle-certified as `text_lmscore_big`).
-    *
-    * Cost of the shuffle arm: the trigram table shuffles on `tri` and
-    * on `bi` (hash joins against the vocabulary-keyed count tables)
-    * instead of streaming past two broadcasts — the standard
-    * large-build-side trade, with AQE free to pick better at runtime. */
-  def lmScoreAuto(df: DataFrame, idCol: String, textCol: String,
-                  maxVocab: Long = 2000000L): DataFrame = {
-    val tris = lmTrigrams(df, idCol, textCol)
-    val c3 = tris.groupBy(col("tri")).agg(count(lit(1)).as("c3"))
+    // a separate count() job would run the (cached) trigram aggregation
+    // twice for nothing. The fetch is bounded BEFORE materializing —
+    // limit (maxVocab + 1) keeps an over-cap vocabulary from OOMing the
+    // driver; the fetched rows are complete (and reusable as the
+    // broadcast side) exactly when they fit the cap.
     val c3Rows = c3.limit(vocabFetchCap(maxVocab)).collect()
     if (c3Rows.length <= maxVocab) {
       val c3Local = df.sparkSession.createDataFrame(

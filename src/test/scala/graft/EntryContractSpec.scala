@@ -28,4 +28,19 @@ class EntryContractSpec extends SparkSpec {
       assert(!sql.contains("__"), s"$k: oracle leaks a __-prefixed temp column")
     }
   }
+
+  test("an unknown SPARK_GRAFT_ONLY name stops a main before its session") {
+    val out = java.nio.file.Files.createTempDirectory("graft-only")
+      .resolve("out")
+    val pb = new ProcessBuilder(
+      s"${System.getProperty("java.home")}/bin/java", "-Xmx256m",
+      "-XX:-UsePerfData", "graft.Verify", "/nonexistent-sf", out.toString)
+    pb.environment().put("CLASSPATH", System.getProperty("java.class.path"))
+    pb.environment().put("SPARK_GRAFT_ONLY", " filter_eq, nope ,,count_all")
+    val p = pb.redirectOutput(ProcessBuilder.Redirect.DISCARD).start()
+    val err = new String(p.getErrorStream.readAllBytes(), "UTF-8")
+    assert(p.waitFor() == 2)
+    assert(err == "[verify] unknown query in SPARK_GRAFT_ONLY: nope\n", err)
+    assert(!java.nio.file.Files.exists(out)) // Verify creates it after the session
+  }
 }

@@ -61,6 +61,18 @@ class HttpApiSpec extends SparkSpec {
     assert(offSurface.body().contains(""""error_type":"HTTP_ERROR""""))
   }
 
+  test("a 1 MiB digit run is refused with 400 in under a second") {
+    assert(get("/test").statusCode() == 200) // server up before the clock
+    val wrapper = """{"input": "salary above "}"""
+    val body = wrapper.replace("above ", "above " + "9" * ((1 << 20) - wrapper.length))
+    assert(body.length == (1 << 20))
+    val t0 = System.nanoTime()
+    val r = post("/query", body)
+    val sec = (System.nanoTime() - t0) / 1e9
+    assert(r.statusCode() == 400, r.body().take(200))
+    assert(sec < 1.0, s"took $sec s")
+  }
+
   test("GET /history accumulates requests; DELETE clears") {
     // isolate from the shared api: fresh service + listener
     val api2 = new HttpApi(new QueryService(spark, catalog))

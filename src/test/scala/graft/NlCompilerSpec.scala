@@ -1,7 +1,7 @@
 package graft
 
-import graft.compile.NlCompiler
-import graft.ir.{FilterExpr, QuerySpec}
+import graft.compile.{FilterCompiler, NlCompiler}
+import graft.ir.{FilterExpr, QuerySpec, UnsupportedQueryException}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** SURVEY.md §5.1 / §2.6: one test per fallback rule INCLUDING the quirks —
@@ -94,5 +94,33 @@ class NlCompilerSpec extends AnyFunSuite {
   test("huge digit runs stay exact (Python int is arbitrary precision)") {
     assert(NlCompiler.compile("salary 123456789012345678901234567890").filter ==
       FilterExpr.Eq("salary", BigInt("123456789012345678901234567890")))
+  }
+
+  test("a digit run is parsed only when a numeric rule consumes it") {
+    val million = "9" * 1000000
+    assert(NlCompiler.compile(s"hello $million") == QuerySpec())
+    assert(NlCompiler.compile(s"engineers $million").filter ==
+      FilterExpr.Regex("department", "engineering", caseInsensitive = true))
+    intercept[UnsupportedQueryException](
+      NlCompiler.compile(s"salary above $million"))
+  }
+
+  test("digit runs: at most 309 significant digits, leading zeros free") {
+    import org.apache.spark.sql.types._
+    // 2^1000 has 302 digits and is exactly a double
+    val p = BigInt(2).pow(1000)
+    val f = NlCompiler.compile(s"salary above $p").filter
+    assert(f == FilterExpr.Gt("salary", p))
+    val schema = StructType(Seq(StructField("salary", DoubleType)))
+    assert(FilterCompiler.rawTyped("salary", p, schema) == math.pow(2, 1000))
+    assert(NlCompiler.compile("salary above " + "0" * 1000 + "5").filter ==
+      FilterExpr.Gt("salary", BigInt(5)))
+    assert(NlCompiler.compile("age over " + "0" * 500).filter ==
+      FilterExpr.Gt("age", BigInt(0)))
+    assert(NlCompiler.compile("salary above " + "9" * 309).filter ==
+      FilterExpr.Gt("salary", BigInt("9" * 309)))
+    val e = intercept[UnsupportedQueryException](
+      NlCompiler.compile("experience over " + "1" + "0" * 309))
+    assert(e.getMessage.contains("310 significant digits"))
   }
 }

@@ -88,6 +88,53 @@ class QueryServiceSpec extends SparkSpec {
     assert(s.historyStats().nQueries == 8)
   }
 
+  test("a request runs on the caller's thread, resolve included") {
+    val seen = new java.util.concurrent.atomic.AtomicReference[Thread]()
+    val c = new Catalog(spark, "/nonexistent-root")
+    c.register("testdb", "probe") {
+      seen.set(Thread.currentThread())
+      employees
+    }
+    val r = new QueryService(spark, c)
+      .query(QueryRequest("earning more than 60000", collection = "probe"))
+    assert(r.isRight, r)
+    assert(seen.get() eq Thread.currentThread())
+  }
+
+  test("DB-phase timeout: 408 within budget + 1 s, its jobs cancelled") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    import org.apache.spark.sql.functions.{col, udf}
+    // no row passes `salary > 5`, so the collect scans every partition:
+    // 80 x 10 rows x 50 ms, ~10 s on 4 cores; a cancelled task stops at
+    // its partition's end, at most 0.5 s later
+    val slow = udf { (x: Long) => Thread.sleep(50); x * 0 }
+    val c = new Catalog(spark, "/nonexistent-root")
+    c.register("testdb", "slow")(
+      spark.range(0, 800, 1, 80).select(slow(col("id")).as("salary")))
+    val running = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+              .exists(_.split(",").exists(_.startsWith("graft-query-"))))
+          running.add(e.jobId): Unit
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        running.remove(e.jobId): Unit
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val t0 = System.nanoTime()
+      val r = new QueryService(spark, c).query(
+        QueryRequest("salary above 5", collection = "slow", timeoutSec = 5))
+      val sec = (System.nanoTime() - t0) / 1e9
+      val e = r.swap.toOption.get
+      assert(e.errorType == "TIMEOUT_ERROR" && e.statusCode == 408, e)
+      // generation takes ~0 s, so the DB budget is 5 - 1 = 4 s
+      assert(sec < 4.0 + 1.0, s"took $sec s")
+      Thread.sleep(1000)
+      assert(running.isEmpty, s"graft-query jobs still running: $running")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("query history: every call appends, stats match the UI arithmetic") {
     val s = new QueryService(spark, catalog) // fresh buffer, not the shared svc
     assert(s.historyStats() == HistoryStats(0, 0.0, 0.0))

@@ -509,24 +509,13 @@ class TextStatsSpec extends SparkSpec {
       .orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(out.toSeq == Seq((1L, 2L, 2000L), (2L, 2L, 1666L)))
-    // the broadcast cap refuses loudly, naming the alternative
-    val e = intercept[IllegalArgumentException](
-      graft.ext.TextStats.lmScore(docs, "doc_id", "text", maxVocab = 1L))
-    assert(e.getMessage.contains("broadcast") &&
-      e.getMessage.contains("lmScoreAuto"))
-    // the routed form does NOT refuse — it switches to shuffle joins
-    // and answers bit-identically (the differential the router's
-    // correctness rests on: join strategy cannot change the sums)
+    // over the cap it switches to shuffle joins and answers
+    // bit-identically (the differential the router's correctness rests
+    // on: join strategy cannot change the sums)
     val routed = graft.ext.TextStats
-      .lmScoreAuto(docs, "doc_id", "text", maxVocab = 1L)
+      .lmScore(docs, "doc_id", "text", maxVocab = 1L)
       .orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(routed.toSeq == out.toSeq)
-    // under the cap the router takes the broadcast arm, same answer
-    val under = graft.ext.TextStats
-      .lmScoreAuto(docs, "doc_id", "text")
-      .orderBy("doc_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    assert(under.toSeq == out.toSeq)
   }
 }

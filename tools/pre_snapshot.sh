@@ -4,7 +4,8 @@
 # round's certification (CORRECTNESS empty, BENCH rc:1 — exactly what
 # round 15 did), so this script refuses in under a minute instead.
 #
-#   tools/pre_snapshot.sh            # compile + test-compile + smoke gate
+#   tools/pre_snapshot.sh            # compile + test-compile + perfbench
+#                                    # harness compile + smoke gate
 #   SMOKE_SF=/root/testdata/sf0.01 tools/pre_snapshot.sh   # bigger smoke
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -18,6 +19,11 @@ trap 'rm -rf "$OUT"' EXIT
 
 echo "== pre_snapshot: compile (main + test) =="
 sbt -batch "Test / compile"
+
+# perfbench/Harness.scala drives the service API; compile it against
+# src/main the way the benchmark does, so an API break fails here first
+echo "== pre_snapshot: compile the perfbench harness =="
+python3 -c 'import sys; sys.path.insert(0, "perfbench"); import build; build.build(".")'
 
 echo "== pre_snapshot: smoke Verify ($SMOKE_QUERIES @ $SMOKE_SF) =="
 SPARK_GRAFT_CPUS=8 SPARK_GRAFT_ONLY="$SMOKE_QUERIES" \

@@ -99,10 +99,10 @@ final class QueryService(spark: SparkSession, catalog: Catalog) {
       return Left(QueryError("timeout must be in [5, 60] seconds", "HTTP_ERROR", 422, None))
     try {
       // Stage 1: generation gets ≤ 70% of the budget (app_server.py:221),
-      // checked when the inline compiler returns: a CPU-bound compiler
-      // polls no interrupt, so another thread could only abandon it. Its
-      // input bounds its time (HttpApi's 1 MiB body cap, NlCompiler's
-      // digit-run cap).
+      // checked when the inline generator returns: a CPU-bound generator
+      // polls no interrupt, so another thread could only abandon it. Both
+      // generators are linear in the input HttpApi caps at 1 MiB (NlCompiler
+      // caps its digit run; MongoJson's repair uses no backtracking regex).
       val genBudget = req.timeoutSec * 0.7
       val genStart = System.nanoTime()
       val spec = gen()

@@ -24,16 +24,18 @@ object MongoJson {
     s.replaceAll("```json|```|`", "").trim
 
   /** Stage 2 repair: single→double quotes, quote bare keys
-    * (No_Sql.py:282-289: `re.sub(r"(\w+):", r'"\1":')`). */
+    * (No_Sql.py:282-289: `re.sub(r"(\w+):", r'"\1":')`), in linear time:
+    * ':' is not a word char, so only a whole word run can match, and a
+    * possessive run anchored at its start never backtracks. */
   private[graft] def repairJson(s: String): String =
-    s.replace('\'', '"').replaceAll("(\\w+):", "\"$1\":")
+    s.replace('\'', '"').replaceAll("(?<!\\w)(\\w++):", "\"$1\":")
 
-  /** Stage 3: extract the first `{...}` blob, DOTALL (No_Sql.py:292-298). */
+  /** Stage 3: extract the first `{...}` blob, DOTALL (No_Sql.py:292-298):
+    * the first '{' to the last '}' after it, the greedy `\{.*\}`'s span,
+    * by index instead of the regex's quadratic retry from every '{'. */
   private[graft] def extractBlob(s: String): Option[String] = {
-    val m = java.util.regex.Pattern
-      .compile("\\{.*\\}", java.util.regex.Pattern.DOTALL)
-      .matcher(s)
-    if (m.find()) Some(m.group(0)) else None
+    val (open, close) = (s.indexOf('{'), s.lastIndexOf('}'))
+    if (open >= 0 && close > open) Some(s.substring(open, close + 1)) else None
   }
 
   private def tryParse(s: String): Option[JsonNode] =

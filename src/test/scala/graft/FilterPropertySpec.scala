@@ -135,6 +135,23 @@ object FilterPropertySpec extends Properties("graft") {
       Prop(recovered == spec).label(s"mutation=$m json=${mutate(json, m)}")
     }
 
+  // The repair stages as the reference writes them (No_Sql.py:282-298),
+  // backtracking regexes that MongoJson replaces with linear forms.
+  private def refRepair(s: String): String =
+    s.replace('\'', '"').replaceAll("(\\w+):", "\"$1\":")
+  private def refBlob(s: String): Option[String] = {
+    val m = java.util.regex.Pattern
+      .compile("\\{.*\\}", java.util.regex.Pattern.DOTALL).matcher(s)
+    if (m.find()) Some(m.group(0)) else None
+  }
+
+  property("linear repair stages match the reference regexes") =
+    Prop.forAllNoShrink(Gen.listOf(Gen.oneOf("ab_1:{}'\" \né".toSeq))
+        .map(_.mkString)) { s =>
+      Prop(MongoJson.repairJson(s) == refRepair(s) &&
+        MongoJson.extractBlob(s) == refBlob(s)).label(s"input=$s")
+    }
+
   // ---- NL compiler totality ----
 
   // ---- dedup: engine vs brute-force set arithmetic ----

@@ -73,6 +73,20 @@ class HttpApiSpec extends SparkSpec {
     assert(sec < 1.0, s"took $sec s")
   }
 
+  test("a 1 MiB /query/json body of word characters is answered in under a second") {
+    assert(get("/test").statusCode() == 200) // server up before the clock
+    val wrapper = """{"input": ""}"""
+    val body = wrapper.replace("\"\"", "\"" + "w" * ((1 << 20) - wrapper.length) + "\"")
+    assert(body.length == (1 << 20))
+    val t0 = System.nanoTime()
+    val r = post("/query/json", body)
+    val sec = (System.nanoTime() - t0) / 1e9
+    // not JSON after any repair stage: degrades to the empty spec, find-all
+    assert(r.statusCode() == 200, r.body().take(200))
+    assert(r.body().contains(""""mongo_query":{"filter":{},"projection":{}}"""))
+    assert(sec < 1.0, s"took $sec s")
+  }
+
   test("GET /history accumulates requests; DELETE clears") {
     // isolate from the shared api: fresh service + listener
     val api2 = new HttpApi(new QueryService(spark, catalog))

@@ -40,6 +40,17 @@ class MongoJsonSpec extends AnyFunSuite {
     assert(spec.filter == FilterExpr.Eq("x", BigInt(9)))
   }
 
+  test("the repair cascade is linear: 1 MiB of word chars or '{' in under a second") {
+    // the reference's backtracking `(\w+):` and `\{.*\}` are quadratic on
+    // these inputs (~10^11 steps at 1 MiB)
+    for (raw <- Seq("a" * (1 << 20), "{" * (1 << 20))) {
+      val t0 = System.nanoTime()
+      assert(MongoJson.parseWithRepair(raw) == QuerySpec())
+      val sec = (System.nanoTime() - t0) / 1e9
+      assert(sec < 1.0, s"${raw.take(1)}: took $sec s")
+    }
+  }
+
   test("total failure degrades to the empty spec (No_Sql.py:304-314)") {
     assert(MongoJson.parseWithRepair("not json at all") == QuerySpec())
     assert(MongoJson.parseWithRepair("[1,2,3]") == QuerySpec())

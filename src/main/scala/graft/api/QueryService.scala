@@ -56,10 +56,11 @@ final class QueryService(spark: SparkSession, catalog: Catalog) {
     // client does (main.py:131 `"execution_time": elapsed_time`) — a
     // 30 s timeout must weigh 30 s in mean_execution_time, not 0
     val elapsed = round3((System.nanoTime() - t0) / 1e9)
+    val query = clip(req.input)
     val entry = out match {
-      case Right(ok) => HistoryEntry(req.input, req.db, req.collection,
+      case Right(ok) => HistoryEntry(query, req.db, req.collection,
         success = true, ok.executionTime, ok.resultCount, error = None)
-      case Left(err) => HistoryEntry(req.input, req.db, req.collection,
+      case Left(err) => HistoryEntry(query, req.db, req.collection,
         success = false, elapsed, 0, error = Some(err.error))
     }
     historyLock.synchronized {
@@ -223,6 +224,20 @@ object QueryService {
 
   /** Newest-N bound on the in-memory history buffer. */
   val HistoryCap = 10000
+
+  /** A history entry keeps at most this many chars of its query: with
+    * HttpApi's 1 MiB body cap, whole inputs could pin ~10 GB of JVM
+    * heap at [[HistoryCap]] entries. */
+  val HistoryQueryChars = 1024
+
+  /** The first [[HistoryQueryChars]] chars of `s`, never ending inside a
+    * surrogate pair (the history's JSON must stay encodable). */
+  private def clip(s: String): String =
+    if (s.length <= HistoryQueryChars) s
+    else s.substring(0,
+      if (Character.isHighSurrogate(s.charAt(HistoryQueryChars - 1)))
+        HistoryQueryChars - 1
+      else HistoryQueryChars)
 
   /** The UI's summary arithmetic (main.py:263-268) over ONE history
     * snapshot — shared by [[QueryService.historyStats]] and the HTTP

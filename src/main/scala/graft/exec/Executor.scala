@@ -2,8 +2,10 @@ package graft.exec
 
 import graft.compile.FilterCompiler
 import graft.ir.{FilterExpr, MongoJson, QuerySpec, UnsupportedQueryException}
-import org.apache.spark.SparkContext
+import org.apache.spark.{InterruptibleIterator, SparkContext, TaskContext}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.graftbridge.GraftBridge
 import org.apache.spark.sql.functions.col
 
 import java.util.concurrent.{ScheduledThreadPoolExecutor, TimeUnit}
@@ -18,12 +20,16 @@ import scala.util.control.NonFatal
   *
   * Plan-shape notes (SURVEY.md §4): the filter is one Column conjunction →
   * Catalyst pushes it into the Parquet scan (`PushedFilters`); the
-  * projection is a plain `select` → column pruning reaches `ReadSchema`; the
-  * limit lands on `CollectLimitExec`. The count's metadata fast path
-  * (`estimated_document_count`, No_Sql.py:416) maps to Spark's Parquet
-  * footer count — `spark.sql.parquet.aggregatePushdown=true` is set in the
-  * session profile ([[graft.GraftSession]]) so an empty-filter `count()`
-  * never scans data.
+  * projection is a plain `select` → column pruning reaches `ReadSchema`.
+  * [[exec]] runs no `limit` operator: a filtered request is ONE job over
+  * the sanitized rows that returns both the first `k` rows and the total
+  * (the reference's `find(...).limit(n)` + `count_documents`,
+  * No_Sql.py:404-416), with no shuffle. The empty-filter count
+  * (`estimated_document_count`, No_Sql.py:416) is a plain `count()`:
+  * Parquet reads take Spark's V1 file source (`useV1SourceList`), where
+  * `spark.sql.parquet.aggregatePushdown` does not apply, so it plans
+  * `FileScan parquet []` with `ReadSchema: struct<>` — no column is read,
+  * but it is still one job over every file.
   */
 object Executor {
 
@@ -106,38 +112,83 @@ object Executor {
     }
   }
 
+  /** `body` under the `graft-count` deadline ([[runCancellable]]): None
+    * when it ran out of time or failed in any way — the reference catches
+    * every count exception, not just timeouts (No_Sql.py:418-421). */
+  private def countPhase[T](sc: SparkContext, timeoutMs: Long)(
+      body: => T): Option[T] =
+    runCancellable(sc, "graft-count", timeoutMs) { expired =>
+      if (expired.get()) None // timeout already fired: don't submit
+      else try Some(body)
+      catch { case NonFatal(_) => None }
+    }.flatten
+
   /** Count with the reference's degradation policy: a count that exceeds
-    * `timeoutMs` is cancelled ([[runCancellable]]) and — like ANY other
-    * count failure (the reference catches every exception, not just
-    * timeouts: No_Sql.py:418-421) — falls back to `fallback` (the
-    * reference's `len(results)`); the results themselves were already
-    * collected, so a transient count failure must not fail the query. */
+    * `timeoutMs` or fails falls back to `fallback` (the reference's
+    * `len(results)`); the results themselves were already collected, so a
+    * transient count failure must not fail the query. */
   def countWithTimeout(df: DataFrame, timeoutMs: Long,
                        fallback: => Long): (Long, Boolean) =
-    runCancellable(df.sparkSession.sparkContext, "graft-count", timeoutMs) {
-      expired =>
-        if (expired.get()) None // timeout already fired: don't submit
-        else try Some(df.count())
-        catch { case NonFatal(_) => None }
-    } match {
-      case Some(Some(n)) => (n, false)
-      case _             => (fallback, true)
+    countPhase(df.sparkSession.sparkContext, timeoutMs)(df.count()) match {
+      case Some(n) => (n, false)
+      case None    => (fallback, true)
     }
 
-  /** Full reference-parity execution: collected rows + total-matching
-    * count. Count runs on the UNlimited, UNprojected filtered
-    * frame (No_Sql.py:414-416); empty filter takes the metadata-count path
-    * (aggregate pushdown); count timeout degrades to `results.length`. */
+  /** One job, no shuffle, over every partition of `rows`: each task
+    * JSON-encodes its first `k` rows with `Dataset.toJSON`'s encoder and,
+    * when `countAll`, keeps counting to its partition's end (otherwise it
+    * stops after `k`). The caller gets the first `k` rows in partition
+    * order — the rows `rows.toJSON.collect().take(k)` gives — and the
+    * summed count, exact only when `countAll`. */
+  private def scan(rows: DataFrame, k: Int,
+                   countAll: Boolean): (Seq[String], Long) = {
+    val schema = rows.schema
+    val tz = rows.sparkSession.conf.get("spark.sql.session.timeZone")
+    val parts = rows.sparkSession.sparkContext.runJob(
+      rows.queryExecution.toRdd,
+      (ctx: TaskContext, it: Iterator[InternalRow]) => {
+        // checks the kill flag at every row it passes on, so a cancelled
+        // count's tasks stop early instead of running to their partition's
+        // end and holding cores the fallback scan needs
+        val rowsIn = new InterruptibleIterator(ctx, it)
+        val json = GraftBridge.jsonEncoder(schema, tz)
+        val first = Array.newBuilder[String]
+        var n = 0L
+        while ((countAll || n < k) && rowsIn.hasNext) {
+          val row = rowsIn.next()
+          if (n < k) first += json(row)
+          n += 1
+        }
+        (first.result(), n)
+      })
+    (parts.iterator.flatMap(_._1).take(k).toSeq, parts.iterator.map(_._2).sum)
+  }
+
+  /** Full reference-parity execution: the first `k` sanitized rows like
+    * the reference's `list(cursor)` (No_Sql.py:405) plus the total over
+    * the UNlimited filter (No_Sql.py:414-416). A filtered request is one
+    * [[scan]] under the count deadline that yields both; on expiry or any
+    * failure a rows-only scan answers and the total degrades to
+    * `results.length` (No_Sql.py:419-421). An empty filter takes the
+    * rows-only scan and the metadata-count path. */
   def exec(df: DataFrame, spec: QuerySpec, limit: Int = DefaultLimit,
            countTimeoutMs: Long = CountTimeoutMs): QueryResult = {
-    val rows = Sanitizer.sanitize(
-      plan(df, spec.copy(limit = Some(spec.limit.getOrElse(limit)))))
-    val results = rows.toJSON.collect().toSeq // list(cursor), No_Sql.py:405
-    // the count's frame: filter only — plan() with projection and limit
-    // stripped, so the filter-compilation semantics cannot diverge
-    val filtered = plan(df, spec.copy(projection = Nil, limit = None))
-    val (total, degraded) =
-      countWithTimeout(filtered, countTimeoutMs, results.length.toLong)
+    val k = clampLimit(spec.limit.getOrElse(limit))
+    val rows = Sanitizer.sanitize(plan(df, spec.copy(limit = None)))
+    def firstRows = scan(rows, k, countAll = false)._1
+    val (results, total, degraded) =
+      if (spec.filter == FilterExpr.True) {
+        val results = firstRows
+        val (n, degraded) =
+          countWithTimeout(df, countTimeoutMs, results.length.toLong)
+        (results, n, degraded)
+      } else countPhase(df.sparkSession.sparkContext, countTimeoutMs)(
+          scan(rows, k, countAll = true)) match {
+        case Some((results, n)) => (results, n, false)
+        case None =>
+          val results = firstRows
+          (results, results.length.toLong, true)
+      }
     QueryResult(total, results, MongoJson.toJson(spec), degraded)
   }
 }

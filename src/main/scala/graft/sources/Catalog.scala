@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** `(db, collection)` → DataFrame resolution — the Spark analog of the
   * reference's `client[db_name][coll_name]` addressing
@@ -13,29 +14,32 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Formats: parquet and orc (columnar, self-describing — the scale paths),
   * json (newline-delimited documents — the closest analog of a Mongo
-  * collection: schema inferred on first read, extra/missing fields
-  * tolerated), csv (header + inferred schema). All reads are plain
-  * `spark.read` so Catalyst pushdown reaches every source that supports it.
+  * collection: extra/missing fields tolerated), csv (header + inferred
+  * schema). Every format is read the same way: `spark.read.format(f)` with
+  * the memoized schema, so Catalyst pushdown reaches every source that
+  * supports it.
   */
 final class Catalog(spark: SparkSession, root: String) {
 
   private val registered =
     scala.collection.concurrent.TrieMap.empty[(String, String), () => DataFrame]
 
-  /** json/csv schema inference is a full data scan; doing it on every
-    * resolve() (health() resolves too) re-reads the collection per request.
-    * First resolution memoizes the inferred schema per (db, collection) so
-    * later reads plan straight from it. The entry is keyed by a signature
-    * over the source's FILE LISTING — max(mtime) and total length of the
-    * contained files, not the top-level path's mtime: rewriting a part
-    * file in place inside a directory-backed source does not bump the
-    * directory mtime on most filesystems, so a path-mtime key would serve
-    * the stale schema indefinitely. Any append, rewrite, or file
-    * add/remove changes the signature and triggers one re-inference —
-    * one extra FS listing per resolve buys staleness-freedom. Parquet/ORC
-    * are self-describing (footer-only schema) and are NOT cached. */
+  /** Schema inference costs real work on every format: json and csv scan
+    * the data, parquet runs a footer-merge Spark job, orc reads footers.
+    * Doing it on every resolve() (health() resolves too) would add that
+    * work to every request, so the first resolution
+    * memoizes the inferred schema per (db, collection) and later reads
+    * plan straight from it. The entry is keyed by a signature over the
+    * source's FILE LISTING — max(mtime) and total length of the contained
+    * files, not the top-level path's mtime: rewriting a part file in
+    * place inside a directory-backed source does not bump the directory
+    * mtime on most filesystems, so a path-mtime key would serve the stale
+    * schema indefinitely. Any append, rewrite, or file add/remove changes
+    * the signature and triggers one re-inference — one extra FS listing
+    * per resolve buys staleness-freedom. Rows are never cached: every read
+    * lists the files afresh. */
   private val inferredSchemas = scala.collection.concurrent.TrieMap
-    .empty[(String, String), ((Long, Long), org.apache.spark.sql.types.StructType)]
+    .empty[(String, String), ((Long, Long), StructType)]
 
   /** Explicitly bind (db, collection) to a frame factory (e.g. a view). */
   def register(db: String, collection: String)(f: => DataFrame): Unit = {
@@ -53,19 +57,15 @@ final class Catalog(spark: SparkSession, root: String) {
       (s"$root/$db/$collection.json", "json"),
       (s"$root/$db/$collection.csv", "csv"),
       (s"$root/$collection.parquet", "parquet"))
-    val key = (db, collection)
     candidates.find { case (p, _) => exists(p) } match {
-      case Some((p, "parquet")) => spark.read.parquet(p)
-      case Some((p, "orc"))     => spark.read.orc(p) // self-describing, like parquet
-      case Some((p, "json")) =>
-        val schema = cachedSchema(key, p, spark.read.json(p).schema)
-        spark.read.schema(schema).json(p)
-      case Some((p, "csv")) =>
-        val schema = cachedSchema(key, p,
-          spark.read.option("header", "true").option("inferSchema", "true")
-            .csv(p).schema)
-        spark.read.option("header", "true").schema(schema).csv(p)
-      case _ =>
+      case Some((p, format)) =>
+        // csv's inferSchema only acts when no schema is given
+        def reader = spark.read.format(format).options(
+          if (format == "csv") Map("header" -> "true", "inferSchema" -> "true")
+          else Map.empty[String, String])
+        val schema = cachedSchema((db, collection), p, reader.load(p).schema)
+        reader.schema(schema).load(p)
+      case None =>
         throw new NoSuchElementException(
           s"no table for ($db, $collection) under $root " +
             s"(tried ${candidates.map(_._1).mkString(", ")})")
@@ -73,8 +73,7 @@ final class Catalog(spark: SparkSession, root: String) {
   }
 
   private def cachedSchema(key: (String, String), path: String,
-      infer: => org.apache.spark.sql.types.StructType):
-      org.apache.spark.sql.types.StructType = {
+      infer: => StructType): StructType = {
     val sig = listingSignature(path)
     inferredSchemas.get(key) match {
       case Some((t, s)) if t == sig => s

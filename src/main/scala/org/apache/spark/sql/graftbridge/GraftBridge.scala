@@ -49,6 +49,25 @@ object GraftBridge {
       : Option[org.apache.spark.sql.sources.Filter] =
     org.apache.spark.sql.internal.connector.PredicateUtils.toV1(p)
 
+  /** The row → JSON text encoder `Dataset.toJSON` uses (`JacksonGenerator`
+    * and `JSONOptions` are `private[sql]`): same generator, same options
+    * (none but the session time zone), no separator between records. The
+    * returned function reuses one writer, so build one per task. */
+  def jsonEncoder(schema: org.apache.spark.sql.types.StructType,
+                  timeZone: String)
+      : org.apache.spark.sql.catalyst.InternalRow => String = {
+    val writer = new java.io.CharArrayWriter()
+    val gen = new org.apache.spark.sql.catalyst.json.JacksonGenerator(
+      schema, writer, new org.apache.spark.sql.catalyst.json.JSONOptions(
+        Map.empty[String, String], timeZone))
+    row => {
+      writer.reset()
+      gen.write(row)
+      gen.flush()
+      writer.toString
+    }
+  }
+
   /** Wrap a hand-built logical plan as a DataFrame (`Dataset.ofRows` is
     * `private[sql]`) — the entry point for custom logical operators
     * planned by an injected [[org.apache.spark.sql.execution.SparkStrategy]]. */

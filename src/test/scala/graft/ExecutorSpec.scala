@@ -1,7 +1,9 @@
 package graft
 
-import graft.exec.Executor
+import graft.exec.{Executor, Sanitizer}
 import graft.ir.{FilterExpr, MongoJson, QuerySpec, UnsupportedQueryException}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, udf}
 
 /** SURVEY.md §2.3-§2.5 execution semantics: limit clamp, projection,
   * count policy, envelope. */
@@ -34,6 +36,51 @@ class ExecutorSpec extends SparkSpec {
     assert(r.totalMatching == 5)           // UNlimited count
     assert(!r.countDegraded)
     assert(r.mongoQueryJson.contains("$gte"))
+  }
+
+  /** Four partitions of ten rows with every type the sanitizer rewrites
+    * (timestamp, date, decimal, binary), nulls, and nested values it
+    * leaves to the JSON encoder (array, map, struct with a timestamp). */
+  private lazy val typed: DataFrame = spark.range(0, 40, 1, 4).selectExpr(
+    "id",
+    "timestamp_seconds(id * 86399 + 7) AS ts",
+    "date_add(DATE'2020-02-27', CAST(id AS INT)) AS d",
+    "CAST(id * 1.25 AS DECIMAL(10, 2)) AS dec",
+    "CAST(concat('b', id) AS BINARY) AS bin",
+    "IF(id % 5 = 0, NULL, concat('n', id)) AS s",
+    "IF(id % 7 = 0, NULL, id / 3.0D) AS x",
+    "array(id, IF(id % 2 = 0, NULL, id + 1)) AS arr",
+    "map('k', id, 'j', -id) AS m",
+    "named_struct('a', id, 't', timestamp_seconds(id), 'q', CAST(id AS DECIMAL(5, 1))) AS st")
+
+  test("exec: one scan gives toJSON's first k rows and the plan's count") {
+    assert(typed.rdd.getNumPartitions == 4)
+    val specs = Seq(
+      QuerySpec(FilterExpr.True),
+      QuerySpec(FilterExpr.Gt("id", BigInt(7))),
+      QuerySpec(FilterExpr.In("id", Seq(3, 17, 38).map(BigInt(_))), Seq("ts", "m", "st")),
+      QuerySpec(FilterExpr.And(Seq(FilterExpr.Gte("id", BigInt(5)), FilterExpr.Lt("id", BigInt(33)))),
+        Seq("id", "bin", "dec", "d", "arr", "s", "x")),
+      QuerySpec(FilterExpr.Eq("id", BigInt(-1))))
+    for (spec <- specs; k <- Seq(1, 3, 1000)) {
+      val r = Executor.exec(typed, spec, limit = k)
+      val unlimited = Executor.plan(typed, spec.copy(limit = None))
+      val expected = Sanitizer.sanitize(unlimited).toJSON.collect().take(k).toSeq
+      assert(r.results == expected, s"$spec, k = $k")
+      assert(r.totalMatching == unlimited.count() && !r.countDegraded,
+        s"$spec, k = $k")
+    }
+  }
+
+  test("exec: a slow filtered count degrades to the rows it returned") {
+    // every row matches: counting 100 rows per task takes ~4 s, the first
+    // three per task ~0.1 s, so only the rows-only scan fits the budget
+    val slow = udf { (x: Long) => Thread.sleep(20); x }
+    val df = spark.range(0, 400, 1, 4).select(slow(col("id")).as("salary"))
+    val r = Executor.exec(df, QuerySpec(FilterExpr.Gte("salary", BigInt(0))),
+      limit = 3, countTimeoutMs = 300L)
+    assert(r.countDegraded)
+    assert(r.results.length == 3 && r.totalMatching == 3)
   }
 
   test("count degradation: timeout -> fallback value + degraded flag") {

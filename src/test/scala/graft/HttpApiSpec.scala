@@ -129,4 +129,37 @@ class HttpApiSpec extends SparkSpec {
     assert(post("/test", "{}").statusCode() == 405)
     assert(post("/query/other", "{}").statusCode() == 404)
   }
+
+  test("keep-alive round trips do not wait out the client's delayed ACK") {
+    assert(get("/test").statusCode() == 200) // connection open first
+    val ms = (1 to 20).map { _ =>
+      val t0 = System.nanoTime()
+      assert(get("/test").statusCode() == 200)
+      (System.nanoTime() - t0) / 1e6
+    }.sorted
+    // a body held back by Nagle until the delayed ACK takes >= 40 ms
+    assert((ms(9) + ms(10)) / 2 < 20.0, ms)
+  }
+
+  test("a 1 MiB /query keeps at most 1 024 chars of it in the history") {
+    val api2 = new HttpApi(new QueryService(spark, catalog))
+    val p2 = api2.start()
+    try {
+      val input = "earning more than 60000 " * 43690
+      val body = s"""{"input": "$input"}"""
+      assert(body.length <= (1 << 20) && body.length > (1 << 20) - 64)
+      client.send(
+        HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$p2/query"))
+          .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
+        HttpResponse.BodyHandlers.ofString()): Unit
+      val h = client.send(
+        HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$p2/history"))
+          .GET().build(), HttpResponse.BodyHandlers.ofString())
+      assert(h.statusCode() == 200)
+      val rows = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(h.body()).get("history")
+      assert(rows.size() == 1)
+      assert(rows.get(0).get("query").asText() == input.take(1024))
+    } finally api2.stop()
+  }
 }

@@ -3,6 +3,12 @@ package graft
 import graft.api.QueryService
 import graft.api.QueryService._
 import graft.sources.Catalog
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit}
+
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import scala.jdk.CollectionConverters._
 
 /** SURVEY.md §2.9/§3.1: request validation, 70/30 timeout budgeting shape,
   * typed error envelope, health/test probes, catalog resolution. */
@@ -14,6 +20,41 @@ class QueryServiceSpec extends SparkSpec {
     c
   }
   private lazy val svc = new QueryService(spark, catalog)
+
+  /** (job id, tags) of every Spark job started while `body` ran. The
+    * listener bus is asynchronous but ordered, so once a sentinel job
+    * submitted after `body` is seen, every earlier job has been too. */
+  private def jobsDuring(body: => Unit): Seq[(Int, Seq[String])] = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Seq[String])]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add((e.jobId, Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .map(_.split(",").toSeq).getOrElse(Nil))): Unit
+    }
+    val sentinel = s"sentinel-${java.util.UUID.randomUUID()}"
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.addJobTag(sentinel)
+      try spark.range(1).count() finally sc.removeJobTag(sentinel)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.asScala.exists(_._2.contains(sentinel)) &&
+             System.nanoTime() < deadline) Thread.sleep(10)
+    } finally sc.removeSparkListener(listener)
+    seen.asScala.filterNot(_._2.contains(sentinel)).toSeq
+  }
+
+  /** A parquet collection `db1.emps` (employees) under a fresh root. */
+  private def parquetRoot(): String = {
+    val dir = Files.createTempDirectory("graft-pq").toString
+    employees.write.parquet(s"$dir/db1/emps.parquet")
+    dir
+  }
+
+  private def queryTag(tags: Seq[String]): Option[String] =
+    tags.find(_.startsWith("graft-query-"))
 
   test("full lifecycle: NL in, envelope out, per-phase timings") {
     val r = svc.query(QueryRequest("earning more than 60000")).toOption.get
@@ -104,9 +145,10 @@ class QueryServiceSpec extends SparkSpec {
   test("DB-phase timeout: 408 within budget + 1 s, its jobs cancelled") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
     import org.apache.spark.sql.functions.{col, udf}
-    // no row passes `salary > 5`, so the collect scans every partition:
-    // 80 x 10 rows x 50 ms, ~10 s on 4 cores; a cancelled task stops at
-    // its partition's end, at most 0.5 s later
+    // no row passes `salary > 5`, so the one-scan job (cancelled at the
+    // 3 s count deadline) and then its rows-only fallback both scan every
+    // partition: 80 x 10 rows x 50 ms, ~10 s on 4 cores; a cancelled task
+    // stops at its partition's end, at most 0.5 s later
     val slow = udf { (x: Long) => Thread.sleep(50); x * 0 }
     val c = new Catalog(spark, "/nonexistent-root")
     c.register("testdb", "slow")(
@@ -133,6 +175,88 @@ class QueryServiceSpec extends SparkSpec {
       Thread.sleep(1000)
       assert(running.isEmpty, s"graft-query jobs still running: $running")
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a filtered request on an unchanged parquet collection is one job") {
+    val s = new QueryService(spark, new Catalog(spark, parquetRoot()))
+    val req = QueryRequest("earning more than 60000", db = "db1",
+      collection = "emps")
+    assert(s.query(req).isRight) // warm-up: infers and caches the schema
+    var r: Either[QueryError, QuerySuccess] = null
+    val jobs = jobsDuring { r = s.query(req) }
+    assert(r.toOption.exists(ok => ok.totalMatching == 3 && !ok.countDegraded), r)
+    assert(jobs.size == 1, jobs)
+    assert(queryTag(jobs.head._2).nonEmpty, jobs)
+  }
+
+  test("two concurrent requests get disjoint graft-query job sets") {
+    val s = new QueryService(spark, new Catalog(spark, parquetRoot()))
+    val reqs = Seq("earning more than 60000", "Show employees whose age is over 40")
+      .map(QueryRequest(_, db = "db1", collection = "emps"))
+    reqs.foreach(q => assert(s.query(q).isRight)) // warm-up
+    val out = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]()
+    val jobs = jobsDuring {
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val threads = reqs.map { q =>
+        val t = new Thread(() => {
+          start.await()
+          out.add(s.query(q).isRight): Unit
+        })
+        t.start()
+        t
+      }
+      start.countDown()
+      threads.foreach(_.join())
+    }
+    assert(out.asScala.toSeq == Seq(true, true))
+    assert(jobs.forall(_._2.count(_.startsWith("graft-query-")) == 1), jobs)
+    val groups = jobs.groupBy(j => queryTag(j._2)).map { case (t, js) => t -> js.map(_._1).toSet }
+    assert(groups.size == 2, jobs)
+    assert(groups.values.forall(_.size == 1), jobs)
+    val Seq(a, b) = groups.values.toSeq
+    assert((a & b).isEmpty, jobs)
+  }
+
+  test("catalog: Hive-partitioned parquet reads like spark.read.parquet, " +
+      "cached or fresh; replaced part files show at the next resolve") {
+    val dir = Files.createTempDirectory("graft-hive").toString
+    val path = s"$dir/db1/emps.parquet"
+    employees.coalesce(1).write.partitionBy("department").parquet(path)
+    val c = new Catalog(spark, dir)
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    def sameAsFresh(df: DataFrame): Unit = {
+      val fresh = spark.read.parquet(path)
+      assert(df.schema == fresh.schema)
+      assert(rows(df) == rows(fresh))
+    }
+    sameAsFresh(c.resolve("db1", "emps")) // infers
+    var cached: DataFrame = null
+    assert(jobsDuring { cached = c.resolve("db1", "emps") }.isEmpty)
+    sameAsFresh(cached)
+    assert(cached.columns.last == "department")
+
+    // replace every partition's part file with one that adds `bonus` and
+    // one more row; the directories and file count stay as they were
+    val staged = s"$dir/staged"
+    employees.union(employees.limit(1)).withColumn("bonus", lit(1.5))
+      .coalesce(1).write.partitionBy("department").parquet(staged)
+    val later = java.nio.file.attribute.FileTime.fromMillis(
+      System.currentTimeMillis() + 5000) // defeat mtime granularity
+    def parts(root: String) = Files.walk(Paths.get(root)).iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet")).toSeq
+    def crc(p: java.nio.file.Path) = p.resolveSibling(s".${p.getFileName}.crc")
+    for (old <- parts(path)) {
+      val partDir = old.getParent.getFileName.toString
+      val Seq(next) = parts(s"$staged/$partDir")
+      Files.delete(old)
+      Files.move(crc(next), crc(old), StandardCopyOption.REPLACE_EXISTING)
+      Files.setLastModifiedTime(Files.move(next, old), later): Unit
+    }
+    val after = c.resolve("db1", "emps")
+    assert(after.columns.contains("bonus"))
+    assert(after.count() == employees.count() + 1)
+    sameAsFresh(after)
+    assert(after.filter(col("bonus") === 1.5).count() == employees.count() + 1)
   }
 
   test("query history: every call appends, stats match the UI arithmetic") {

@@ -5,7 +5,8 @@
 # round 15 did), so this script refuses in under a minute instead.
 #
 #   tools/pre_snapshot.sh            # compile + test-compile + perfbench
-#                                    # harness compile + smoke gate
+#                                    # harness compile + smoke gate +
+#                                    # one short checked serve_point run
 #   SMOKE_SF=/root/testdata/sf0.01 tools/pre_snapshot.sh   # bigger smoke
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -31,5 +32,14 @@ SPARK_GRAFT_CPUS=8 SPARK_GRAFT_ONLY="$SMOKE_QUERIES" \
 
 echo "== pre_snapshot: oracle compare =="
 python3 tools/check_oracle.py "$SMOKE_SF" "$OUT"
+
+# every served answer comes from Catalog + Executor.exec; the benchmark's
+# serve workload checks each response against DuckDB end to end
+echo "== pre_snapshot: perfbench serve_point (seed 1, 5 s) =="
+SERVE_LAST=$(python3 perfbench/run.py --workload serve_point --seed 1 --seconds 5 | tail -n 1)
+if ! python3 -c 'import json, sys; sys.exit(0 if json.loads(sys.argv[1]).get("correct") is True else 1)' "$SERVE_LAST"; then
+  echo "pre_snapshot: perfbench serve_point answered incorrectly: ${SERVE_LAST:0:400}" >&2
+  exit 1
+fi
 
 echo "== pre_snapshot: OK — safe to snapshot =="

@@ -12,8 +12,9 @@ object GraftSession {
   def conf(cores: Int): Seq[(String, String)] = Seq(
     "spark.sql.shuffle.partitions" -> cores.toString,
     "spark.sql.session.timeZone" -> "UTC",
-    // empty-filter count() answered from parquet footers — the analog of
-    // the reference's estimated_document_count (No_Sql.py:416)
+    // aggregate pushdown for DSv2 parquet scans (the tx catalog); the V1
+    // reads of Catalog's parquet collections ignore it, so the served
+    // empty-filter count still scans (plans/serve/filtered_request_after.txt)
     "spark.sql.parquet.aggregatePushdown" -> "true",
     // events.ts is TIMESTAMP(NANOS); read as long, converted in Tables.events
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",

@@ -2,6 +2,7 @@ package graft.api
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
+import com.fasterxml.jackson.databind.util.RawValue
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import java.net.InetSocketAddress
@@ -190,11 +191,11 @@ final class HttpApi(service: QueryService, port: Int = 0) {
       case Right(ok) =>
         val out = mapper.createObjectNode()
         out.put("ok", true)
-        out.set[ObjectNode]("mongo_query", mapper.readTree(ok.mongoQuery))
+        // the query and the rows are JSON already: spliced in as written
+        out.putRawValue("mongo_query", new RawValue(ok.mongoQuery))
         out.put("total_matching", ok.totalMatching)
-        val rows = mapper.createArrayNode()
-        ok.results.foreach(r => rows.add(mapper.readTree(r)): Unit)
-        out.set[ArrayNode]("results", rows)
+        val rows = out.putArray("results")
+        ok.results.foreach(r => rows.addRawValue(new RawValue(r)): Unit)
         out.put("result_count", ok.resultCount)
         out.put("execution_time", ok.executionTime)
         out.put("query_generation_time", ok.queryGenerationTime)

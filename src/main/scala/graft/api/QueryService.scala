@@ -29,13 +29,7 @@ final class QueryService(spark: SparkSession, catalog: Catalog) {
     * arithmetic as the UI's summary metrics (main.py:263-268). Bounded to
     * the newest [[QueryService.HistoryCap]] entries so a long-lived service
     * can't grow driver memory without limit. */
-  private val historyBuf =
-    new java.util.concurrent.ConcurrentLinkedDeque[HistoryEntry]()
-  // ConcurrentLinkedDeque.size() walks the whole deque (O(n)); tracking the
-  // count separately keeps the per-request trim O(1). Mutations hold
-  // historyLock so clear() can't interleave with an append and leave the
-  // counter permanently drifted from the deque (reads stay lock-free).
-  private val historySize = new java.util.concurrent.atomic.AtomicInteger(0)
+  private val historyBuf = new java.util.ArrayDeque[HistoryEntry]()
   private val historyLock = new Object
 
   /** POST /query (app_server.py:202-278). */
@@ -65,21 +59,18 @@ final class QueryService(spark: SparkSession, catalog: Catalog) {
     }
     historyLock.synchronized {
       historyBuf.addLast(entry)
-      if (historySize.incrementAndGet() > HistoryCap &&
-          historyBuf.pollFirst() != null) historySize.decrementAndGet(): Unit
+      if (historyBuf.size > HistoryCap) historyBuf.pollFirst(): Unit
     }
     out
   }
 
   /** Accumulated request history, oldest first (main.py render table). */
-  def history: Seq[HistoryEntry] = {
-    import scala.jdk.CollectionConverters._
-    historyBuf.iterator().asScala.toSeq
+  def history: Seq[HistoryEntry] = historyLock.synchronized {
+    historyBuf.toArray(new Array[HistoryEntry](0)).toSeq
   }
 
   def clearHistory(): Unit = historyLock.synchronized { // main.py:275
     historyBuf.clear()
-    historySize.set(0)
   }
 
   /** The UI's summary metrics (main.py:263-268): total queries, success
@@ -109,15 +100,16 @@ final class QueryService(spark: SparkSession, catalog: Catalog) {
       val spec = gen()
       val genSec = secs(genStart)
       if (genSec > genBudget)
-        throw new GenTimeout(
+        throw new Timeout(
           f"Query generation timed out after $genBudget%.1f seconds")
 
       // Stage 2: DB phase gets the remainder − 1 s buffer, floor 2 s
       // (app_server.py:229-232). The phase runs under Executor's
       // tag + flag + repeating-reaper harness on this thread, so a timeout
-      // CANCELS the underlying Spark jobs (the nested count's too) rather
-      // than leaving a zombie scan/collect burning executors after the
-      // client's 408; the 408 arrives when the in-flight job is cancelled.
+      // CANCELS the underlying Spark jobs (the count scan's too: it is the
+      // request's one deadline) rather than leaving a zombie scan burning
+      // executors after the client's 408; the 408 arrives when the
+      // in-flight job is cancelled.
       val remaining = math.max(req.timeoutSec - genSec - 1.0, 2.0)
       val dbStart = System.nanoTime()
       // resolve() runs INSIDE the budgeted, cancellable phase: first
@@ -127,10 +119,10 @@ final class QueryService(spark: SparkSession, catalog: Catalog) {
       // the client's timeout simply would not be honored
       val result = Executor.runCancellable(spark.sparkContext, "graft-query",
           (remaining * 1000).toLong) { expired =>
-        if (expired.get()) throw new DbTimeout("cancelled before start")
+        if (expired.get()) throw new Timeout("cancelled before start")
         val df = catalog.resolve(req.db, req.collection)
         Executor.exec(df, spec, req.limit)
-      }.getOrElse(throw new DbTimeout(
+      }.getOrElse(throw new Timeout(
         f"Database query timed out after $remaining%.1f seconds"))
       val dbSec = secs(dbStart)
 
@@ -146,9 +138,7 @@ final class QueryService(spark: SparkSession, catalog: Catalog) {
         countDegraded = result.countDegraded))
     } catch {
       // typed error envelope (app_server.py:292-332)
-      case e: GenTimeout => Left(QueryError(e.getMessage, "TIMEOUT_ERROR", 408,
-        Some("Try increasing the timeout value or simplifying the query")))
-      case e: DbTimeout => Left(QueryError(e.getMessage, "TIMEOUT_ERROR", 408,
+      case e: Timeout => Left(QueryError(e.getMessage, "TIMEOUT_ERROR", 408,
         Some("Try increasing the timeout value or simplifying the query")))
       case e: UnsupportedQueryException =>
         Left(QueryError(e.getMessage, "HTTP_ERROR", 400, None))
@@ -253,6 +243,6 @@ object QueryService {
 
   private def round3(d: Double): Double = math.rint(d * 1000) / 1000
 
-  private final class GenTimeout(msg: String) extends RuntimeException(msg)
-  private final class DbTimeout(msg: String) extends RuntimeException(msg)
+  /** Either phase ran out of its budget → 408 TIMEOUT_ERROR. */
+  private final class Timeout(msg: String) extends RuntimeException(msg)
 }

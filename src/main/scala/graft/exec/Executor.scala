@@ -21,15 +21,17 @@ import scala.util.control.NonFatal
   * Plan-shape notes (SURVEY.md §4): the filter is one Column conjunction →
   * Catalyst pushes it into the Parquet scan (`PushedFilters`); the
   * projection is a plain `select` → column pruning reaches `ReadSchema`.
-  * [[exec]] runs no `limit` operator: a filtered request is ONE job over
-  * the sanitized rows that returns both the first `k` rows and the total
-  * (the reference's `find(...).limit(n)` + `count_documents`,
-  * No_Sql.py:404-416), with no shuffle. The empty-filter count
-  * (`estimated_document_count`, No_Sql.py:416) is a plain `count()`:
-  * Parquet reads take Spark's V1 file source (`useV1SourceList`), where
+  * [[exec]] runs no `limit` operator and no shuffle: a filtered request is
+  * ONE job over the sanitized rows that returns both the first `k` rows
+  * and the total (the reference's `find(...).limit(n)` + `count_documents`,
+  * No_Sql.py:404-416), its count budget a wall-clock bound each task
+  * checks. The empty-filter count (`estimated_document_count`,
+  * No_Sql.py:416) is a second scan, over `df.select()`: Parquet reads take
+  * Spark's V1 file source (`useV1SourceList`), where
   * `spark.sql.parquet.aggregatePushdown` does not apply, so it plans
   * `FileScan parquet []` with `ReadSchema: struct<>` — no column is read,
-  * but it is still one job over every file.
+  * but it is still one job over every file. Every deadline beyond the
+  * count budget is the caller's ([[runCancellable]]).
   */
 object Executor {
 
@@ -84,14 +86,13 @@ object Executor {
   /** Timed, cancellable phase run INLINE on the calling thread.
     *
     * Cancellation is job-TAG based: the tag goes on the caller's thread, so
-    * every Spark job `body` submits carries it, and a nested phase (the
-    * count inside the service's DB phase) inherits the outer tag by
-    * construction. At the deadline, and every 200 ms after it until `body`
-    * returns, the reaper sets `expired` and cancels the tag's jobs — a job
-    * submitted after a flag check that raced the deadline is still reaped
-    * by the next tick. `body` should check `expired` before starting work.
-    * Returns None once the deadline has passed, whether `body` returned or
-    * failed (a cancelled job surfaces as an exception). */
+    * every Spark job `body` submits carries it. At the deadline, and every
+    * 200 ms after it until `body` returns, the reaper sets `expired` and
+    * cancels the tag's jobs — a job submitted after a flag check that raced
+    * the deadline is still reaped by the next tick. `body` should check
+    * `expired` before starting work. Returns None once the deadline has
+    * passed, whether `body` returned or failed (a cancelled job surfaces as
+    * an exception). */
   private[graft] def runCancellable[T](sc: SparkContext, tagPrefix: String,
       timeoutMs: Long)(body: AtomicBoolean => T): Option[T] = {
     val tag = s"$tagPrefix-${java.util.UUID.randomUUID()}"
@@ -112,83 +113,67 @@ object Executor {
     }
   }
 
-  /** `body` under the `graft-count` deadline ([[runCancellable]]): None
-    * when it ran out of time or failed in any way — the reference catches
-    * every count exception, not just timeouts (No_Sql.py:418-421). */
-  private def countPhase[T](sc: SparkContext, timeoutMs: Long)(
-      body: => T): Option[T] =
-    runCancellable(sc, "graft-count", timeoutMs) { expired =>
-      if (expired.get()) None // timeout already fired: don't submit
-      else try Some(body)
-      catch { case NonFatal(_) => None }
-    }.flatten
-
-  /** Count with the reference's degradation policy: a count that exceeds
-    * `timeoutMs` or fails falls back to `fallback` (the reference's
-    * `len(results)`); the results themselves were already collected, so a
-    * transient count failure must not fail the query. */
-  def countWithTimeout(df: DataFrame, timeoutMs: Long,
-                       fallback: => Long): (Long, Boolean) =
-    countPhase(df.sparkSession.sparkContext, timeoutMs)(df.count()) match {
-      case Some(n) => (n, false)
-      case None    => (fallback, true)
-    }
-
   /** One job, no shuffle, over every partition of `rows`: each task
-    * JSON-encodes its first `k` rows with `Dataset.toJSON`'s encoder and,
-    * when `countAll`, keeps counting to its partition's end (otherwise it
-    * stops after `k`). The caller gets the first `k` rows in partition
+    * JSON-encodes its first `k` rows with `Dataset.toJSON`'s encoder, then
+    * keeps counting while the wall clock is before `countUntil` (epoch ms;
+    * 0 stops after `k`). The caller gets the first `k` rows in partition
     * order — the rows `rows.toJSON.collect().take(k)` gives — and the
-    * summed count, exact only when `countAll`. */
+    * total, known only when every task reached its partition's end. The
+    * clock is read between rows, so a stretch of rows the filter drops
+    * runs to its next match or its partition's end before the next check. */
   private def scan(rows: DataFrame, k: Int,
-                   countAll: Boolean): (Seq[String], Long) = {
+                   countUntil: Long): (Seq[String], Option[Long]) = {
     val schema = rows.schema
     val tz = rows.sparkSession.conf.get("spark.sql.session.timeZone")
     val parts = rows.sparkSession.sparkContext.runJob(
       rows.queryExecution.toRdd,
       (ctx: TaskContext, it: Iterator[InternalRow]) => {
         // checks the kill flag at every row it passes on, so a cancelled
-        // count's tasks stop early instead of running to their partition's
-        // end and holding cores the fallback scan needs
+        // request's tasks stop early instead of running to their
+        // partition's end
         val rowsIn = new InterruptibleIterator(ctx, it)
-        val json = GraftBridge.jsonEncoder(schema, tz)
+        lazy val json = GraftBridge.jsonEncoder(schema, tz)
         val first = Array.newBuilder[String]
         var n = 0L
-        while ((countAll || n < k) && rowsIn.hasNext) {
-          val row = rowsIn.next()
-          if (n < k) first += json(row)
-          n += 1
+        var more = true
+        while (more && (n < k || System.currentTimeMillis() < countUntil)) {
+          more = rowsIn.hasNext
+          if (more) {
+            val row = rowsIn.next()
+            if (n < k) first += json(row)
+            n += 1
+          }
         }
-        (first.result(), n)
+        (first.result(), n, !more)
       })
-    (parts.iterator.flatMap(_._1).take(k).toSeq, parts.iterator.map(_._2).sum)
+    (parts.iterator.flatMap(_._1).take(k).toSeq,
+      if (parts.forall(_._3)) Some(parts.iterator.map(_._2).sum) else None)
   }
 
   /** Full reference-parity execution: the first `k` sanitized rows like
     * the reference's `list(cursor)` (No_Sql.py:405) plus the total over
-    * the UNlimited filter (No_Sql.py:414-416). A filtered request is one
-    * [[scan]] under the count deadline that yields both; on expiry or any
-    * failure a rows-only scan answers and the total degrades to
-    * `results.length` (No_Sql.py:419-421). An empty filter takes the
-    * rows-only scan and the metadata-count path. */
+    * the UNlimited filter (No_Sql.py:414-416), with the count held to
+    * `countTimeoutMs` of wall clock. A filtered request is one [[scan]]
+    * that yields both; an empty filter takes a rows-only scan and then a
+    * count scan over no column (`estimated_document_count`). A count that
+    * runs out of time, or a scan that fails — the reference catches every
+    * count exception — degrades the total to `results.length`
+    * (No_Sql.py:419-421); a failed filtered scan is answered by a
+    * rows-only scan. */
   def exec(df: DataFrame, spec: QuerySpec, limit: Int = DefaultLimit,
            countTimeoutMs: Long = CountTimeoutMs): QueryResult = {
     val k = clampLimit(spec.limit.getOrElse(limit))
     val rows = Sanitizer.sanitize(plan(df, spec.copy(limit = None)))
-    def firstRows = scan(rows, k, countAll = false)._1
-    val (results, total, degraded) =
+    def countUntil = System.currentTimeMillis() + countTimeoutMs
+    val (results, total) =
       if (spec.filter == FilterExpr.True) {
-        val results = firstRows
-        val (n, degraded) =
-          countWithTimeout(df, countTimeoutMs, results.length.toLong)
-        (results, n, degraded)
-      } else countPhase(df.sparkSession.sparkContext, countTimeoutMs)(
-          scan(rows, k, countAll = true)) match {
-        case Some((results, n)) => (results, n, false)
-        case None =>
-          val results = firstRows
-          (results, results.length.toLong, true)
-      }
-    QueryResult(total, results, MongoJson.toJson(spec), degraded)
+        val results = scan(rows, k, 0L)._1
+        (results, try scan(df.select(), 0, countUntil)._2
+                  catch { case NonFatal(_) => None })
+      } else
+        try scan(rows, k, countUntil)
+        catch { case NonFatal(_) => (scan(rows, k, 0L)._1, None) }
+    QueryResult(total.getOrElse(results.length.toLong), results,
+      MongoJson.toJson(spec), countDegraded = total.isEmpty)
   }
 }

@@ -14,6 +14,7 @@ import scala.jdk.CollectionConverters._
 object MongoJson {
 
   private val mapper = new ObjectMapper()
+  private val nodes = mapper.getNodeFactory
 
   // ---------------------------------------------------------------------
   // Repair cascade (No_Sql.py:269-302)
@@ -203,14 +204,7 @@ object MongoJson {
     case FilterExpr.Lte(fl, v)  => putOp(into, fl, "$lte", v)
     case FilterExpr.In(fl, vs) =>
       val arr = fieldObj(into, fl).putArray("$in")
-      vs.foreach {
-        case s: String => arr.add(s)
-        case d: Double => addNum(arr, d)
-        case bi: BigInt => arr.add(bi.bigInteger): Unit
-        case b: Boolean => arr.add(b)
-        case null => arr.addNull()
-        case other => arr.add(other.toString)
-      }
+      vs.foreach(v => arr.add(literal(v)): Unit)
     case FilterExpr.Regex(fl, pat, ci) =>
       val o = fieldObj(into, fl)
       o.put("$regex", pat)
@@ -231,49 +225,32 @@ object MongoJson {
     }
   }
 
-  private def addNum(arr: ArrayNode, d: Double): Unit =
-    if (d == d.toLong.toDouble) arr.add(d.toLong) else arr.add(d)
+  /** One literal as JSON: integral doubles print as integers, BigInt
+    * (NL-compiler literals stay arbitrary-precision ints) exactly. */
+  private def literal(v: Any): JsonNode = v match {
+    case s: String  => nodes.textNode(s)
+    case d: Double  =>
+      if (d == d.toLong.toDouble) nodes.numberNode(d.toLong)
+      else nodes.numberNode(d)
+    case i: Int     => nodes.numberNode(i)
+    case l: Long    => nodes.numberNode(l)
+    case bi: BigInt => nodes.numberNode(bi.bigInteger)
+    case b: Boolean => nodes.booleanNode(b)
+    case null       => nodes.nullNode()
+    case other      => nodes.textNode(other.toString)
+  }
 
   private def putScalar(into: ObjectNode, field: String, v: Any): Unit = {
     // If the field already carries an operator object (e.g. `{$gt: 0}` before
     // an Eq on the same field), nest the equality as `$eq` instead of
     // replacing the object.
     val existing = into.get(field)
-    if (existing != null && existing.isObject) {
-      putOp(into, field, "$eq", v); return
-    }
-    v match {
-      case s: String  => into.put(field, s)
-      case d: Double  =>
-        if (d == d.toLong.toDouble) into.put(field, d.toLong)
-        else into.put(field, d)
-      case i: Int     => into.put(field, i)
-      case l: Long    => into.put(field, l)
-      case bi: BigInt => // NL-compiler literals stay arbitrary-precision ints
-        into.set[JsonNode](field, com.fasterxml.jackson.databind.node
-          .BigIntegerNode.valueOf(bi.bigInteger))
-        ()
-      case b: Boolean => into.put(field, b)
-      case null       => into.putNull(field)
-      case other      => into.put(field, other.toString)
-    }
+    if (existing != null && existing.isObject) putOp(into, field, "$eq", v)
+    else { into.set[JsonNode](field, literal(v)); () }
   }
 
   private def putOp(into: ObjectNode, field: String, op: String, v: Any): Unit = {
-    val o = fieldObj(into, field)
-    v match {
-      case s: String  => o.put(op, s)
-      case d: Double  =>
-        if (d == d.toLong.toDouble) o.put(op, d.toLong) else o.put(op, d)
-      case i: Int     => o.put(op, i)
-      case l: Long    => o.put(op, l)
-      case bi: BigInt =>
-        o.set[JsonNode](op, com.fasterxml.jackson.databind.node
-          .BigIntegerNode.valueOf(bi.bigInteger))
-        ()
-      case b: Boolean => o.put(op, b)
-      case null       => o.putNull(op)
-      case other      => o.put(op, other.toString)
-    }
+    fieldObj(into, field).set[JsonNode](op, literal(v))
+    ()
   }
 }

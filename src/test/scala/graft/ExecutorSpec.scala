@@ -83,13 +83,39 @@ class ExecutorSpec extends SparkSpec {
     assert(r.results.length == 3 && r.totalMatching == 3)
   }
 
-  test("count degradation: timeout -> fallback value + degraded flag") {
+  test("exec: a filtered count past its deadline is one job, one task per partition") {
+    val slow = udf { (x: Long) => Thread.sleep(20); x }
+    val df = spark.range(0, 400, 1, 4).select(slow(col("id")).as("salary"))
+    var r: Executor.QueryResult = null
+    val jobs = jobsDuring {
+      r = Executor.exec(df, QuerySpec(FilterExpr.Gte("salary", BigInt(0))),
+        limit = 3, countTimeoutMs = 300L)
+    }
+    assert(r.countDegraded && r.results.length == 3 && r.totalMatching == 3)
+    assert(jobs.map(_.stageTasks) == Seq(Seq(4)), jobs)
+  }
+
+  test("exec: a row that throws past the first k degrades to k rows") {
+    // each partition's rows from its fifth on throw; the first three of
+    // every partition are fine, so a rows-only scan can still answer
+    val bad = udf { (x: Long) =>
+      if (x % 10 >= 4) throw new IllegalStateException(s"row $x"); x }
+    val df = spark.range(0, 40, 1, 4).select(bad(col("id")).as("salary"))
+    val r = Executor.exec(df, QuerySpec(FilterExpr.Gte("salary", BigInt(0))),
+      limit = 3)
+    assert(r.countDegraded)
+    assert(r.results == Seq(0, 1, 2).map(i => s"""{"salary":$i}"""))
+    assert(r.totalMatching == 3)
+  }
+
+  test("exec: an empty-filter count past its budget degrades; a fast one is exact") {
     val slow = spark.range(500000000L).selectExpr("id as x").filter("x % 3 = 1")
-    val (n, degraded) = Executor.countWithTimeout(slow.toDF, 30L, 7L)
-    assert(degraded && n == 7L)
-    val fast = spark.range(10).toDF
-    val (n2, d2) = Executor.countWithTimeout(fast, 30000L, -1L)
-    assert(!d2 && n2 == 10L)
+    val r = Executor.exec(slow.toDF, QuerySpec(), limit = 7, countTimeoutMs = 30L)
+    assert(r.countDegraded && r.results.length == 7 && r.totalMatching == 7)
+    val fast = Executor.exec(spark.range(10).toDF, QuerySpec(), limit = 3,
+      countTimeoutMs = 30000L)
+    assert(!fast.countDegraded && fast.results.length == 3 &&
+      fast.totalMatching == 10)
   }
 
   test("runCancellable: timeout -> None + cancelled flag; success -> Some") {
@@ -108,18 +134,20 @@ class ExecutorSpec extends SparkSpec {
     assert(!sc.getJobTags().exists(_.startsWith("graft-test")))
   }
 
-  test("runCancellable: the outer deadline reaps a nested count's jobs") {
+  test("runCancellable: the outer deadline reaps an exec whose count budget is 600 s") {
     val sc = spark.sparkContext
     val slow = spark.range(20000000000L).selectExpr("id as x")
       .filter("x % 3 = 1").toDF
-    val t0 = System.nanoTime()
-    val out = Executor.runCancellable(sc, "graft-test", 300L) { _ =>
-      Executor.countWithTimeout(slow, 600000L, -1L)
+    for (spec <- Seq(QuerySpec(), QuerySpec(FilterExpr.Gte("x", BigInt(0))))) {
+      val t0 = System.nanoTime()
+      val out = Executor.runCancellable(sc, "graft-test", 300L) { _ =>
+        Executor.exec(slow, spec, countTimeoutMs = 600000L)
+      }
+      val sec = (System.nanoTime() - t0) / 1e9
+      assert(out.isEmpty, spec)
+      assert(sec < 5.0, s"$spec took $sec s")
+      assert(!sc.getJobTags().exists(_.startsWith("graft-")))
     }
-    val sec = (System.nanoTime() - t0) / 1e9
-    assert(out.isEmpty)
-    assert(sec < 5.0, s"took $sec s")
-    assert(!sc.getJobTags().exists(_.startsWith("graft-")))
   }
 
   test("exec parses full find-spec JSON through the same path as the driver") {

@@ -162,4 +162,25 @@ class HttpApiSpec extends SparkSpec {
       assert(rows.get(0).get("query").asText() == input.take(1024))
     } finally api2.stop()
   }
+
+  test("POST /query/json: results are the encoder's row strings, byte for byte") {
+    // decimals with trailing zeros (top-level ones become strings, nested
+    // ones stay JSON numbers), timestamps, a map and a struct
+    val typed = spark.range(0, 6, 1, 2).selectExpr(
+      "id",
+      "CAST(id * 1.1 AS DECIMAL(6, 2)) AS dec",
+      "timestamp_seconds(id * 86399) AS ts",
+      "map('k', CAST(id AS DECIMAL(4, 2)), 'j', CAST(-id / 4 AS DECIMAL(4, 2))) AS m",
+      "named_struct('q', CAST(id * 10 AS DECIMAL(5, 1)), 't', timestamp_seconds(id), 'x', id / 3.0D) AS st")
+    catalog.register("testdb", "typed")(typed)
+    val r = post("/query/json", """{"input": "{\"filter\": {\"id\": {\"$gte\": 1}}}",
+      | "collection": "typed", "limit": 4}""".stripMargin)
+    assert(r.statusCode() == 200, r.body().take(200))
+    val spec = graft.ir.MongoJson.parse("""{"filter": {"id": {"$gte": 1}}}""")
+    val expected = graft.exec.Sanitizer.sanitize(graft.exec.Executor.plan(typed, spec))
+      .toJSON.collect().take(4)
+    assert(expected.length == 4 && expected.exists(_.contains(".00")))
+    assert(r.body().contains(expected.mkString(""""results":[""", ",", "]")),
+      r.body())
+  }
 }

@@ -115,4 +115,16 @@ class MongoJsonSpec extends AnyFunSuite {
         projection = Seq("name"))) ==
       """{"filter":{"d":{"$regex":"eng","$options":"i"}},"projection":{"name":1}}""")
   }
+
+  test("toJson writes every literal alike: in an $in list, after $ne, as a bare equality") {
+    val vals: Seq[Any] = Seq(1, 2L, BigInt(3), 4.0, 4.5, "s", true, null)
+    assert(MongoJson.toJson(QuerySpec(FilterExpr.In("x", vals))) ==
+      """{"filter":{"x":{"$in":[1,2,3,4,4.5,"s",true,null]}},"projection":{}}""")
+    for ((v, json) <- vals.zip(Seq("1", "2", "3", "4", "4.5", "\"s\"", "true", "null"))) {
+      assert(MongoJson.toJson(QuerySpec(FilterExpr.Eq("x", v))) ==
+        s"""{"filter":{"x":$json},"projection":{}}""")
+      assert(MongoJson.toJson(QuerySpec(FilterExpr.Ne("x", v))) ==
+        s"""{"filter":{"x":{"$$ne":$json}},"projection":{}}""")
+    }
+  }
 }

@@ -3,7 +3,6 @@ package graft
 import graft.api.QueryService
 import graft.api.QueryService._
 import graft.sources.Catalog
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, lit}
 
@@ -20,31 +19,6 @@ class QueryServiceSpec extends SparkSpec {
     c
   }
   private lazy val svc = new QueryService(spark, catalog)
-
-  /** (job id, tags) of every Spark job started while `body` ran. The
-    * listener bus is asynchronous but ordered, so once a sentinel job
-    * submitted after `body` is seen, every earlier job has been too. */
-  private def jobsDuring(body: => Unit): Seq[(Int, Seq[String])] = {
-    val sc = spark.sparkContext
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Seq[String])]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add((e.jobId, Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.tags")))
-          .map(_.split(",").toSeq).getOrElse(Nil))): Unit
-    }
-    val sentinel = s"sentinel-${java.util.UUID.randomUUID()}"
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.addJobTag(sentinel)
-      try spark.range(1).count() finally sc.removeJobTag(sentinel)
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!seen.asScala.exists(_._2.contains(sentinel)) &&
-             System.nanoTime() < deadline) Thread.sleep(10)
-    } finally sc.removeSparkListener(listener)
-    seen.asScala.filterNot(_._2.contains(sentinel)).toSeq
-  }
 
   /** A parquet collection `db1.emps` (employees) under a fresh root. */
   private def parquetRoot(): String = {
@@ -145,10 +119,12 @@ class QueryServiceSpec extends SparkSpec {
   test("DB-phase timeout: 408 within budget + 1 s, its jobs cancelled") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
     import org.apache.spark.sql.functions.{col, udf}
-    // no row passes `salary > 5`, so the one-scan job (cancelled at the
-    // 3 s count deadline) and then its rows-only fallback both scan every
-    // partition: 80 x 10 rows x 50 ms, ~10 s on 4 cores; a cancelled task
-    // stops at its partition's end, at most 0.5 s later
+    // no row passes `salary > 5`, so the one scan reads every partition
+    // (its count budget is checked between matching rows, and none comes):
+    // 80 x 10 rows x 50 ms, ~10 s on 4 cores. The DB deadline cancels it;
+    // exec then starts its rows-only scan for a failed scan, which the
+    // reaper cancels at its next tick. A cancelled task stops at its
+    // partition's end, at most 0.5 s later
     val slow = udf { (x: Long) => Thread.sleep(50); x * 0 }
     val c = new Catalog(spark, "/nonexistent-root")
     c.register("testdb", "slow")(
@@ -186,7 +162,21 @@ class QueryServiceSpec extends SparkSpec {
     val jobs = jobsDuring { r = s.query(req) }
     assert(r.toOption.exists(ok => ok.totalMatching == 3 && !ok.countDegraded), r)
     assert(jobs.size == 1, jobs)
-    assert(queryTag(jobs.head._2).nonEmpty, jobs)
+    assert(queryTag(jobs.head.tags).nonEmpty, jobs)
+  }
+
+  test("an empty-filter request is two jobs with no shuffle") {
+    val s = new QueryService(spark, new Catalog(spark, parquetRoot()))
+    val req = QueryRequest("Find all employees", db = "db1", collection = "emps")
+    assert(s.query(req).isRight) // warm-up: infers and caches the schema
+    var r: Either[QueryError, QuerySuccess] = null
+    val jobs = jobsDuring { r = s.query(req) }
+    assert(r.toOption.exists(ok => ok.totalMatching == 5 && ok.resultCount == 5 &&
+      !ok.countDegraded), r)
+    // the rows scan and the count scan, each a single stage
+    assert(jobs.size == 2, jobs)
+    assert(jobs.forall(_.stageTasks.size == 1), jobs)
+    assert(jobs.forall(j => queryTag(j.tags).nonEmpty), jobs)
   }
 
   test("two concurrent requests get disjoint graft-query job sets") {
@@ -209,8 +199,8 @@ class QueryServiceSpec extends SparkSpec {
       threads.foreach(_.join())
     }
     assert(out.asScala.toSeq == Seq(true, true))
-    assert(jobs.forall(_._2.count(_.startsWith("graft-query-")) == 1), jobs)
-    val groups = jobs.groupBy(j => queryTag(j._2)).map { case (t, js) => t -> js.map(_._1).toSet }
+    assert(jobs.forall(_.tags.count(_.startsWith("graft-query-")) == 1), jobs)
+    val groups = jobs.groupBy(j => queryTag(j.tags)).map { case (t, js) => t -> js.map(_.id).toSet }
     assert(groups.size == 2, jobs)
     assert(groups.values.forall(_.size == 1), jobs)
     val Seq(a, b) = groups.values.toSeq

@@ -15,6 +15,10 @@ object TestSpark {
   }
 }
 
+/** One Spark job: its id, its job tags and the task count of each of its
+  * stages (a job that reads a shuffle has more than one stage). */
+final case class SeenJob(id: Int, tags: Seq[String], stageTasks: Seq[Int])
+
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   import scala.jdk.CollectionConverters._
@@ -47,4 +51,31 @@ abstract class SparkSpec extends AnyFunSuite {
 
   def ids(df: DataFrame): Seq[Long] =
     df.select("emp_id").collect().map(_.getLong(0)).sorted.toSeq
+
+  /** Every Spark job started while `body` ran. The listener bus is
+    * asynchronous but ordered, so once a sentinel job submitted after
+    * `body` is seen, every earlier job has been too. */
+  def jobsDuring(body: => Unit): Seq[SeenJob] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SeenJob]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(SeenJob(e.jobId, Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .map(_.split(",").toSeq).getOrElse(Nil),
+          e.stageInfos.map(_.numTasks))): Unit
+    }
+    val sentinel = s"sentinel-${java.util.UUID.randomUUID()}"
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.addJobTag(sentinel)
+      try spark.range(1).count() finally sc.removeJobTag(sentinel)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.asScala.exists(_.tags.contains(sentinel)) &&
+             System.nanoTime() < deadline) Thread.sleep(10)
+    } finally sc.removeSparkListener(listener)
+    seen.asScala.filterNot(_.tags.contains(sentinel)).toSeq
+  }
 }

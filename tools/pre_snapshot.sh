@@ -6,7 +6,8 @@
 #
 #   tools/pre_snapshot.sh            # compile + test-compile + perfbench
 #                                    # harness compile + smoke gate +
-#                                    # one short checked serve_point run
+#                                    # two short checked serve_point runs
+#                                    # (plain, and traced: 1 job/request)
 #   SMOKE_SF=/root/testdata/sf0.01 tools/pre_snapshot.sh   # bigger smoke
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -39,6 +40,15 @@ echo "== pre_snapshot: perfbench serve_point (seed 1, 5 s) =="
 SERVE_LAST=$(python3 perfbench/run.py --workload serve_point --seed 1 --seconds 5 | tail -n 1)
 if ! python3 -c 'import json, sys; sys.exit(0 if json.loads(sys.argv[1]).get("correct") is True else 1)' "$SERVE_LAST"; then
   echo "pre_snapshot: perfbench serve_point answered incorrectly: ${SERVE_LAST:0:400}" >&2
+  exit 1
+fi
+
+# the traced run attributes Spark jobs to requests: a served filtered
+# request is one scan, so the median request runs exactly one job
+echo "== pre_snapshot: perfbench serve_point traced (seed 1, 5 s) =="
+TRACE_LAST=$(python3 perfbench/run.py --workload serve_point --seed 1 --seconds 5 --trace 1 | tail -n 1)
+if ! python3 -c 'import json, sys; r = json.loads(sys.argv[1]); sys.exit(0 if r.get("correct") is True and r["metrics"]["spark.jobs_per_request"]["value"] == 1 else 1)' "$TRACE_LAST"; then
+  echo "pre_snapshot: traced serve_point is not correct or not one job per request: ${TRACE_LAST:0:400}" >&2
   exit 1
 fi
 

@@ -14,7 +14,7 @@ object GraftSession {
     "spark.sql.session.timeZone" -> "UTC",
     // aggregate pushdown for DSv2 parquet scans (the tx catalog); the V1
     // reads of Catalog's parquet collections ignore it, so the served
-    // empty-filter count still scans (plans/serve/filtered_request_after.txt)
+    // empty-filter count still scans (plans/serve/empty_filter_count_after.txt)
     "spark.sql.parquet.aggregatePushdown" -> "true",
     // events.ts is TIMESTAMP(NANOS); read as long, converted in Tables.events
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",

@@ -121,7 +121,7 @@ final class QueryService(spark: SparkSession, catalog: Catalog) {
           (remaining * 1000).toLong) { expired =>
         if (expired.get()) throw new Timeout("cancelled before start")
         val df = catalog.resolve(req.db, req.collection)
-        Executor.exec(df, spec, req.limit)
+        Executor.exec(df, spec, req.limit, expired = expired)
       }.getOrElse(throw new Timeout(
         f"Database query timed out after $remaining%.1f seconds"))
       val dbSec = secs(dbStart)

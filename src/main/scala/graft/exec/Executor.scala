@@ -159,9 +159,11 @@ object Executor {
     * runs out of time, or a scan that fails — the reference catches every
     * count exception — degrades the total to `results.length`
     * (No_Sql.py:419-421); a failed filtered scan is answered by a
-    * rows-only scan. */
+    * rows-only scan unless `expired`, the caller's [[runCancellable]]
+    * flag, is set. */
   def exec(df: DataFrame, spec: QuerySpec, limit: Int = DefaultLimit,
-           countTimeoutMs: Long = CountTimeoutMs): QueryResult = {
+           countTimeoutMs: Long = CountTimeoutMs,
+           expired: AtomicBoolean = new AtomicBoolean(false)): QueryResult = {
     val k = clampLimit(spec.limit.getOrElse(limit))
     val rows = Sanitizer.sanitize(plan(df, spec.copy(limit = None)))
     def countUntil = System.currentTimeMillis() + countTimeoutMs
@@ -172,7 +174,7 @@ object Executor {
                   catch { case NonFatal(_) => None })
       } else
         try scan(rows, k, countUntil)
-        catch { case NonFatal(_) => (scan(rows, k, 0L)._1, None) }
+        catch { case NonFatal(_) if !expired.get() => (scan(rows, k, 0L)._1, None) }
     QueryResult(total.getOrElse(results.length.toLong), results,
       MongoJson.toJson(spec), countDegraded = total.isEmpty)
   }

@@ -1,7 +1,10 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.types.StructType
+
+import scala.util.Try
 
 /** `(db, collection)` → DataFrame resolution — the Spark analog of the
   * reference's `client[db_name][coll_name]` addressing
@@ -27,17 +30,16 @@ final class Catalog(spark: SparkSession, root: String) {
   /** Schema inference costs real work on every format: json and csv scan
     * the data, parquet runs a footer-merge Spark job, orc reads footers.
     * Doing it on every resolve() (health() resolves too) would add that
-    * work to every request, so the first resolution
-    * memoizes the inferred schema per (db, collection) and later reads
-    * plan straight from it. The entry is keyed by a signature over the
-    * source's FILE LISTING — max(mtime) and total length of the contained
-    * files, not the top-level path's mtime: rewriting a part file in
-    * place inside a directory-backed source does not bump the directory
-    * mtime on most filesystems, so a path-mtime key would serve the stale
-    * schema indefinitely. Any append, rewrite, or file add/remove changes
-    * the signature and triggers one re-inference — one extra FS listing
-    * per resolve buys staleness-freedom. Rows are never cached: every read
-    * lists the files afresh. */
+    * work to every request, so the first resolution memoizes the inferred
+    * schema per (db, collection) and later reads plan straight from it.
+    * The entry is signed by max(mtime) and total length of the files the
+    * read itself scans, taken from the file index Spark lists for it: a
+    * resolve lists once, and `_SUCCESS` and dot files, which the scan
+    * skips, do not count. A resolve reads through the cached schema and
+    * compares signatures; any append, rewrite, or file add/remove returns
+    * a schema-inferring read instead, which replaces the entry.
+    * Same-second, same-size rewrites are the one residual blind spot,
+    * shared with every mtime-based cache. Rows are never cached. */
   private val inferredSchemas = scala.collection.concurrent.TrieMap
     .empty[(String, String), ((Long, Long), StructType)]
 
@@ -63,8 +65,15 @@ final class Catalog(spark: SparkSession, root: String) {
         def reader = spark.read.format(format).options(
           if (format == "csv") Map("header" -> "true", "inferSchema" -> "true")
           else Map.empty[String, String])
-        val schema = cachedSchema((db, collection), p, reader.load(p).schema)
-        reader.schema(schema).load(p)
+        inferredSchemas.get((db, collection)).flatMap { case (sig, schema) =>
+          // a changed collection may not read under its old schema at all
+          // (a new partition value that does not cast)
+          Try(reader.schema(schema).load(p)).toOption.filter(signature(_).contains(sig))
+        }.getOrElse {
+          val df = reader.load(p)
+          signature(df).foreach(sig => inferredSchemas.put((db, collection), (sig, df.schema)))
+          df
+        }
       case None =>
         throw new NoSuchElementException(
           s"no table for ($db, $collection) under $root " +
@@ -72,34 +81,15 @@ final class Catalog(spark: SparkSession, root: String) {
     }
   }
 
-  private def cachedSchema(key: (String, String), path: String,
-      infer: => StructType): StructType = {
-    val sig = listingSignature(path)
-    inferredSchemas.get(key) match {
-      case Some((t, s)) if t == sig => s
-      case _ =>
-        val s = infer
-        inferredSchemas.put(key, (sig, s))
-        s
+  /** (max file mtime, total file bytes) of the files `df` scans, off the
+    * file index Spark listed when the frame was built. */
+  private def signature(df: DataFrame): Option[(Long, Long)] =
+    df.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(HadoopFsRelation(
+          index: PartitioningAwareFileIndex, _, _, _, _, _), _, _, _, _) =>
+        val files = index.allFiles()
+        (files.map(_.getModificationTime).maxOption.getOrElse(0L), files.map(_.getLen).sum)
     }
-  }
-
-  /** (max file mtime, total file bytes) over the path's recursive listing —
-    * a file path signs itself. Both components move on any content change
-    * a schema could depend on; same-second same-size rewrites are the one
-    * residual blind spot, shared with every mtime-based cache. */
-  private def listingSignature(path: String): (Long, Long) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var maxM = 0L; var bytes = 0L
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val st = it.next()
-      maxM = math.max(maxM, st.getModificationTime)
-      bytes += st.getLen
-    }
-    (maxM, bytes)
-  }
 
   private def exists(path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)

@@ -121,20 +121,22 @@ class QueryServiceSpec extends SparkSpec {
     import org.apache.spark.sql.functions.{col, udf}
     // no row passes `salary > 5`, so the one scan reads every partition
     // (its count budget is checked between matching rows, and none comes):
-    // 80 x 10 rows x 50 ms, ~10 s on 4 cores. The DB deadline cancels it;
-    // exec then starts its rows-only scan for a failed scan, which the
-    // reaper cancels at its next tick. A cancelled task stops at its
+    // 80 x 10 rows x 50 ms, ~10 s on 4 cores. The DB deadline cancels it,
+    // and it is the request's only job. A cancelled task stops at its
     // partition's end, at most 0.5 s later
     val slow = udf { (x: Long) => Thread.sleep(50); x * 0 }
     val c = new Catalog(spark, "/nonexistent-root")
     c.register("testdb", "slow")(
       spark.range(0, 800, 1, 80).select(slow(col("id")).as("salary")))
     val running = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val started = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
-              .exists(_.split(",").exists(_.startsWith("graft-query-"))))
+              .exists(_.split(",").exists(_.startsWith("graft-query-")))) {
+          started.incrementAndGet()
           running.add(e.jobId): Unit
+        }
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         running.remove(e.jobId): Unit
     }
@@ -150,6 +152,7 @@ class QueryServiceSpec extends SparkSpec {
       assert(sec < 4.0 + 1.0, s"took $sec s")
       Thread.sleep(1000)
       assert(running.isEmpty, s"graft-query jobs still running: $running")
+      assert(started.get == 1, s"${started.get} graft-query jobs started")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 

@@ -7,7 +7,8 @@
 #   tools/pre_snapshot.sh            # compile + test-compile + perfbench
 #                                    # harness compile + smoke gate +
 #                                    # two short checked serve_point runs
-#                                    # (plain, and traced: 1 job/request)
+#                                    # (plain, and traced: 1 job/request,
+#                                    # 0 jobs/resolve)
 #   SMOKE_SF=/root/testdata/sf0.01 tools/pre_snapshot.sh   # bigger smoke
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -44,11 +45,14 @@ if ! python3 -c 'import json, sys; sys.exit(0 if json.loads(sys.argv[1]).get("co
 fi
 
 # the traced run attributes Spark jobs to requests: a served filtered
-# request is one scan, so the median request runs exactly one job
+# request is one scan, so the median request runs exactly one job; and a
+# resolve of an unchanged collection reads through its cached schema, so
+# it runs none (a schema cache that never hits re-infers, one job per
+# request, while every answer stays correct)
 echo "== pre_snapshot: perfbench serve_point traced (seed 1, 5 s) =="
 TRACE_LAST=$(python3 perfbench/run.py --workload serve_point --seed 1 --seconds 5 --trace 1 | tail -n 1)
-if ! python3 -c 'import json, sys; r = json.loads(sys.argv[1]); sys.exit(0 if r.get("correct") is True and r["metrics"]["spark.jobs_per_request"]["value"] == 1 else 1)' "$TRACE_LAST"; then
-  echo "pre_snapshot: traced serve_point is not correct or not one job per request: ${TRACE_LAST:0:400}" >&2
+if ! python3 -c 'import json, sys; r = json.loads(sys.argv[1]); m = r["metrics"]; sys.exit(0 if r.get("correct") is True and m["spark.jobs_per_request"]["value"] == 1 and m["catalog.jobs_per_resolve"]["value"] == 0 else 1)' "$TRACE_LAST"; then
+  echo "pre_snapshot: traced serve_point is not correct, not one job per request or not zero jobs per resolve: ${TRACE_LAST:0:400}" >&2
   exit 1
 fi
 

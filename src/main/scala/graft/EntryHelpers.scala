@@ -450,9 +450,7 @@ private[graft] object EntryHelpers {
         s"unexpected op history: ${ops.mkString(", ")}")
       // the evolved column slots BEFORE the partition column
       val m = TxTable.readManifest(java.nio.file.Paths.get(tbl), v)
-      val names = org.apache.spark.sql.types.DataType
-        .fromJson(m.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames
+      val names = m.schema.fieldNames
       require(names.toSeq == Seq("doc_id", "n_chars", "score", "lang"),
         s"unexpected evolved order: ${names.mkString(", ")}")
       v

@@ -592,10 +592,8 @@ private[graft] object QueriesSearchOps {
       }
       val m = graft.sources.TxTable.readManifest(
         java.nio.file.Paths.get(tbl),
-        graft.sources.TxTable.latestVersion(tbl).get)
-      val schemaN = org.apache.spark.sql.types.DataType
-        .fromJson(m.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
+        graft.sources.TxTable.headVersion(tbl))
+      val schemaN = m.schema
       val kept = m.files.count(f => !graft.sources.TxStats.excludes(
         m.stats.getOrElse(f, Map.empty), schemaN,
         org.apache.spark.sql.sources.IsNotNull("score")))
@@ -936,9 +934,7 @@ private[graft] object QueriesSearchOps {
       // the box probe's candidate count against a manifest — the same
       // stats/projection walk the scan's skip layer runs
       def kept(m: graft.sources.TxTable.Manifest): Int = {
-        val schema = org.apache.spark.sql.types.DataType
-          .fromJson(m.schemaJson)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
+        val schema = m.schema
         val box = scope ++ Seq(
           org.apache.spark.sql.sources.LessThan("uq", 64L),
           org.apache.spark.sql.sources.LessThan("vq", 64L))
@@ -1132,9 +1128,7 @@ private[graft] object QueriesSearchOps {
         java.nio.file.Paths.get(s"$wh/db/wid"), v)
       // pre-widen files' int stats cannot reach 3e9: every one skips,
       // so the planned scan's file index holds exactly the kept files
-      val schemaW = org.apache.spark.sql.types.DataType
-        .fromJson(m.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
+      val schemaW = m.schema
       val kept = m.files.count(f => !graft.sources.TxStats.excludes(
         m.stats.getOrElse(f, Map.empty), schemaW,
         org.apache.spark.sql.sources.GreaterThan("n_chars",

@@ -16,7 +16,9 @@ import org.apache.spark.sql.functions._
   * near-dup graphs are unions of small dense clusters (diameter a few
   * hops), so convergence is fast regardless of corpus size. The label
   * frame is localCheckpoint'ed each round to cut the growing lineage —
-  * without it, iteration k replans k joins deep.
+  * without it, iteration k replans k joins deep. Every checkpoint is
+  * tracked ([[TrackedCache]]): earlier rounds are freed as the loop
+  * goes, the result's and an over-budget run's by `Dedup.unpersistAll`.
   *
   * Converged = a fixpoint: the round's labels equal the previous round's
   * everywhere. Over budget → loud failure, never a silently-partial
@@ -29,11 +31,12 @@ object Components {
     *         canonical representative; only nodes present in `edges`
     *         appear (singletons have no pair and need no resolution) */
   def connectedComponents(edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    val symWide = edges.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      .union(edges.select(col("dst").cast("long").as("src"),
-        col("src").cast("long").as("dst")))
-      .localCheckpoint(true) // read many times; the pair job runs ONCE
+    // read many times; the pair job runs ONCE
+    val symWide = TrackedCache.checkpointTracked(
+      edges.select(col("src").cast("long").as("src"),
+          col("dst").cast("long").as("dst"))
+        .union(edges.select(col("dst").cast("long").as("src"),
+          col("src").cast("long").as("dst"))))
     // size the MAP-side parallelism of each round to the MATERIALIZED
     // edge count (free to read off the checkpoint): near-dup pair graphs
     // are typically many orders of magnitude smaller than the corpus, and
@@ -57,33 +60,32 @@ object Components {
     // propagation round — for the common near-dup case (dense clusters,
     // diameter ≤ 2) the loop below then converges in a single fixpoint
     // check instead of three rounds of join+checkpoint
-    var prev = sym.groupBy(col("src"))
+    var prev = TrackedCache.checkpointTracked(sym.groupBy(col("src"))
       .agg(min(col("dst")).as("__m"))
       .select(col("src").as("id"),
-        least(col("src"), col("__m")).as("comp"))
-      .localCheckpoint(true)
+        least(col("src"), col("__m")).as("comp")))
     var iter = 0
     while (iter < maxIter) {
       val nbrMin = sym.join(prev, sym("dst") === prev("id"))
         .groupBy(sym("src").as("nid"))
         .agg(min(col("comp")).as("nbr_comp"))
-      val next = prev.join(nbrMin, prev("id") === col("nid"), "left")
-        .select(col("id"),
-          least(col("comp"), coalesce(col("nbr_comp"), col("comp")))
-            .as("next_comp"), col("comp").as("prev_comp"))
-        .localCheckpoint(true)
+      val next = TrackedCache.checkpointTracked(
+        prev.join(nbrMin, prev("id") === col("nid"), "left")
+          .select(col("id"),
+            least(col("comp"), coalesce(col("nbr_comp"), col("comp")))
+              .as("next_comp"), col("comp").as("prev_comp")))
       val changed = next.filter(col("next_comp") < col("prev_comp")).count()
       // the eager checkpoint of `next` severed its lineage from `prev`, so
       // the previous round's blocks can be freed NOW — without this, a
       // deep graph leaves one cached label frame per round until driver GC,
       // evicting other queries' hot cache in a long session
-      freeCheckpoint(prev)
+      TrackedCache.freeCheckpoint(prev)
       prev = next.select(col("id"), col("next_comp").as("comp"))
       if (changed == 0) {
-        freeCheckpoint(sym) // the last join already ran (eager checkpoint)
+        // the last join already ran (eager checkpoint)
+        TrackedCache.freeCheckpoint(sym)
         // only the RESULT frame's blocks stay alive (freeing them would
-        // drop its only copy); it is clustering-output-sized and falls to
-        // the ContextCleaner once the caller drops the reference
+        // drop its only copy) until the caller's unpersistAll
         return prev
       }
       iter += 1
@@ -92,17 +94,6 @@ object Components {
       s"connectedComponents did not converge in $maxIter rounds — graph " +
         "diameter exceeds the budget; raise maxIter explicitly")
   }
-
-  /** Release a localCheckpoint's storage. `Dataset.unpersist` only talks
-    * to the CacheManager and is a silent no-op for checkpoints (their
-    * blocks are RDD-level) — the underlying RDD must be unpersisted.
-    * (private[ext]: [[Triangles.kCore]] shares the iterative-checkpoint
-    * discipline.) */
-  private[ext] def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(false)
-    }: Unit
 
   /** Apply a clustering to the corpus: keep every document EXCEPT
     * non-canonical cluster members (the cluster minimum survives;

@@ -37,11 +37,12 @@ object Dedup {
   private def persistTracked(df: DataFrame): DataFrame =
     TrackedCache.persistTracked(df)
 
-  /** Release every cache block the multi-read operators (here and in
-    * [[TextStats]]) have created since the last call — delegates to the
-    * shared [[TrackedCache]]. Safe to call while other frames are still
-    * lazy — Spark just recomputes; correctness never depends on the
-    * cache. */
+  /** Release every cache block and local checkpoint the multi-read and
+    * iterative operators (here, [[TextStats]], [[Components]],
+    * [[Triangles]]) have created since the last call — delegates to the
+    * shared [[TrackedCache]]. A persisted frame read afterwards just
+    * recomputes; a checkpointed result (connectedComponents, kCore) has
+    * no lineage left, so call this once such results are consumed. */
   def unpersistAll(blocking: Boolean = false): Unit =
     TrackedCache.unpersistAll(blocking)
 

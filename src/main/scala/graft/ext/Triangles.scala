@@ -127,9 +127,10 @@ object Triangles {
     *
     * Each round is one degree aggregate + two semi-join filters on the
     * node key — no cartesian, no driver-side graph; the surviving edge
-    * set and each round's degree frame are EAGER `localCheckpoint`s, so
-    * lineage stays flat, and the previous round's checkpoint is freed
-    * via [[Components.freeCheckpoint]] once the next one is materialized
+    * set and each round's degree frame are EAGER tracked checkpoints
+    * ([[TrackedCache.checkpointTracked]]), so lineage stays flat, and the
+    * previous round's checkpoint is freed via
+    * [[TrackedCache.freeCheckpoint]] once the next one is materialized
     * — the [[Components.connectedComponents]] iteration discipline.
     * Convergence within `maxRounds` is REQUIRED loudly: peeling removes
     * at least one node per non-final round, so rounds are bounded by the
@@ -155,8 +156,8 @@ object Triangles {
     // caches made round r's plan embed round r-1's and the rendered plan
     // string grew exponentially with peel depth (OOM at depth ~20).
     // Previous rounds' blocks are freed as soon as the round that read
-    // them is materialized; the final degree frame's blocks fall to the
-    // ContextCleaner when the caller drops the result (the
+    // them is materialized; the final degree frame's blocks, and a
+    // failed run's, are released by the caller's unpersistAll (the
     // connectedComponents contract).
     var eOwned: DataFrame = null
     var deg: DataFrame = null
@@ -167,42 +168,34 @@ object Triangles {
     // maxRounds no-op-tolerant rounds, so the engine must reach (and
     // verify) the fixpoint within that many peels, never peel past it
     while (!converged && r <= maxRounds) {
-      val degNew =
+      val degNew = TrackedCache.checkpointTracked(
         e.select(col("u").as("n")).unionAll(e.select(col("v").as("n")))
-          .groupBy(col("n")).agg(count(lit(1)).as("d"))
-          .localCheckpoint(true)
-      if (deg != null) Components.freeCheckpoint(deg)
+          .groupBy(col("n")).agg(count(lit(1)).as("d")))
+      if (deg != null) TrackedCache.freeCheckpoint(deg)
       deg = degNew
       val keep = deg.filter(col("d") >= k).select(col("n"))
       // one action decides convergence: count the DROP side directly
       if (deg.filter(col("d") < k).limit(1).count() == 0L) converged = true
       else if (r == maxRounds) r += 1 // budget exhausted: fail below
       else {
-        val eNew = e
+        val eNew = TrackedCache.checkpointTracked(e
           .join(keep.select(col("n").as("u")), Seq("u"), "left_semi")
-          .join(keep.select(col("n").as("v")), Seq("v"), "left_semi")
-          .localCheckpoint(true)
-        if (eOwned != null) Components.freeCheckpoint(eOwned)
+          .join(keep.select(col("n").as("v")), Seq("v"), "left_semi"))
+        if (eOwned != null) TrackedCache.freeCheckpoint(eOwned)
         eOwned = eNew
         e = eNew
         r += 1
       }
     }
-    if (!converged) {
-      // free the failure path's pinned checkpoint blocks BEFORE throwing:
-      // they are RDD-level (invisible to the harness's unpersistAll) and
-      // a retried over-budget query would otherwise accumulate them
-      if (eOwned != null) Components.freeCheckpoint(eOwned)
-      if (deg != null) Components.freeCheckpoint(deg)
+    if (!converged)
       throw new IllegalArgumentException(
         s"requirement failed: kCore(k=$k) did not converge within " +
           s"$maxRounds rounds — raise maxRounds (and the oracle's " +
           "unroll) together")
-    }
     // the converged round's degree frame IS the answer: convergence
     // means every surviving node already has d >= k, and deg is
     // materialized — the final union+aggregate recompute is redundant
-    if (eOwned != null) Components.freeCheckpoint(eOwned)
+    if (eOwned != null) TrackedCache.freeCheckpoint(eOwned)
     deg.select(col("n").as("node"), col("d").as("core_deg"))
   }
 

@@ -382,29 +382,19 @@ private[graft] class DirTailStreamingWrite(schema: StructType, path: String,
     val marker = dir.resolve(f".epoch-$epochId%010d.committed")
     val staged = messages.map(_.asInstanceOf[DirTailCommitMessage])
     if (Files.exists(marker)) {
-      // the marker records WHICH query committed the epoch: a genuine
-      // replay (same query id, at-least-once foreachBatch semantics)
-      // drops its staged duplicates; a DIFFERENT query hitting the
-      // number means a NEW stream incarnation restarted its epoch ids
-      // against a used sink dir (checkpoint reset) — silently dropping
-      // ITS rows as "already replayed" would be data loss, refuse loud.
-      // Legacy zero-byte markers carry no id and keep the old replay
-      // interpretation.
-      val owner = new String(Files.readAllBytes(marker),
-        java.nio.charset.StandardCharsets.UTF_8)
-      if (owner.nonEmpty && queryId.nonEmpty && owner != queryId) {
-        staged.foreach(m =>
-          Files.deleteIfExists(dir.resolve(m.staged)): Unit)
-        throw new IllegalStateException(
-          s"dirtail sink $path: epoch $epochId was committed by a " +
-            s"DIFFERENT stream (query $owner) — this query's epoch ids " +
-            "restarted against a used sink dir (checkpoint reset?); " +
-            "write to a fresh directory, or resume the original " +
-            "checkpoint")
-      }
-      // replayed epoch: already fully visible
+      // a genuine replay (at-least-once foreachBatch semantics) drops
+      // its staged duplicates; any other owner means a NEW stream
+      // incarnation restarted its epoch ids against a used sink dir
+      // (checkpoint reset) — silently dropping ITS rows as "already
+      // replayed" would be data loss, refuse loud
+      val owner = markerOwner(marker)
       staged.foreach(m => Files.deleteIfExists(dir.resolve(m.staged)): Unit)
-      return
+      if (isReplay(owner)) return
+      throw new IllegalStateException(
+        s"dirtail sink $path: epoch $epochId was committed by " +
+          s"${ownerText(owner)} — this query's epoch ids restarted " +
+          "against a used sink dir (checkpoint reset?); write to a " +
+          "fresh directory, or resume the original checkpoint")
     }
     staged.foreach { m =>
       val target = dir.resolve(f"part-$epochId%010d-${m.partitionId}%05d.jsonl")
@@ -431,36 +421,40 @@ private[graft] class DirTailStreamingWrite(schema: StructType, path: String,
         // publish, so a DIFFERENT query's commit can land in between —
         // the rename/reap above then already clobbered the winner's
         // files, and swallowing the collision would leave the epoch
-        // silently corrupted. Re-read the marker's owner and refuse as
-        // loudly as the pre-check would have; an owner equal to this
-        // queryId is a genuine same-query replay race and stays
-        // idempotent. An UNREADABLE marker (vanished between the failed
-        // publish and this read — someone is concurrently mutating the
-        // epoch) or a legacy EMPTY marker cannot prove same-query
-        // ownership, so both refuse rather than swallow a possible
-        // cross-query collision.
-        val owner =
-          try new String(Files.readAllBytes(marker),
-            java.nio.charset.StandardCharsets.UTF_8)
-          catch { case _: java.io.IOException => "" }
-        if (owner.nonEmpty && queryId.nonEmpty && owner == queryId) ()
-        else {
-          val who =
-            if (owner.nonEmpty && queryId.nonEmpty)
-              s"was committed CONCURRENTLY by a DIFFERENT stream " +
-                s"(query $owner)"
-            else
-              "was committed concurrently by a writer whose ownership " +
-                "cannot be verified (the marker vanished mid-race or " +
-                "carries no query id)"
+        // silently corrupted. The same owner rule as the pre-check: only
+        // this query's own marker is a same-query replay race.
+        val owner = markerOwner(marker)
+        if (!isReplay(owner))
           throw new IllegalStateException(
-            s"dirtail sink $path: epoch $epochId $who while this query " +
+            s"dirtail sink $path: epoch $epochId was committed " +
+              s"CONCURRENTLY by ${ownerText(owner)} while this query " +
               "(checkpoint reset?) was publishing the same epoch " +
               "number — the epoch's visible files may mix both " +
               "attempts; write to a fresh directory, or resume the " +
               "original checkpoint")
-        }
     }
+  }
+
+  /** The query id an epoch marker records: empty for a legacy zero-byte
+    * marker, None when the marker cannot be read (it vanished — someone
+    * is concurrently mutating the epoch). */
+  private def markerOwner(marker: java.nio.file.Path): Option[String] =
+    try Some(new String(Files.readAllBytes(marker),
+      java.nio.charset.StandardCharsets.UTF_8))
+    catch { case _: java.io.IOException => None }
+
+  /** THE ONE MARKER-OWNER RULE, shared by the pre-check and the race
+    * recheck: an existing epoch marker is this writer's replay only when
+    * it records exactly this writer's query id. An unreadable marker
+    * proves nothing and is refused; an id-less marker is a replay only
+    * for an id-less writer. */
+  private def isReplay(owner: Option[String]): Boolean =
+    owner.contains(queryId)
+
+  private def ownerText(owner: Option[String]): String = owner match {
+    case Some(o) if o.nonEmpty => s"a DIFFERENT stream (query $o)"
+    case Some(_) => "a writer that recorded no query id"
+    case None => "a writer whose marker vanished mid-race"
   }
 
   override def abort(epochId: Long,

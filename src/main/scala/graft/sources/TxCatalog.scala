@@ -14,7 +14,7 @@ import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate,
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.sources.InsertableRelation
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** DSv2 `TableCatalog` over [[TxTable]] — the engine's own table format
@@ -658,11 +658,9 @@ private[graft] class TxSqlTable(tableName: String, dir: Path, version: Long,
   private[graft] def snapshotVersion: Long = version
   private[graft] def hasDeletionVectors: Boolean =
     manifest.dvDirs.nonEmpty
-  private lazy val tableSchema: StructType =
-    DataType.fromJson(manifest.schemaJson).asInstanceOf[StructType]
 
   override def name(): String = s"$tableName@v$version"
-  override def schema(): StructType = tableSchema
+  override def schema(): StructType = manifest.schema
   override def partitioning(): Array[Transform] =
     TxTransforms.spec(manifest).map(TxTransforms.v2Transform).toArray
   override def capabilities(): util.Set[TableCapability] =
@@ -710,7 +708,7 @@ private[graft] class TxSqlTable(tableName: String, dir: Path, version: Long,
     // through the column mapping) — the skip filters carry logical
     // names; the builder translates back to physical at the parquet
     // boundary itself.
-    new TxScanBuilder(name(), tableSchema, dir, manifest.files,
+    new TxScanBuilder(name(), manifest.schema, dir, manifest.files,
       TxTable.logicalStats(manifest), TxTable.logicalBlooms(manifest),
       options, TxTransforms.identityNames(manifest), hasDeletionVectors,
       s"$tableName@v$version", manifest.columnMapping,
@@ -857,8 +855,7 @@ private[graft] final class TxScanBuilder(
     // hidden-partitioning projection (TxTransforms scaladoc): a filter
     // on a transform's SOURCE column implies a filter on the derived
     // path value, which the stats layer evaluates like any other
-    skipFilters = v1 ++ v1.flatMap(f =>
-      TxTransforms.projectFilter(f, transformSpec))
+    skipFilters = TxTransforms.withProjections(v1, transformSpec)
     filters // all residual, like the parquet builder itself
   }
 
@@ -1104,13 +1101,9 @@ private[graft] final class TxScanBuilder(
     }
     aggBuilder.foreach(b => return b.build())
     val evalSchema = TxTransforms.skipSchema(schema, transformSpec)
-    val kept = relFiles.filter { f =>
-      val st = stats.getOrElse(f, Map.empty[String, TxStats.ColStat])
-      val bl = blooms.getOrElse(f, Map.empty[String, TxStats.FileBloom])
-      !skipFilters.exists(fl =>
-        TxStats.excludes(st, evalSchema, fl) ||
-          TxStats.bloomExcludes(bl, fl))
-    }
+    val kept = relFiles.filter(f => TxStats.mayMatch(
+      stats.getOrElse(f, Map.empty), blooms.getOrElse(f, Map.empty),
+      evalSchema, skipFilters))
     val skipTag = s"skipped=${relFiles.size - kept.size}/${relFiles.size}"
     // ALL layout field names (identity + hidden transforms) — what the
     // paths and stats key by, and what key-grouping groups by; the
@@ -1253,15 +1246,10 @@ private[graft] object TxRuntimeFilter {
       .flatMap(p =>
         org.apache.spark.sql.graftbridge.GraftBridge.predicateToV1(p))
       .filter(inBudget)
-    val v1 = base ++ base.flatMap(f =>
-      TxTransforms.projectFilter(f, spec))
+    val v1 = TxTransforms.withProjections(base, spec)
     if (v1.isEmpty) files
-    else files.filter { f =>
-      val st = stats.getOrElse(f, Map.empty[String, TxStats.ColStat])
-      val bl = blooms.getOrElse(f, Map.empty[String, TxStats.FileBloom])
-      !v1.exists(fl => TxStats.excludes(st, schema, fl) ||
-        TxStats.bloomExcludes(bl, fl))
-    }
+    else files.filter(f => TxStats.mayMatch(stats.getOrElse(f, Map.empty),
+      blooms.getOrElse(f, Map.empty), schema, v1))
   }
 
   /** Columns worth declaring as runtime-filterable: of the scan's
@@ -1734,8 +1722,7 @@ private[graft] object TxMetaTables {
     // reports its whole snapshot as the single '{}' partition. All
     // numbers are manifest + Files.size metadata — zero data read.
     case "partitions" => new MetaTable(name, PartitionsSchema, () => {
-      val v = TxTable.latestVersion(dir.toString).getOrElse(
-        throw new IllegalStateException(s"no committed version under $dir"))
+      val v = TxTable.headVersion(dir.toString)
       val m = TxTable.readManifestLite(dir, v)
       val partSet = m.partitionColumns.toSet
       def tupleOf(f: String): String =
@@ -1765,8 +1752,7 @@ private[graft] object TxMetaTables {
     // debt the snapshot carries (the purgeDeletes trigger metric);
     // tombstone counts come from parquet FOOTERS, zero data read
     case "dv" => new MetaTable(name, DvSchema, () => {
-      val v = TxTable.latestVersion(dir.toString).getOrElse(
-        throw new IllegalStateException(s"no committed version under $dir"))
+      val v = TxTable.headVersion(dir.toString)
       TxTable.readManifestLite(dir, v).dvDirs.sorted.map { d =>
         val fs = TxTable.walkParquet(dir.resolve(d))
         val n = fs.map { p =>
@@ -1783,8 +1769,7 @@ private[graft] object TxMetaTables {
     // `t$constraints`: the data-quality promises in force — what every
     // write is validated against (TxTable.commit scaladoc)
     case "constraints" => new MetaTable(name, ConstraintsSchema, () => {
-      val v = TxTable.latestVersion(dir.toString).getOrElse(
-        throw new IllegalStateException(s"no committed version under $dir"))
+      val v = TxTable.headVersion(dir.toString)
       TxTable.readManifestLite(dir, v).constraints.toSeq.sortBy(_._1)
         .map { case (n, e) =>
           new GenericInternalRow(Array[Any](
@@ -1797,8 +1782,7 @@ private[graft] object TxMetaTables {
     // first question to ask when a point lookup scans more files than
     // expected
     case "stats" => new MetaTable(name, StatsSchema, () => {
-      val v = TxTable.latestVersion(dir.toString).getOrElse(
-        throw new IllegalStateException(s"no committed version under $dir"))
+      val v = TxTable.headVersion(dir.toString)
       val m = TxTable.readManifest(dir, v)
       m.files.sorted.flatMap { f =>
         val st = m.stats.getOrElse(f, Map.empty)
@@ -1829,8 +1813,7 @@ private[graft] object TxMetaTables {
         } catch { case _: java.nio.file.NoSuchFileException => None }
       }.toArray)
     case "files" => new MetaTable(name, FilesSchema, () => {
-      val v = TxTable.latestVersion(dir.toString).getOrElse(
-        throw new IllegalStateException(s"no committed version under $dir"))
+      val v = TxTable.headVersion(dir.toString)
       TxTable.readManifestLite(dir, v).files.map { f =>
         new GenericInternalRow(Array[Any](v, UTF8String.fromString(f),
           Files.size(dir.resolve(f)))): InternalRow
@@ -2038,10 +2021,8 @@ private[graft] object TxProcedures {
     * table (a scope that cannot skip is not a scope). */
   private def parseScope(spark: SparkSession, dir: Path, predStr: String)
       : Seq[org.apache.spark.sql.sources.Filter] = {
-    val v0 = TxTable.latestVersion(dir.toString).get
-    val schema = org.apache.spark.sql.types.DataType.fromJson(
-        TxTable.readManifestLite(dir, v0).schemaJson)
-      .asInstanceOf[StructType]
+    val schema = TxTable.readManifestLite(dir,
+      TxTable.headVersion(dir.toString)).schema
     val parsed = spark.sessionState.sqlParser.parseExpression(predStr)
     val attrs = org.apache.spark.sql.catalyst.types.DataTypeUtils
       .toAttributes(schema)

@@ -10,7 +10,7 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, 
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** `graft-txcdf` — a streaming CHANGE-DATA-FEED over a [[TxTable]]:
@@ -73,8 +73,7 @@ class TxCdfSource extends TableProvider with DataSourceRegister {
           "schema is the table's committed schema, so the table must " +
           "exist before tailing it"))
     val m = TxTable.readManifestLite(Paths.get(dir), v)
-    TxCdfSource.withMetaColumns(
-      DataType.fromJson(m.schemaJson).asInstanceOf[StructType],
+    TxCdfSource.withMetaColumns(m.schema,
       cdc = options.getBoolean("readChangeFeed", false))
   }
 
@@ -360,8 +359,7 @@ private[graft] class TxCdfStream(tableSchema: StructType, dir: String,
     TxTable.latestVersion(dir) match {
       case Some(v) =>
         val m = TxTable.readManifestLite(Paths.get(dir), v)
-        val logical = org.apache.spark.sql.types.DataType
-          .fromJson(m.schemaJson).asInstanceOf[StructType]
+        val logical = m.schema
         require(logical.fieldNames.toSeq == tableSchema.fieldNames.toSeq,
           s"graft-txcdf: the stream's schema was pinned as " +
             s"${tableSchema.fieldNames.mkString(",")} but $dir now " +
@@ -376,7 +374,7 @@ private[graft] class TxCdfStream(tableSchema: StructType, dir: String,
     * spells the widened types — true exactly when the stream started
     * at-or-after the widen (inferSchema read the post-widen manifest). */
   private def widenIsBenign(m: TxTable.Manifest): Boolean = {
-    val post = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+    val post = m.schema
     post.fields.map(f => (f.name, f.dataType)).toSeq ==
       tableSchema.fields.map(f => (f.name, f.dataType)).toSeq
   }

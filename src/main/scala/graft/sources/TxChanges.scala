@@ -3,7 +3,7 @@ package graft.sources
 import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, SparkSession, functions}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** Batch change-data-feed between two committed versions — the Delta
   * `table_changes` shape: every row that logically entered or left the
@@ -56,8 +56,7 @@ object TxChanges {
     // file list + stats map on the driver at once (the change frames
     // below capture only the per-version CHANGED-file slices)
     val headM = TxTable.readManifestLite(root, toV)
-    val schema = DataType.fromJson(headM.schemaJson)
-      .asInstanceOf[StructType]
+    val schema = headM.schema
     // reserved feed columns: a data column with either name would be
     // silently OVERWRITTEN by the tagging withColumn — refuse loudly
     // (the Delta table_changes contract)

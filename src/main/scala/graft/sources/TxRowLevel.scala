@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.GraftBridge
-import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.sql.types.StructField
 
 /** SQL `UPDATE` and `MERGE INTO` on the tx catalog — the other half of
   * row-level ops next to [[TxTable.deleteWhere]], as stats-pruned
@@ -220,30 +220,6 @@ private[graft] object TxRowLevel {
     case other => Seq(other)
   }
 
-  /** deleteWhere's candidate partition generalized: a file is untouched
-    * when ANY translated conjunct of the predicate provably excludes all
-    * its rows (conjunct never TRUE there ⇒ conjunction never TRUE ⇒ no
-    * row of the file can match). Untranslatable conjuncts prune
-    * nothing — sound, just less sharp. */
-  private[sources] def partitionFiles(m: TxTable.Manifest, schema: StructType,
-                             filters: Seq[org.apache.spark.sql.sources.Filter])
-      : (Seq[String], Seq[String]) = {
-    // filters carry LOGICAL names; stats/blooms key by physical —
-    // consume through the logical view (survives RENAME COLUMN).
-    // Hidden-partitioning projections sharpen the cut: an UPDATE keyed
-    // on a bucketed/day-partitioned source column prunes to its
-    // derived directories (TxTransforms scaladoc)
-    val (lst, lbl) = (TxTable.logicalStats(m), TxTable.logicalBlooms(m))
-    val skipFs = TxTransforms.withProjections(filters, m)
-    val skipSch = TxTransforms.skipSchema(schema, m)
-    m.files.partition { f =>
-      val st = lst.getOrElse(f, Map.empty[String, TxStats.ColStat])
-      val bl = lbl.getOrElse(f, Map.empty[String, TxStats.FileBloom])
-      !skipFs.exists(fl =>
-        TxStats.excludes(st, skipSch, fl) || TxStats.bloomExcludes(bl, fl))
-    }
-  }
-
   /** First-match-wins clause chain: WHEN cond₁ → act₁ ELSE WHEN cond₂ →
     * act₂ … ELSE default — the ANSI clause-order contract as one nested
     * CASE (a missing AND is `true`; a NULL AND is `false`). */
@@ -300,21 +276,16 @@ private[graft] final case class TxUpdateCommand(
   import TxRowLevel._
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val v = TxTable.latestVersion(tableDir).getOrElse(
-      throw new IllegalStateException(
-        s"no committed version under $tableDir"))
+    val v = TxTable.headVersion(tableDir)
     val m = TxTable.readManifest(java.nio.file.Paths.get(tableDir), v)
-    val schema =
-      DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+    val schema = m.schema
     val tgt = AttributeSet(targetOutput)
     val bind: Expression => Column =
       e => rebind(e, tgt, AttributeSet.empty)
     val filters = condition.toSeq.flatMap(splitConjuncts)
       .flatMap(GraftBridge.translateFilter)
-    val (touched, untouched) = condition match {
-      case None => (m.files, Seq.empty[String]) // unconditional UPDATE
-      case Some(_) => partitionFiles(m, schema, filters)
-    }
+    // an unconditional UPDATE has no filters: every file is touched
+    val (touched, untouched) = TxTable.partitionFiles(m, filters)
     if (touched.isEmpty) return Seq.empty // provably nothing to update
     val cond = condition.map(bind)
       .map(c => coalesce(c, lit(false))).getOrElse(lit(true))
@@ -420,23 +391,17 @@ private[graft] final case class TxMergeCommand(
     // analysis (an EXPLAIN must not evolve the table); idempotent when
     // the columns already landed (a re-analyzed retry)
     if (evolveAdd.nonEmpty) {
-      val v0 = TxTable.latestVersion(tableDir).getOrElse(
-        throw new IllegalStateException(
-          s"no committed version under $tableDir"))
-      val cur = DataType.fromJson(TxTable.readManifestLite(
-          java.nio.file.Paths.get(tableDir), v0).schemaJson)
-        .asInstanceOf[StructType]
+      val v0 = TxTable.headVersion(tableDir)
+      val cur = TxTable.readManifestLite(
+        java.nio.file.Paths.get(tableDir), v0).schema
       val missing = evolveAdd.filterNot(f =>
         cur.fieldNames.exists(_.equalsIgnoreCase(f.name)))
       if (missing.nonEmpty)
         TxTable.evolveColumns(spark, tableDir, add = missing): Unit
     }
-    val v = TxTable.latestVersion(tableDir).getOrElse(
-      throw new IllegalStateException(
-        s"no committed version under $tableDir"))
+    val v = TxTable.headVersion(tableDir)
     val m = TxTable.readManifest(java.nio.file.Paths.get(tableDir), v)
-    val schema =
-      DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+    val schema = m.schema
     val tgt = AttributeSet(targetOutput)
     val srcAttrs = AttributeSet(source.output)
     require(!schema.fieldNames.exists(_.startsWith(SrcPrefix)),
@@ -503,7 +468,7 @@ private[graft] final case class TxMergeCommand(
       if (!rewritesTarget) (Seq.empty[String], m.files) // insert-only
       else if (notMatchedBySourceActions.nonEmpty)
         (m.files, Seq.empty[String])
-      else partitionFiles(m, schema, equiBounds)
+      else TxTable.partitionFiles(m, equiBounds)
     // insert-only MERGE still needs the FULL target for the anti
     // semantics of NOT MATCHED, but rewrites none of it
     val joinTargetFiles = if (rewritesTarget) touched0 else m.files

@@ -46,8 +46,22 @@ import org.apache.spark.sql.types.{DateType, DoubleType, FloatType, IntegerType,
   *     `IS NOT NULL` proves out an all-null file, `IS NULL` a
   *     null-free one; unknown counts (legacy manifests, partition
   *     value entries) never skip.
+  *
+  * THE ONE SKIP RULE is [[mayMatch]]: a file is kept unless some
+  * conjunct provably excludes it, by min/max ([[excludes]]) or by bloom
+  * ([[bloomExcludes]]). Every skip decision of the tx table calls it:
+  * the scan and its runtime filters, the row-level rebase's overlap
+  * check, and through [[TxTable.partitionFiles]] every
+  * predicate-scoped rewrite.
   */
 object TxStats {
+
+  /** May a file with these stats and blooms hold a row on which every
+    * filter of `filters` is TRUE? False only when some conjunct
+    * provably excludes the whole file; an empty filter list keeps it. */
+  def mayMatch(stats: Map[String, ColStat], blooms: Map[String, FileBloom],
+               schema: StructType, filters: Seq[Filter]): Boolean =
+    !filters.exists(f => excludes(stats, schema, f) || bloomExcludes(blooms, f))
 
   /** Min/max as canonical strings (decimal for integrals,
     * `Double.toString` for floating point, raw for ASCII strings) —

@@ -238,7 +238,12 @@ object TxTable {
                             bloomRefs: Map[String, String] = Map.empty,
                             changeDir: Option[String] = None,
                             partitionTransforms: Map[String, String] =
-                              Map.empty)
+                              Map.empty) {
+    /** The committed schema: the one place a manifest's `schemaJson` is
+      * parsed. */
+    lazy val schema: StructType =
+      DataType.fromJson(schemaJson).asInstanceOf[StructType]
+  }
 
   /** Commit `df` as the next version. `mode` is "overwrite" (the new
     * version is exactly this frame) or "append" (this frame plus the
@@ -373,7 +378,7 @@ object TxTable {
     val prev = prev0
     val committedSchema: StructType = prev match {
       case Some(m) if mode != "overwrite" =>
-        val table = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+        val table = m.schema
         if (mergeSchema && mode == "append") mergeSchemas(table, df.schema)
         else {
           // Nullability-insensitive compare: a frame read back from
@@ -565,6 +570,14 @@ object TxTable {
     if (vs.isEmpty) None else Some(vs.max)
   }
 
+  /** THE ONE HEAD LOOKUP: the latest committed version, or the one loud
+    * error for a never-committed table. Every operation on the current
+    * snapshot resolves its head here; the caller then picks
+    * [[readManifest]] or [[readManifestLite]] for what it consumes. */
+  private[graft] def headVersion(tableDir: String): Long =
+    latestVersion(tableDir).getOrElse(throw new IllegalStateException(
+      s"no committed version under $tableDir/$LogDir"))
+
   /** Committed version numbers, ascending — log-directory NAMES only,
     * zero manifest reads (history() parses every manifest; an existence
     * or mtime question must not pay that). */
@@ -581,9 +594,7 @@ object TxTable {
   /** Read the latest snapshot. Loud on a never-committed table — an
     * empty frame would silently hide a wrong path. */
   def read(spark: SparkSession, tableDir: String): DataFrame =
-    readVersion(spark, tableDir,
-      latestVersion(tableDir).getOrElse(throw new IllegalStateException(
-        s"no committed version under $tableDir/$LogDir")))
+    readVersion(spark, tableDir, headVersion(tableDir))
 
   /** Row-level diff between two committed snapshots — the change-data-feed
     * question ("what changed between version v1 and v2?") answered from
@@ -659,9 +670,7 @@ object TxTable {
     retainAgeMillis.foreach(a => require(a >= 0L,
       s"retainAgeMillis must be >= 0, got $a"))
     val root = Paths.get(tableDir)
-    val latest = latestVersion(tableDir).getOrElse(
-      throw new IllegalStateException(
-        s"no committed version under $tableDir/$LogDir"))
+    val latest = headVersion(tableDir)
     val versions = listNames(root.resolve(LogDir))
       .collect { case VersionName(v) => v }.sorted
     val ageCutoff = retainAgeMillis.map(System.currentTimeMillis() - _)
@@ -801,9 +810,7 @@ object TxTable {
               scope: Seq[org.apache.spark.sql.sources.Filter] = Nil)
       : Long = {
     val root = Paths.get(tableDir)
-    val v = latestVersion(tableDir).getOrElse(
-      throw new IllegalStateException(
-        s"no committed version under $tableDir/$LogDir"))
+    val v = headVersion(tableDir)
     val m = readManifest(root, v)
     // tombstones fold first: compact's per-group reads are RAW parquet
     // (each group coalesces verbatim — no anti-join), so compacting a
@@ -815,20 +822,9 @@ object TxTable {
       return compact(spark, tableDir, targetBytes, maxConcurrentJobs,
         primitive, scope)
     }
-    val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+    val schema = m.schema
     if (m.files.isEmpty) return v
-    val (lst, lbl) = (logicalStats(m), logicalBlooms(m))
-    val scopeFs = TxTransforms.withProjections(scope, m)
-    val scopeSch = TxTransforms.skipSchema(schema, m)
-    val (scoped, untouched) =
-      if (scope.isEmpty) (m.files, Seq.empty[String])
-      else m.files.partition { f =>
-        val st = lst.getOrElse(f, Map.empty[String, TxStats.ColStat])
-        val bl = lbl.getOrElse(f, Map.empty[String, TxStats.FileBloom])
-        !scopeFs.exists(fl =>
-          TxStats.excludes(st, scopeSch, fl) ||
-            TxStats.bloomExcludes(bl, fl))
-      }
+    val (scoped, untouched) = partitionFiles(m, scope)
     if (scoped.isEmpty) return v // nothing in scope: version-free no-op
     val partSet = m.partitionColumns.toSet
     // compaction is a RAW byte move: it reads and rewrites files under
@@ -1008,16 +1004,14 @@ object TxTable {
       : Long = {
     require(numFiles >= 1, s"numFiles must be >= 1, got $numFiles")
     val root = Paths.get(tableDir)
-    val v = latestVersion(tableDir).getOrElse(
-      throw new IllegalStateException(
-        s"no committed version under $tableDir/$LogDir"))
+    val v = headVersion(tableDir)
     val m = readManifest(root, v)
     if (scope.nonEmpty && m.dvDirs.nonEmpty) {
       purgeDeletes(spark, tableDir, primitive): Unit
       return compactZOrderWhere(spark, tableDir, zCols, scope, numFiles,
         bits, primitive)
     }
-    val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+    val schema = m.schema
     zCols.foreach(c => require(
       schema.fieldNames.contains(c), s"zorder column '$c' is not in " +
         s"the table schema ${schema.simpleString}"))
@@ -1031,22 +1025,10 @@ object TxTable {
     val hidden = TxTransforms.spec(m).filterNot(_.isIdentity)
     require(!hidden.exists(_.name == zc),
       s"table may not have a '$zc' partition field")
-    // candidate selection: identical to [[compact]]'s — conservative
-    // (file granularity; a kept file may hold no matching row), with
-    // transform projections so a source-column scope prunes hidden
-    // layouts
-    val (lst, lbl) = (logicalStats(m), logicalBlooms(m))
-    val scopeFs = TxTransforms.withProjections(scope, m)
-    val scopeSch = TxTransforms.skipSchema(schema, m)
-    val (scoped, untouched) =
-      if (scope.isEmpty) (m.files, Seq.empty[String])
-      else m.files.partition { f =>
-        val st = lst.getOrElse(f, Map.empty[String, TxStats.ColStat])
-        val bl = lbl.getOrElse(f, Map.empty[String, TxStats.FileBloom])
-        !scopeFs.exists(fl =>
-          TxStats.excludes(st, scopeSch, fl) ||
-            TxStats.bloomExcludes(bl, fl))
-      }
+    // candidate selection: [[partitionFiles]], as in [[compact]] —
+    // conservative (file granularity; a kept file may hold no matching
+    // row)
+    val (scoped, untouched) = partitionFiles(m, scope)
     if (scoped.isEmpty) return v // nothing in scope: version-free no-op
     // on a partitioned table the range key is (partition cols..., z):
     // the clustering happens WITHIN each partition value (the staged
@@ -1346,8 +1328,7 @@ object TxTable {
       newBlooms: Map[String, Map[String, TxStats.FileBloom]],
       txn: Option[(String, Long)], op: String)(head: Manifest)
       : Either[String, Manifest] = {
-    val headSchema =
-      DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
+    val headSchema = head.schema
     if (asNullable(headSchema) != asNullable(schema))
       Left(s"the table schema changed concurrently (head is now " +
         s"${headSchema.simpleString}, this append staged " +
@@ -1396,10 +1377,8 @@ object TxTable {
       newBlooms: Map[String, Map[String, TxStats.FileBloom]],
       op: String, dvDirsOut: Seq[String])(head: Manifest)
       : Either[String, Manifest] = {
-    val baseSchema =
-      asNullable(DataType.fromJson(base.schemaJson))
-    val headSchema =
-      asNullable(DataType.fromJson(head.schemaJson))
+    val baseSchema = asNullable(base.schema)
+    val headSchema = asNullable(head.schema)
     if (headSchema != baseSchema)
       Left("the table schema changed concurrently")
     else if (head.partitionColumns != base.partitionColumns ||
@@ -1475,10 +1454,10 @@ object TxTable {
     // for the files the WINNER added — a handful — so only their
     // sidecars materialize, never the table's
     val baseSet0 = base.files.toSet
-    val head = materializeBloomsFor(root, head0,
+    val head = materializeBlooms(root, head0,
       head0.files.filterNot(baseSet0).toSet)
-    val baseSchema = asNullable(DataType.fromJson(base.schemaJson))
-    val headSchema = asNullable(DataType.fromJson(head.schemaJson))
+    val baseSchema = asNullable(base.schema)
+    val headSchema = asNullable(head.schema)
     if (headSchema != baseSchema)
       Left("the table schema changed concurrently")
     else if (head.partitionColumns != base.partitionColumns ||
@@ -1509,18 +1488,12 @@ object TxTable {
             s"${appeared.size} file(s) — serializing after it would " +
             "change the result")
         else {
-          val schema = TxTransforms.skipSchema(
-            DataType.fromJson(base.schemaJson).asInstanceOf[StructType],
-            base)
+          val schema = TxTransforms.skipSchema(base.schema, base)
           val skipFs = TxTransforms.withProjections(filters, base)
           val (lst, lbl) = (logicalStats(head), logicalBlooms(head))
-          val overlapping = appeared.filter { f =>
-            val st = lst.getOrElse(f, Map.empty[String, TxStats.ColStat])
-            val bl = lbl.getOrElse(f, Map.empty[String, TxStats.FileBloom])
-            !skipFs.exists(fl =>
-              TxStats.excludes(st, schema, fl) ||
-                TxStats.bloomExcludes(bl, fl))
-          }
+          val overlapping = appeared.filter(f => TxStats.mayMatch(
+            lst.getOrElse(f, Map.empty), lbl.getOrElse(f, Map.empty),
+            schema, skipFs))
           if (overlapping.nonEmpty)
             Left(s"a concurrent commit added ${overlapping.size} " +
               s"file(s) this $op's predicate cannot prove row-free " +
@@ -1570,32 +1543,20 @@ object TxTable {
                   filters: Seq[org.apache.spark.sql.sources.Filter],
                   primitive: CommitPrimitive = PosixLinkPrimitive): Long = {
     val root = Paths.get(tableDir)
-    val v = latestVersion(tableDir).getOrElse(
-      throw new IllegalStateException(
-        s"no committed version under $tableDir/$LogDir"))
+    val v = headVersion(tableDir)
     val m = readManifest(root, v)
     // table-level opt-in to merge-on-read: the 100 TB DELETE shape
     if (m.properties.get(DvProperty).contains("true"))
       return deleteWhereMor(spark, tableDir, filters, primitive)
-    val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+    val schema = m.schema
     val cond: org.apache.spark.sql.Column = filters
       .map(f => SourceFilterColumns.toColumn(f).getOrElse(
         throw new UnsupportedOperationException(
           s"DELETE condition not expressible as a source filter: $f")))
       .reduceOption(_ && _).getOrElse(functions.lit(true))
     // a file is untouched when ANY conjunct provably excludes all its
-    // rows (the TxScanBuilder skip rule applied to the DELETE predicate)
-    // — stats/blooms consumed through the LOGICAL view (filters carry
-    // logical names; keys are physical after a rename)
-    val (lst, lbl) = (logicalStats(m), logicalBlooms(m))
-    val skipFs = TxTransforms.withProjections(filters, m)
-    val skipSch = TxTransforms.skipSchema(schema, m)
-    val (touched, untouched) = m.files.partition { f =>
-      val st = lst.getOrElse(f, Map.empty[String, TxStats.ColStat])
-      val bl = lbl.getOrElse(f, Map.empty[String, TxStats.FileBloom])
-      !skipFs.exists(fl =>
-        TxStats.excludes(st, skipSch, fl) || TxStats.bloomExcludes(bl, fl))
-    }
+    // rows (the scan's skip rule applied to the DELETE predicate)
+    val (touched, untouched) = partitionFiles(m, filters)
     if (touched.isEmpty) return v // provably nothing to delete
     // keep = NOT true(cond): NULL-condition rows survive, like ANSI.
     // The shared snapshot reader attaches partition values on a
@@ -1641,11 +1602,9 @@ object TxTable {
     require(filters.nonEmpty, "replaceWhere needs a predicate — use " +
       "mode=overwrite to replace the whole table")
     val root = Paths.get(tableDir)
-    val v = latestVersion(tableDir).getOrElse(
-      throw new IllegalStateException(
-        s"no committed version under $tableDir/$LogDir"))
+    val v = headVersion(tableDir)
     val m = readManifest(root, v)
-    val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+    val schema = m.schema
     val ordered = data.select(schema.fieldNames.toSeq
       .map(functions.col): _*)
     require(asNullable(schema) == asNullable(ordered.schema),
@@ -1664,15 +1623,7 @@ object TxTable {
       s"replaceWhere data contains rows OUTSIDE the predicate " +
         s"(${filters.mkString(" AND ")}) — first: ${stray.head}; " +
         "scope the data or widen the predicate")
-    val (lst, lbl) = (logicalStats(m), logicalBlooms(m))
-    val skipFs = TxTransforms.withProjections(filters, m)
-    val skipSch = TxTransforms.skipSchema(schema, m)
-    val (touched, untouched) = m.files.partition { f =>
-      val st = lst.getOrElse(f, Map.empty[String, TxStats.ColStat])
-      val bl = lbl.getOrElse(f, Map.empty[String, TxStats.FileBloom])
-      !skipFs.exists(fl =>
-        TxStats.excludes(st, skipSch, fl) || TxStats.bloomExcludes(bl, fl))
-    }
+    val (touched, untouched) = partitionFiles(m, filters)
     // survivors of candidate files (rows the predicate does NOT match —
     // NULL-condition rows survive, like ANSI DELETE) plus the new data,
     // staged as one rewrite
@@ -1766,25 +1717,15 @@ object TxTable {
                      filters: Seq[org.apache.spark.sql.sources.Filter],
                      primitive: CommitPrimitive = PosixLinkPrimitive): Long = {
     val root = Paths.get(tableDir)
-    val v = latestVersion(tableDir).getOrElse(
-      throw new IllegalStateException(
-        s"no committed version under $tableDir/$LogDir"))
+    val v = headVersion(tableDir)
     val m = readManifest(root, v)
-    val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+    val schema = m.schema
     val cond: org.apache.spark.sql.Column = filters
       .map(f => SourceFilterColumns.toColumn(f).getOrElse(
         throw new UnsupportedOperationException(
           s"DELETE condition not expressible as a source filter: $f")))
       .reduceOption(_ && _).getOrElse(functions.lit(true))
-    val (lst, lbl) = (logicalStats(m), logicalBlooms(m))
-    val skipFs = TxTransforms.withProjections(filters, m)
-    val skipSch = TxTransforms.skipSchema(schema, m)
-    val candidates = m.files.filter { f =>
-      val st = lst.getOrElse(f, Map.empty[String, TxStats.ColStat])
-      val bl = lbl.getOrElse(f, Map.empty[String, TxStats.FileBloom])
-      !skipFs.exists(fl =>
-        TxStats.excludes(st, skipSch, fl) || TxStats.bloomExcludes(bl, fl))
-    }
+    val candidates = partitionFiles(m, filters)._1
     if (candidates.isEmpty) return v
     val matched =
       readSnapshotFiles(spark, tableDir, schema,
@@ -1859,12 +1800,10 @@ object TxTable {
   def purgeDeletes(spark: SparkSession, tableDir: String,
                    primitive: CommitPrimitive = PosixLinkPrimitive): Long = {
     val root = Paths.get(tableDir)
-    val v = latestVersion(tableDir).getOrElse(
-      throw new IllegalStateException(
-        s"no committed version under $tableDir/$LogDir"))
+    val v = headVersion(tableDir)
     val m = readManifest(root, v)
     if (m.dvDirs.isEmpty) return v
-    val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+    val schema = m.schema
     val dvFiles = readDvFrame(spark, root, m.dvDirs)
       .select("file").distinct().collect().map(_.getString(0)).toSet
     val (touched, untouched) = m.files.partition(e =>
@@ -1923,8 +1862,7 @@ object TxTable {
       : Long = {
     val dvDirsOut = dvDirs.getOrElse(base.dvDirs)
     val root = Paths.get(tableDir)
-    val schema =
-      DataType.fromJson(base.schemaJson).asInstanceOf[StructType]
+    val schema = base.schema
     val changeDirOut: Option[String] =
       if (!base.properties.get(CdfProperty).contains("true")) None
       else changeData.map(cd =>
@@ -2039,7 +1977,7 @@ object TxTable {
     // head still refs carries by reference with zero sidecar reads
     // (the bloom-blind discipline applied to restore: a rollback where
     // the head kept all of v's files is a pure metadata commit)
-    val m = materializeBloomsFor(root, mLite,
+    val m = materializeBlooms(root, mLite,
       mLite.files.toSet -- head.bloomRefs.keySet)
     val manifest = Manifest(latest + 1, "restore", m.schemaJson, m.files,
       head.txns, m.stats, m.blooms, m.partitionColumns, m.constraints,
@@ -2203,9 +2141,7 @@ object TxTable {
                     primitive: CommitPrimitive = PosixLinkPrimitive)
       : Long = {
     val srcRoot = Paths.get(srcDir).toAbsolutePath
-    val v = version.getOrElse(latestVersion(srcDir).getOrElse(
-      throw new IllegalStateException(
-        s"no committed version under $srcDir/$LogDir")))
+    val v = version.getOrElse(headVersion(srcDir))
     val m = readManifestLite(srcRoot, v)
     require(m.dvDirs.isEmpty,
       s"cannot clone v$v of $srcDir: the snapshot carries deletion " +
@@ -2242,7 +2178,7 @@ object TxTable {
   def readVersion(spark: SparkSession, tableDir: String, v: Long): DataFrame = {
     val root = Paths.get(tableDir)
     val m = readManifest(root, v)
-    val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+    val schema = m.schema
     readSnapshotFiles(spark, tableDir, schema,
       TxTransforms.identityNames(m),
       m.files, m.dvDirs, mapping = m.columnMapping)
@@ -2310,9 +2246,7 @@ object TxTable {
       "cannot set and unset the same property in one statement: " +
         set.keySet.intersect(unset).toSeq.sorted.mkString(", "))
     val root = Paths.get(tableDir)
-    val v = latestVersion(tableDir).getOrElse(
-      throw new IllegalStateException(
-        s"no committed version under $tableDir/$LogDir"))
+    val v = headVersion(tableDir)
     val m = readManifestLite(root, v) // metadata-only commit: refs carry
     val missing = unset.diff(m.properties.keySet)
     require(missing.isEmpty,
@@ -2340,9 +2274,7 @@ object TxTable {
     require(both.isEmpty, "cannot add and drop the same constraint in " +
       s"one statement: ${both.toSeq.sorted.mkString(", ")}")
     val root = Paths.get(tableDir)
-    val v = latestVersion(tableDir).getOrElse(
-      throw new IllegalStateException(
-        s"no committed version under $tableDir/$LogDir"))
+    val v = headVersion(tableDir)
     val m = readManifestLite(root, v) // metadata-only commit: refs carry
     add.keys.foreach(name => require(!m.constraints.contains(name),
       s"constraint '$name' already exists on $tableDir " +
@@ -2387,9 +2319,7 @@ object TxTable {
       primitive: CommitPrimitive = PosixLinkPrimitive): Long = {
     require(add.nonEmpty || drop.nonEmpty, "no schema changes")
     val root = Paths.get(tableDir)
-    val v = latestVersion(tableDir).getOrElse(
-      throw new IllegalStateException(
-        s"no committed version under $tableDir/$LogDir"))
+    val v = headVersion(tableDir)
     // a DROP scrubs the dropped column out of every carried file's
     // blooms — the ONE commit that rewrites carried bloom bytes, so it
     // alone materializes them (and declares the rewrites to publish).
@@ -2403,7 +2333,7 @@ object TxTable {
       if (drop.isEmpty || (mLite.bloomRefs.isEmpty && mLite.blooms.isEmpty))
         mLite
       else readManifest(root, v)
-    val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+    val schema = m.schema
     val existing = schema.fieldNames.map(_.toLowerCase).toSet
     add.foreach { f =>
       require(f.nullable,
@@ -2528,6 +2458,29 @@ object TxTable {
         rev.getOrElse(k, k) -> v }).toMap
     }
 
+  /** THE ONE MANIFEST-LEVEL SPLIT of `m`'s files by a predicate:
+    * (files that may hold a row on which every filter is TRUE, files
+    * provably free of one) — [[TxStats.mayMatch]] per file. Filters
+    * carry LOGICAL names, so stats and blooms are read through the
+    * logical view (survives RENAME COLUMN), and hidden-partitioning
+    * projections sharpen the cut (a predicate on a bucketed or
+    * day-partitioned source column prunes to its derived directories,
+    * [[TxTransforms]] scaladoc). Untranslatable conjuncts never reach
+    * here and prune nothing; no filters touch every file. Every
+    * predicate-scoped rewrite selects its files here: OPTIMIZE/ZORDER
+    * WHERE, DELETE (both arms), replaceWhere, UPDATE and MERGE. */
+  private[graft] def partitionFiles(m: Manifest,
+      filters: Seq[org.apache.spark.sql.sources.Filter])
+      : (Seq[String], Seq[String]) =
+    if (filters.isEmpty) (m.files, Seq.empty)
+    else {
+      val (lst, lbl) = (logicalStats(m), logicalBlooms(m))
+      val skipFs = TxTransforms.withProjections(filters, m)
+      val skipSch = TxTransforms.skipSchema(m.schema, m)
+      m.files.partition(f => TxStats.mayMatch(lst.getOrElse(f, Map.empty),
+        lbl.getOrElse(f, Map.empty), skipSch, skipFs))
+    }
+
   /** `ALTER TABLE … RENAME COLUMN` as ONE metadata version (op
     * `rename`) — zero data movement, the column-id-mapping design
     * Delta/Iceberg use: the logical schema changes, the manifest
@@ -2549,11 +2502,9 @@ object TxTable {
     require(to.nonEmpty && !to.contains('$'),
       s"illegal column name '$to'")
     val root = Paths.get(tableDir)
-    val v = latestVersion(tableDir).getOrElse(
-      throw new IllegalStateException(
-        s"no committed version under $tableDir/$LogDir"))
+    val v = headVersion(tableDir)
     val m = readManifestLite(root, v) // metadata-only commit: refs carry
-    val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+    val schema = m.schema
     require(schema.fieldNames.contains(from),
       s"no column '$from' in ${schema.simpleString}")
     require(!schema.fieldNames.exists(
@@ -2643,13 +2594,11 @@ object TxTable {
                   newType: DataType,
                   primitive: CommitPrimitive = PosixLinkPrimitive): Long = {
     val root = Paths.get(tableDir)
-    val v = latestVersion(tableDir).getOrElse(
-      throw new IllegalStateException(
-        s"no committed version under $tableDir/$LogDir"))
+    val v = headVersion(tableDir)
     // lite: a widen rewrites STAT strings only — blooms key by
     // magnitude-truncated longs, identical before and after promotion
     val m = readManifestLite(root, v)
-    val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+    val schema = m.schema
     require(schema.fieldNames.contains(col),
       s"no column '$col' in ${schema.simpleString}")
     require(!m.partitionColumns.contains(col),
@@ -3437,9 +3386,7 @@ object TxTable {
     * version. */
   def checkpoint(tableDir: String): Long = {
     val root = Paths.get(tableDir)
-    val v = latestVersion(tableDir).getOrElse(
-      throw new IllegalStateException(
-        s"no committed version under $tableDir/$LogDir"))
+    val v = headVersion(tableDir)
     if (!hasCkpt(root, v))
       writeCheckpoint(root, readManifestLite(root, v))
     v
@@ -3459,9 +3406,7 @@ object TxTable {
 
   def logSummary(tableDir: String): LogSummary = {
     val root = Paths.get(tableDir)
-    val latest = latestVersion(tableDir).getOrElse(
-      throw new IllegalStateException(
-        s"no committed version under $tableDir/$LogDir"))
+    val latest = headVersion(tableDir)
     val ckpt = listNames(root.resolve(LogDir))
       .collect { case CkptName(v) if hasCkpt(root, v) => v }
       .filter(_ <= latest).sorted.lastOption
@@ -3804,26 +3749,13 @@ object TxTable {
     * already carries. A referenced sidecar missing an expected file
     * entry is corruption and fails loudly — a silent miss would merely
     * weaken skipping, which is exactly how bugs hide. */
-  private def materializeBlooms(root: Path, m: Manifest): Manifest = {
-    if (m.bloomRefs.isEmpty) return m
-    val loaded = m.bloomRefs.toSeq.groupBy(_._2).toSeq.flatMap {
-      case (rel, fs) =>
-        val content = readBloomSidecar(root, rel)
-        fs.map { case (f, _) =>
-          f -> content.getOrElse(f, throw new IllegalStateException(
-            s"bloom sidecar $rel of $root lacks an entry for $f"))
-        }
-    }.toMap
-    m.copy(blooms = m.blooms ++ loaded)
-  }
-
-  /** [[materializeBlooms]] restricted to `wanted` files: reads only the
-    * sidecars those files reference — what the row-level rebase's
-    * overlap check uses to price a HANDFUL of winner-added files
-    * without paying the whole table's bloom bytes on the commit path. */
-  private def materializeBloomsFor(root: Path, m: Manifest,
-      wanted: Set[String]): Manifest = {
-    val refs = m.bloomRefs.view.filterKeys(wanted).toMap
+  /** `wanted` restricts the load to the sidecars those files reference
+    * — what the row-level rebase's overlap check and restore use to
+    * price a HANDFUL of files without paying the whole table's bloom
+    * bytes on the commit path. */
+  private def materializeBlooms(root: Path, m: Manifest,
+      wanted: String => Boolean = _ => true): Manifest = {
+    val refs = m.bloomRefs.filter { case (f, _) => wanted(f) }
     if (refs.isEmpty) return m
     val loaded = refs.toSeq.groupBy(_._2).toSeq.flatMap {
       case (rel, fs) =>

@@ -329,12 +329,18 @@ private[graft] object TxTransforms {
     }
   }
 
-  /** Augment a skip-filter list with its transform projections. */
+  /** Augment a skip-filter list with its transform projections — the
+    * one place skip filters gain their projected conjuncts. */
+  def withProjections(filters: Seq[org.apache.spark.sql.sources.Filter],
+                      fields: Seq[PartitionField])
+      : Seq[org.apache.spark.sql.sources.Filter] =
+    filters ++ filters.flatMap(projectFilter(_, fields))
+
   def withProjections(filters: Seq[org.apache.spark.sql.sources.Filter],
                       m: TxTable.Manifest)
       : Seq[org.apache.spark.sql.sources.Filter] =
     if (m.partitionTransforms.isEmpty) filters
-    else filters ++ filters.flatMap(projectFilter(_, spec(m)))
+    else withProjections(filters, spec(m))
 
   /** The schema the STATS layer evaluates against: the table schema
     * plus one typed field per hidden partition field, so a projected

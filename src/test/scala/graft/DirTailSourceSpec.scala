@@ -202,6 +202,23 @@ class DirTailSourceSpec extends SparkSpec {
     assert(!names.exists(_.startsWith(".stage-")), names) // replay reaped
   }
 
+  test("streaming sink: a writer with a query id refuses an id-less epoch marker") {
+    val out = Files.createTempDirectory("dirtail-legacy")
+    // a zero-byte marker for epoch 0 proves no ownership: this query
+    // dropping its rows as "already replayed" would lose them
+    Files.write(out.resolve(f".epoch-${0L}%010d.committed"),
+      Array.emptyByteArray): Unit
+    val w = new graft.sources.DirTailStreamingWrite(schema, out.toString,
+      queryId = "q-1")
+    val dw = new graft.sources.DirTailWriterFactory(schema, out.toString)
+      .createWriter(0, 0L, 0L)
+    dw.write(new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+      Array[Any](1L, org.apache.spark.unsafe.types.UTF8String.fromString("k"),
+        1.5, 1000000L)))
+    val e = intercept[IllegalStateException](w.commit(0L, Array(dw.commit())))
+    assert(e.getMessage.contains("recorded no query id"), e.getMessage)
+  }
+
   test("filter pushdown: builder contract, union parse, projected emit") {
     import org.apache.spark.sql.sources._
     val b = new graft.sources.DirTailScanBuilder(schema, "/tmp/x")

@@ -98,6 +98,30 @@ class TrianglesSpec extends SparkSpec {
     assert(e.getMessage.contains("did not converge"))
   }
 
+  test("unpersistAll releases kCore's and connectedComponents' checkpoints") {
+    val sc = spark.sparkContext
+    def cached(): Set[Int] = sc.getRDDStorageInfo.map(_.id).toSet
+    graft.ext.Dedup.unpersistAll(blocking = true)
+    val before = cached()
+    val k4 = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
+      (4L, 5L)).toDF("src", "dst")
+    // converging: the answer is the final round's checkpoint
+    val core = Triangles.kCore(k4, "src", "dst", k = 3)
+    assert(core.collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L, 4L))
+    // over budget: the failed run's rounds stay checkpointed
+    val path = (1L until 12L).map(i => (i, i + 1)).toDF("src", "dst")
+    intercept[IllegalArgumentException] {
+      Triangles.kCore(path, "src", "dst", k = 2, maxRounds = 2).collect()
+    }
+    val comps = graft.ext.Components.connectedComponents(path)
+    assert(comps.select("comp").distinct().collect().map(_.getLong(0))
+      .toSeq == Seq(1L))
+    assert((cached() -- before).nonEmpty, "the operators cached nothing")
+    graft.ext.Dedup.unpersistAll(blocking = true)
+    assert((cached() -- before).isEmpty,
+      s"blocks left after unpersistAll: ${cached() -- before}")
+  }
+
   test("coActivityEdges refuses an over-budget bucket loudly") {
     val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:30")
     val ev = (1L to 10L).map(u => (u, ts)).toDF("user_id", "ts")

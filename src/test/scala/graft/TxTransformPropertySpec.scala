@@ -26,18 +26,12 @@ class TxTransformPropertySpec extends SparkSpec {
     val schema = org.apache.spark.sql.types.DataType
       .fromJson(m.schemaJson)
       .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val skipSch = TxTransforms.skipSchema(schema, m)
-    val lst = TxTable.logicalStats(m)
     // for EVERY id: the projected filters must keep at least the file
     // that actually holds it (soundness), and the pruned read must
     // still find the row (end-to-end)
     ids.take(50).foreach { id =>
-      val fs = TxTransforms.withProjections(
-        Seq(org.apache.spark.sql.sources.EqualTo("id", id)), m)
-      val kept = m.files.filter { f =>
-        !fs.exists(fl => graft.sources.TxStats.excludes(
-          lst.getOrElse(f, Map.empty), skipSch, fl))
-      }
+      val kept = TxTable.partitionFiles(m,
+        Seq(org.apache.spark.sql.sources.EqualTo("id", id)))._1
       val hit = spark.read.schema(schema)
         .parquet(kept.map(f => s"$tbl/$f"): _*)
         .filter(col("id") === id).count()
@@ -45,12 +39,8 @@ class TxTransformPropertySpec extends SparkSpec {
         s"${kept.size}/${m.files.size} files)")
     }
     // and the projection actually prunes (7 buckets → most files out)
-    val sample = TxTransforms.withProjections(
-      Seq(org.apache.spark.sql.sources.EqualTo("id", ids.head)), m)
-    val keptN = m.files.count { f =>
-      !sample.exists(fl => graft.sources.TxStats.excludes(
-        lst.getOrElse(f, Map.empty), skipSch, fl))
-    }
+    val keptN = TxTable.partitionFiles(m,
+      Seq(org.apache.spark.sql.sources.EqualTo("id", ids.head)))._1.size
     assert(keptN < m.files.size, "bucket projection never prunes")
   }
 
@@ -93,16 +83,8 @@ class TxTransformPropertySpec extends SparkSpec {
     val schema = org.apache.spark.sql.types.DataType
       .fromJson(m.schemaJson)
       .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val skipSch = TxTransforms.skipSchema(schema, m)
-    val lst = TxTable.logicalStats(m)
     def keptFor(fs: Seq[org.apache.spark.sql.sources.Filter])
-        : Seq[String] = {
-      val all = TxTransforms.withProjections(fs, m)
-      m.files.filter { f =>
-        !all.exists(fl => graft.sources.TxStats.excludes(
-          lst.getOrElse(f, Map.empty), skipSch, fl))
-      }
-    }
+        : Seq[String] = TxTable.partitionFiles(m, fs)._1
     import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThan}
     // random ranges, including EXACT midnight bounds (the strict-<
     // tightening case): the pruned read equals the full-scan answer
@@ -143,16 +125,10 @@ class TxTransformPropertySpec extends SparkSpec {
     val m = TxTable.readManifest(java.nio.file.Paths.get(tbl), 1L)
     val schema = org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
       .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val skipSch = TxTransforms.skipSchema(schema, m)
-    val lst = TxTable.logicalStats(m)
     import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThan}
     ranges.foreach { case (lo, hi) =>
-      val fs = TxTransforms.withProjections(
-        Seq(GreaterThanOrEqual(col0, lo), LessThan(col0, hi)), m)
-      val kept = m.files.filter { f =>
-        !fs.exists(fl => graft.sources.TxStats.excludes(
-          lst.getOrElse(f, Map.empty), skipSch, fl))
-      }
+      val kept = TxTable.partitionFiles(m,
+        Seq(GreaterThanOrEqual(col0, lo), LessThan(col0, hi)))._1
       val pruned =
         (if (kept.isEmpty)
           spark.createDataFrame(

@@ -48,27 +48,23 @@ private[graft] object QueriesJoinsOlap {
     // degree orientation + wedge join (Triangles scaladoc: Suri &
     // Vassilvitskii's last-reducer fix — every out-degree capped at
     // O(sqrt(m)), three equi-joins, no OR-join, no cartesian). The edge
-    // builder ROUTES (coActivityEdgesAuto): plain pair join under the
-    // bucket cap, the sharded triangle-partitioned formulation over it —
-    // at 100× the query switches plans instead of refusing -----
+    // builder derives its shard count from the measured worst bucket;
+    // the fixtures' buckets need one shard, the per-bucket pair join -----
     "graph_triangles" -> ((s: SparkSession, dir: String) =>
       graft.ext.Triangles.triangles(
-          graft.ext.Triangles.coActivityEdgesAuto(Tables.events(s, dir)),
+          graft.ext.Triangles.coActivityEdges(Tables.events(s, dir)),
           "src", "dst")
         .orderBy("a", "b", "c")),
-    // ----- the ROUTER's sharded arm certified end-to-end: a cap of 1
-    // forces every graph that has any edge at all over the threshold, so
-    // the triangle list is computed over coActivityEdgesSharded's
-    // shard-pair join groups (path-asserted in TrianglesSpec: the routed
-    // plan carries the shard explode) — same oracle as graph_triangles,
-    // two edge-builder plans, one answer. shards=4 (not the default 16):
-    // the path assertion is identical at any shard count, and S(S+1)/2
-    // replication drops 17x -> 5x, cutting the certification's standing
-    // bench cost without weakening it -----
+    // ----- the multi-shard plan certified end to end: minShards = 4
+    // splits every bucket over 4 shards, so the triangle list is computed
+    // over the shard-pair join groups (path-asserted in TrianglesSpec:
+    // the plan carries the shard explode) — same oracle as
+    // graph_triangles, two shard counts, one answer. 4, not 16: the path
+    // is the same at any S > 1, and S+1 replication stays at 5x -----
     "graph_triangles_sharded" -> ((s: SparkSession, dir: String) =>
       graft.ext.Triangles.triangles(
-          graft.ext.Triangles.coActivityEdgesAuto(Tables.events(s, dir),
-            maxBucketUsers = 1L, shards = 4),
+          graft.ext.Triangles.coActivityEdges(Tables.events(s, dir),
+            minShards = 4),
           "src", "dst")
         .orderBy("a", "b", "c")),
     // ----- local clustering coefficients over the same graph: per-node
@@ -76,7 +72,7 @@ private[graft] object QueriesJoinsOlap {
     // NULL for degree-1 nodes (Triangles.clusteringCoefficients) -----
     "graph_clustering" -> ((s: SparkSession, dir: String) =>
       graft.ext.Triangles.clusteringCoefficients(
-          graft.ext.Triangles.coActivityEdgesAuto(Tables.events(s, dir)),
+          graft.ext.Triangles.coActivityEdges(Tables.events(s, dir)),
           "src", "dst")
         .orderBy("node")),
     // ----- k-core of the same co-activity graph: iterative peeling
@@ -86,7 +82,7 @@ private[graft] object QueriesJoinsOlap {
     // and the oracle unrolls exactly those 6 no-op-tolerant rounds -----
     "graph_kcore" -> ((s: SparkSession, dir: String) =>
       graft.ext.Triangles.kCore(
-          graft.ext.Triangles.coActivityEdgesAuto(Tables.events(s, dir)),
+          graft.ext.Triangles.coActivityEdges(Tables.events(s, dir)),
           "src", "dst", k = 8, maxRounds = 6)
         .orderBy("node")),
     // ----- hourly resample with explicit gap rows: zero counts, NULL

@@ -47,83 +47,83 @@ final class HttpApi(service: QueryService, port: Int = 0) {
     HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
   }
 
-  server.createContext("/query", (ex: HttpExchange) => handle(ex) {
-    case "POST" =>
-      val path = ex.getRequestURI.getPath
-      if (path == "/query" || path == "/query/") run(ex, service.query)
-      else if (path == "/query/json") run(ex, service.queryJson)
-      else (404, errorJson("not found", "HTTP_ERROR", 404, None))
-    case _ => (405, errorJson("method not allowed", "HTTP_ERROR", 405, None))
-  })
+  private def test(): (Int, ObjectNode) = {
+    val t0 = System.nanoTime()
+    val (mongoJson, genSec) = service.test()
+    val out = mapper.createObjectNode()
+    out.put("status", "ok")
+    out.put("test_query", "Find all employees")
+    out.set[ObjectNode]("generated_mongo", mapper.readTree(mongoJson))
+    out.put("execution_time",
+      math.rint((System.nanoTime() - t0) / 1e9 * 1000) / 1000)
+    out.put("generation_time", genSec)
+    (200, out)
+  }
 
-  server.createContext("/test", (ex: HttpExchange) => handle(ex) {
-    // JDK contexts match by raw prefix: /testing would answer here
-    case "GET" if exactPath(ex, "/test") =>
-      val t0 = System.nanoTime()
-      val (mongoJson, genSec) = service.test()
-      val out = mapper.createObjectNode()
-      out.put("status", "ok")
-      out.put("test_query", "Find all employees")
-      out.set[ObjectNode]("generated_mongo", mapper.readTree(mongoJson))
-      out.put("execution_time",
-        math.rint((System.nanoTime() - t0) / 1e9 * 1000) / 1000)
-      out.put("generation_time", genSec)
-      (200, out)
-    case "GET" => (404, errorJson("not found", "HTTP_ERROR", 404, None))
-    case _ => (405, errorJson("method not allowed", "HTTP_ERROR", 405, None))
-  })
+  private def health(): (Int, ObjectNode) = {
+    val h = service.health()
+    val out = mapper.createObjectNode()
+    // reference fields: mongodb_connected → storage, llm_connected →
+    // engine (the deterministic compiler needs no remote LLM; the
+    // Spark session plays the "is the backend up" role)
+    out.put("status", if (h.ok) "healthy" else "degraded")
+    out.put("engine_connected", h.engineOk)
+    out.put("storage_connected", h.storageOk)
+    (200, out)
+  }
 
-  server.createContext("/health", (ex: HttpExchange) => handle(ex) {
-    case "GET" if exactPath(ex, "/health") =>
-      val h = service.health()
-      val out = mapper.createObjectNode()
-      // reference fields: mongodb_connected → storage, llm_connected →
-      // engine (the deterministic compiler needs no remote LLM; the
-      // Spark session plays the "is the backend up" role)
-      out.put("status", if (h.ok) "healthy" else "degraded")
-      out.put("engine_connected", h.engineOk)
-      out.put("storage_connected", h.storageOk)
-      (200, out)
-    case "GET" => (404, errorJson("not found", "HTTP_ERROR", 404, None))
-    case _ => (405, errorJson("method not allowed", "HTTP_ERROR", 405, None))
-  })
+  private def history(): (Int, ObjectNode) = {
+    // the reference keeps history in the UI session (main.py:103-131,
+    // summary metrics :263-268); here the service accumulates it and
+    // this endpoint serves rows + the same three summary stats
+    // ONE snapshot serves both the rows and the summary stats — two
+    // independent reads could disagree when a query lands in between
+    val snap = service.history
+    val st = QueryService.statsOf(snap)
+    val out = mapper.createObjectNode()
+    out.put("total_queries", st.nQueries)
+    out.put("success_rate", st.successRate)
+    out.put("mean_execution_time", st.meanExec)
+    val rows = mapper.createArrayNode()
+    snap.foreach { e =>
+      val r = mapper.createObjectNode()
+      r.put("query", e.query)
+      r.put("db", e.db)
+      r.put("collection", e.collection)
+      r.put("success", e.success)
+      r.put("execution_time", e.executionTime)
+      r.put("result_count", e.resultCount)
+      e.error.foreach(r.put("error", _))
+      rows.add(r): Unit
+    }
+    out.set[ArrayNode]("history", rows)
+    (200, out)
+  }
 
-  server.createContext("/history", (ex: HttpExchange) => handle(ex) {
-    case "GET" if exactPath(ex, "/history") =>
-      // the reference keeps history in the UI session (main.py:103-131,
-      // summary metrics :263-268); here the service accumulates it and
-      // this endpoint serves rows + the same three summary stats
-      // ONE snapshot serves both the rows and the summary stats — two
-      // independent reads could disagree when a query lands in between
-      val snap = service.history
-      val st = QueryService.statsOf(snap)
-      val out = mapper.createObjectNode()
-      out.put("total_queries", st.nQueries)
-      out.put("success_rate", st.successRate)
-      out.put("mean_execution_time", st.meanExec)
-      val rows = mapper.createArrayNode()
-      snap.foreach { e =>
-        val r = mapper.createObjectNode()
-        r.put("query", e.query)
-        r.put("db", e.db)
-        r.put("collection", e.collection)
-        r.put("success", e.success)
-        r.put("execution_time", e.executionTime)
-        r.put("result_count", e.resultCount)
-        e.error.foreach(r.put("error", _))
-        rows.add(r): Unit
-      }
-      out.set[ArrayNode]("history", rows)
-      (200, out)
-    case "DELETE" if exactPath(ex, "/history") => // main.py:275
-      service.clearHistory()
-      val out = mapper.createObjectNode()
-      out.put("status", "cleared")
-      (200, out)
-    case "GET" | "DELETE" =>
-      (404, errorJson("not found", "HTTP_ERROR", 404, None))
-    case _ => (405, errorJson("method not allowed", "HTTP_ERROR", 405, None))
-  })
+  private def clearHistory(): (Int, ObjectNode) = {
+    service.clearHistory() // main.py:275
+    val out = mapper.createObjectNode()
+    out.put("status", "cleared")
+    (200, out)
+  }
+
+  /** The one route table: exact path → method → handler. Each path but
+    * `/query/json` also answers with one trailing slash. A path not in
+    * the table is 404 and a method its path does not take is 405, both
+    * in the error envelope. */
+  private val routes =
+    Map[String, Map[String, HttpExchange => (Int, ObjectNode)]](
+      "/query" -> Map("POST" -> (run(_, service.query))),
+      "/test" -> Map("GET" -> (_ => test())),
+      "/health" -> Map("GET" -> (_ => health())),
+      "/history" -> Map("GET" -> (_ => history()),
+        "DELETE" -> (_ => clearHistory()))
+    ).flatMap { case (p, r) => Seq(p -> r, s"$p/" -> r) } +
+      ("/query/json" -> Map("POST" -> (run(_, service.queryJson))))
+
+  // one root context: the JDK matches contexts by raw prefix and answers
+  // paths outside every context with its own HTML page
+  server.createContext("/", (ex: HttpExchange) => handle(ex))
 
   /** Start listening; returns the bound port (useful with port = 0). */
   def start(): Int = {
@@ -211,11 +211,6 @@ final class HttpApi(service: QueryService, port: Int = 0) {
 
   private val MaxBodyBytes = 1 << 20
 
-  private def exactPath(ex: HttpExchange, p: String): Boolean = {
-    val got = ex.getRequestURI.getPath
-    got == p || got == p + "/"
-  }
-
   private def errorJson(msg: String, errType: String, status: Int,
                         suggestion: Option[String]): ObjectNode = {
     val out = mapper.createObjectNode()
@@ -227,13 +222,18 @@ final class HttpApi(service: QueryService, port: Int = 0) {
     out
   }
 
-  /** Shared respond-or-500 wrapper: route on method, serialize, reply. */
-  private def handle(ex: HttpExchange)(
-      route: PartialFunction[String, (Int, ObjectNode)]): Unit = {
+  /** Route on (method, exact path), serialize, reply; a handler's
+    * exception is a 500. */
+  private def handle(ex: HttpExchange): Unit = {
     val (status, node) =
-      try route.applyOrElse(ex.getRequestMethod, (_: String) =>
-        (405, errorJson("method not allowed", "HTTP_ERROR", 405, None)))
-      catch {
+      try routes.get(ex.getRequestURI.getPath) match {
+        case None => (404, errorJson("not found", "HTTP_ERROR", 404, None))
+        case Some(byMethod) => byMethod.get(ex.getRequestMethod) match {
+          case Some(h) => h(ex)
+          case None =>
+            (405, errorJson("method not allowed", "HTTP_ERROR", 405, None))
+        }
+      } catch {
         case e: Exception =>
           (500, errorJson(s"Internal server error: ${e.getMessage}",
             "INTERNAL_ERROR", 500, None))

@@ -330,18 +330,6 @@ object Dedup {
     out
   }
 
-  /** MinHash signatures as ONE row-local codegen'd pass
-    * ([[graft.functions.MinHashSignature]]): a document's sketch depends
-    * only on its own shingle set, so the r2 explode → shuffle →
-    * 128-aggregate formulation (and before that, 128 interpreted array
-    * transforms) was pure overhead. Zero shuffles; each input split
-    * sketches independently — the shape that scales to any table size. */
-  def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
-                        n: Int, numHashes: Int): DataFrame =
-    df.select(col(idCol).cast("long").as("id"),
-      minhash_signature(shingle_hashes(col(textCol), n),
-        minhashCoeffs(numHashes)).as("sig"))
-
   /** Banded-LSH near-dup pairs with exact Jaccard verification.
     *
     * numHashes = bands × rowsPerBand. Candidate pairs come from an equi-join

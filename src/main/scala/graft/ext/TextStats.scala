@@ -938,7 +938,7 @@ object TextStats {
     * tables aggregate with map-side combine; one final per-doc
     * aggregation. Documents shorter than 3 characters emit nothing.
     *
-    * PLAN ROUTING (the `asofJoinAuto`/`coActivityEdgesAuto` discipline):
+    * PLAN ROUTING (the `asofJoinAuto` measure-then-route discipline):
     * one bounded fetch of the trigram counts is both the guard and the
     * broadcast side. Under `maxVocab` (character-trigram vocabulary is
     * bounded — ~1M entries at any corpus size) the fetched rows and the

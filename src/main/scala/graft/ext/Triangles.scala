@@ -27,6 +27,11 @@ import org.apache.spark.sql.functions._
   * closing-edge probe), all on key columns — no cartesian, no OR-join
   * (the closing edge is probed through an id-normalized copy of the
   * oriented set precisely so the match is a single conjunctive key).
+  *
+  * Input graphs: [[coActivityEdges]] is the one co-activity edge
+  * builder. It splits each time bucket's quadratic pair work with the
+  * same paper's shard-partitioning scheme, at a shard count S derived
+  * from the measured worst bucket; S = 1 is the per-bucket pair join.
   */
 object Triangles {
 
@@ -199,106 +204,44 @@ object Triangles {
     deg.select(col("n").as("node"), col("d").as("core_deg"))
   }
 
-  /** Co-activity edges: users active within the same time bucket. The
-    * self-join is per-bucket quadratic, so a loud guard measures the
-    * largest bucket FIRST and refuses over-budget graphs (the
-    * jaccardPairs discipline) — at corpus scale a global minute bucket
-    * needs a finer key (minute × shard) or a df-cut, both policy choices
-    * the caller makes consciously, not an operator that silently
-    * cartesians. */
+  /** Co-activity edges: users active within the same minute bucket, as
+    * id-ordered (src, dst) pairs. One measured, triangle-partitioned
+    * self-join over the persisted distinct (bucket, uid) frame.
+    *
+    * Scheme (the all-pairs "triangle partitioning"): each user gets a
+    * shard `s = hash(uid) mod S`, and a pair (u, v) with shards (i, j),
+    * i ≤ j, is produced by EXACTLY ONE join group keyed (bucket, i, j) —
+    * the left side replicates each row to groups (s, j) for j ≥ s, the
+    * right side to (i, s) for i ≤ s. Same-shard groups keep pairs by
+    * `uid_a < uid_b`; cross-shard groups keep every pair, id-normalized.
+    * Replication is S+1 copies per row, and a task's pair count drops
+    * from |bucket|² to ⌈|bucket|/S⌉².
+    *
+    * S is derived from ONE metadata-sized action, the largest bucket's
+    * user count: the smallest S ≥ `minShards` with ⌈worst/S⌉² ≤
+    * `maxTaskPairs` ([[shardCount]]). At S = 1 the shard is 0, each
+    * explode yields one row, and the join is the plain per-bucket pair
+    * join on `a.b0 = b.b0 AND a.uid < b.uid`. A bucket that would need
+    * more than 16 shards is refused loudly: at corpus scale that needs
+    * a finer bucket key or a df-cut, a policy choice the caller makes. */
   def coActivityEdges(events: DataFrame, userCol: String = "user_id",
-                      tsCol: String = "ts",
-                      maxBucketUsers: Long = 10000L): DataFrame = {
-    val grp = bucketUsers(events, userCol, tsCol)
-    // Default cap 10k ≈ 5×10⁷ pairs from the worst bucket — survivable
-    // on one task. (The old 100k default admitted ~5×10⁹ pairs before
-    // "guarding": a cap that fires only after the blowup it exists to
-    // prevent has been paid is no cap.) Raise it deliberately, or use
-    // [[coActivityEdgesSharded]] — the 100× formulation that splits each
-    // bucket's quadratic work across shard-pair tasks.
-    pairJoinEdges(grp, worstBucket(grp), maxBucketUsers)
-  }
-
-  /** The shared distinct (minute-bucket, uid) frame — persisted: the
-    * guard action plus both sides of the pair join read it (TrackedCache
-    * lifecycle). Extracted so [[coActivityEdgesAuto]] builds it ONCE and
-    * hands it to the chosen arm instead of each arm re-deriving and
-    * re-persisting an identical copy (measured: three ~0.4 s distinct
-    * jobs per declared graph query before the share). */
-  private def bucketUsers(events: DataFrame, userCol: String,
-                          tsCol: String): DataFrame =
-    TrackedCache.persistTracked(events
+                      tsCol: String = "ts", minShards: Int = 1,
+                      maxTaskPairs: Long = 50000000L): DataFrame = {
+    // persisted: the worst-bucket action and both join sides read it
+    // (TrackedCache lifecycle)
+    val grp0 = TrackedCache.persistTracked(events
       .where(col(userCol).isNotNull && col(tsCol).isNotNull)
       .select(date_trunc("minute", col(tsCol)).as("b0"),
         col(userCol).as("uid"))
       .distinct())
-
-  /** One metadata-sized action: the largest bucket's user count.
-    * coalesce: max() over ZERO buckets is NULL, and an empty events
-    * frame must yield an empty edge list, not an NPE in the guard. */
-  private def worstBucket(grp: DataFrame): Long =
-    grp.groupBy(col("b0")).agg(count(lit(1)).as("c"))
+    // coalesce: max() over ZERO buckets is NULL, and an empty events
+    // frame must yield an empty edge list
+    val worst = grp0.groupBy(col("b0")).agg(count(lit(1)).as("c"))
       .agg(coalesce(max(col("c")), lit(0L))).head().getLong(0)
-
-  /** The under-cap arm's per-bucket pair join over an already-prepared
-    * `grp`, with the guard evaluated on the already-measured `worst`. */
-  private def pairJoinEdges(grp: DataFrame, worst: Long,
-                            maxBucketUsers: Long): DataFrame = {
-    require(worst <= maxBucketUsers,
-      s"coActivityEdges: largest bucket holds $worst users (cap " +
-        s"$maxBucketUsers) — the pair join would blow up; use " +
-        "coActivityEdgesSharded, shard the bucket key, or raise the cap " +
-        "deliberately")
-    grp.as("a").join(grp.as("b"),
-        col("a.b0") === col("b.b0") && col("a.uid") < col("b.uid"))
-      .select(col("a.uid").as("src"), col("b.uid").as("dst"))
-      .distinct()
-  }
-
-  /** Sharded co-activity edges — the 100-TB formulation of
-    * [[coActivityEdges]]. Same output edge set, but each time bucket's
-    * quadratic pair work is split across `shards·(shards+1)/2` shard-pair
-    * tasks instead of landing on one reducer.
-    *
-    * Scheme (the classic all-pairs "triangle partitioning"): assign each
-    * user a shard `s = hash(uid) mod S`; a pair (u, v) with shards (i, j),
-    * i ≤ j, is produced by EXACTLY ONE join group keyed (bucket, i, j) —
-    * the left side replicates each row to groups (s, j) for j ≥ s, the
-    * right side to (i, s) for i ≤ s, so group (i, j) holds shard-i users
-    * on the left and shard-j users on the right. Replication is S+1
-    * copies per row (linear wire cost) in exchange for per-task pair
-    * count dropping from |bucket|² to (|bucket|/S)² — the shuffle key
-    * (b0, i, j) is exactly the "minute × shard" key the single-reducer
-    * guard tells you to reach for.
-    *
-    * Same-shard groups (i = j) hold the shard on both sides and keep
-    * pairs by `uid_a < uid_b`; cross-shard groups keep every (left,
-    * right) pair — each once, then id-normalized so the output matches
-    * [[coActivityEdges]] exactly (property-tested equivalence,
-    * `TrianglesSpec`). */
-  def coActivityEdgesSharded(events: DataFrame, userCol: String = "user_id",
-                             tsCol: String = "ts", shards: Int = 16,
-                             maxTaskPairs: Long = 50000000L): DataFrame = {
-    require(shards >= 1, s"shards must be >= 1, got $shards")
-    val grp = bucketUsers(events, userCol, tsCol)
-    shardedEdges(grp, worstBucket(grp), shards, maxTaskPairs)
-  }
-
-  /** The over-cap arm's triangle-partitioned join over an
-    * already-prepared `grp` (shard column added here — a projection over
-    * the cached frame, no second distinct/persist). */
-  private def shardedEdges(grp0: DataFrame, worst: Long, shards: Int,
-                           maxTaskPairs: Long): DataFrame = {
-    val grp = grp0.withColumn("s", pmod(hash(col("uid")), lit(shards)))
-    // guard on the PER-TASK pair count (worst bucket / S)² — the quantity
-    // sharding actually bounds
-    val perShard = (worst + shards - 1) / shards.toLong
-    require(perShard * perShard <= maxTaskPairs,
-      s"coActivityEdgesSharded: worst bucket $worst over $shards shards " +
-        s"is ~${perShard * perShard} pairs per task (cap $maxTaskPairs) " +
-        "— raise shards")
+    val n = shardCount(worst, minShards, maxTaskPairs)
+    val grp = grp0.withColumn("s", pmod(hash(col("uid")), lit(n)))
     val left = grp.withColumn("j",
-      explode(sequence(col("s"), lit(shards - 1))))
+      explode(sequence(col("s"), lit(n - 1))))
     val right = grp.withColumn("i",
       explode(sequence(lit(0), col("s"))))
     left.as("a").join(right.as("b"),
@@ -310,37 +253,25 @@ object Triangles {
       .distinct()
   }
 
-  /** Measure-then-route co-activity edges — the [[graft.plans.AsOfPhys]]
-    * `asofJoinAuto` discipline applied to the edge builder: ONE cheap
-    * metadata-sized action measures the worst bucket (the same aggregate
-    * both arms already run as their guard), then the plain per-bucket
-    * pair join ([[coActivityEdges]]) serves graphs under the cap and the
-    * sharded triangle-partitioned formulation ([[coActivityEdgesSharded]],
-    * property-tested output-identical) serves graphs over it. At 100×
-    * data the DECLARED graph queries switch plans instead of refusing on
-    * the cap — the guard's measurement becomes the router's decision.
-    *
-    * The distinct (bucket, uid) frame is built ONCE and persisted; the
-    * measurement and the chosen arm's join consume the SAME frame and
-    * the SAME measured value — no re-derivation, no second persist, no
-    * repeated guard aggregate.
-    *
-    * `shards` sizes the over-cap arm so its per-task pair count is
-    * ~(worst/shards)²; the default 16 turns a 10×-the-cap bucket (100k
-    * users ≈ 5×10⁹ pairs) into ~4×10⁷ pairs per shard-pair task across
-    * 136 tasks. The sharded arm's own guard still refuses graphs the
-    * shard count cannot absorb — raise `shards` deliberately there. */
-  def coActivityEdgesAuto(events: DataFrame, userCol: String = "user_id",
-                          tsCol: String = "ts",
-                          maxBucketUsers: Long = 10000L,
-                          shards: Int = 16): DataFrame = {
-    val grp = bucketUsers(events, userCol, tsCol)
-    val worst = worstBucket(grp)
-    // the measurement IS the router's decision, and the measured frame
-    // IS the arm's input: one distinct, one persist, one guard action —
-    // the arms consume (grp, worst) directly instead of re-deriving an
-    // identical cached copy and re-running the identical aggregate
-    if (worst <= maxBucketUsers) pairJoinEdges(grp, worst, maxBucketUsers)
-    else shardedEdges(grp, worst, shards, maxTaskPairs = 50000000L)
+  /** The most shards a bucket may need: 16 × ⌊√5·10⁷⌋ = 113 136 users in
+    * one minute bucket at the default `maxTaskPairs`. */
+  private val MaxShards = 16L
+
+  /** The smallest S ≥ `minShards` with ⌈worst/S⌉² ≤ `maxTaskPairs`:
+    * max(`minShards`, ⌈worst / ⌊√maxTaskPairs⌋⌉). Refuses when the
+    * bucket alone needs more than [[MaxShards]]; a larger `minShards` is
+    * the caller's own choice and only adds replication. */
+  private[graft] def shardCount(worst: Long, minShards: Int,
+                                maxTaskPairs: Long): Int = {
+    require(minShards >= 1, s"minShards must be >= 1, got $minShards")
+    require(maxTaskPairs >= 1L, s"maxTaskPairs must be >= 1, got $maxTaskPairs")
+    val side = java.math.BigInteger.valueOf(maxTaskPairs).sqrt().longValue
+    val needed = if (worst == 0L) 0L else (worst - 1) / side + 1
+    require(needed <= MaxShards,
+      s"coActivityEdges: largest bucket holds $worst users, which needs " +
+        s"$needed shards of at most $side users (cap $MaxShards shards, " +
+        s"$maxTaskPairs pairs per task) — use a finer bucket key or cut " +
+        "the users first")
+    math.max(minShards.toLong, needed).toInt
   }
 }

@@ -605,19 +605,6 @@ private[graft] object TxCatalog {
     spark.conf.set(s"spark.sql.catalog.$name", classOf[TxCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$name.root", root)
   }
-
-  /** Identity partition transforms → column names; anything fancier
-    * (bucket, days, truncate, ...) refuses loudly — accepting a clause
-    * the layout cannot honor would misrepresent the table. */
-  def identityPartitionColumns(partitions: Array[Transform]): Seq[String] =
-    partitions.toSeq.map {
-      case t if t.name() == "identity" && t.references().length == 1 &&
-          t.references()(0).fieldNames().length == 1 =>
-        t.references()(0).fieldNames()(0)
-      case other => throw new UnsupportedOperationException(
-        s"TxCatalog supports only identity PARTITIONED BY columns, " +
-          s"got $other")
-    }
 }
 
 /** One committed snapshot as a DSv2 table: schema from the manifest,

@@ -128,6 +128,15 @@ class HttpApiSpec extends SparkSpec {
     assert(get("/query").statusCode() == 405)
     assert(post("/test", "{}").statusCode() == 405)
     assert(post("/query/other", "{}").statusCode() == 404)
+    // exact paths only, and every miss in the error envelope: no prefix
+    // match (/queryx is not /query) and no server-default HTML page
+    for (r <- Seq(get("/nope"), get("/queryx"), post("/testing", "{}"))) {
+      assert(r.statusCode() == 404, r.body())
+      assert(r.headers().firstValue("Content-Type").orElse("") ==
+        "application/json", r.headers())
+      assert(r.body().contains(""""ok":false"""), r.body())
+      assert(r.body().contains(""""error_type":"HTTP_ERROR""""), r.body())
+    }
   }
 
   test("keep-alive round trips do not wait out the client's delayed ACK") {

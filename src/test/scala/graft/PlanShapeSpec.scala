@@ -427,7 +427,7 @@ class PlanShapeSpec extends SparkSpec {
     val ev = Tables.events(spark, dir)
       .select(col("user_id"), col("ts"))
     val plan = executed(
-      graft.ext.Triangles.coActivityEdgesSharded(ev, shards = 4))
+      graft.ext.Triangles.coActivityEdges(ev, minShards = 4))
     assert(!plan.contains("CartesianProduct"), plan.take(2000))
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(2000))
     graft.ext.Dedup.unpersistAll()

@@ -4,7 +4,7 @@ import graft.ext.Triangles
 import org.apache.spark.sql.functions._
 
 /** Triangle enumeration / clustering / k-core semantics and the
-  * co-activity edge builders, against hand-checkable fixtures and
+  * co-activity edge builder, against hand-checkable fixtures and
   * in-memory models. Fuzzy ER lives in [[EntityResolutionSpec]]. */
 class TrianglesSpec extends SparkSpec {
   import spark.implicits._
@@ -122,89 +122,110 @@ class TrianglesSpec extends SparkSpec {
       s"blocks left after unpersistAll: ${cached() -- before}")
   }
 
+  private def emptyEvents = spark.createDataFrame(
+    spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+    org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("user_id",
+        org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("ts",
+        org.apache.spark.sql.types.TimestampType))))
+
+  private def canon(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  /** The co-activity edges computed in memory: collect the events, bucket
+    * them by minute, emit every id-ordered pair within a bucket. */
+  private def coActivityModel(
+      ev: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+    ev.collect().toSeq
+      .map(r => (r.getTimestamp(1).getTime / 60000L, r.getLong(0)))
+      .groupBy(_._1).values
+      .flatMap { g =>
+        val users = g.map(_._2).distinct.sorted
+        for (i <- users.indices; j <- (i + 1) until users.size)
+          yield (users(i), users(j))
+      }.toSet
+
+  private def randomEvents(seed: Long, n: Int, users: Int, minutes: Int) = {
+    val rnd = new scala.util.Random(seed)
+    val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
+    Seq.fill(n)((rnd.nextInt(users).toLong + 1L,
+        new java.sql.Timestamp(base + rnd.nextInt(minutes * 60) * 1000L)))
+      .toDF("user_id", "ts")
+  }
+
   test("coActivityEdges refuses an over-budget bucket loudly") {
+    // maxTaskPairs = 1: one user per shard, so a bucket of 16 users is
+    // the largest the 16-shard limit admits
     val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:30")
-    val ev = (1L to 10L).map(u => (u, ts)).toDF("user_id", "ts")
+    def bucket(n: Long) = (1L to n).map(u => (u, ts)).toDF("user_id", "ts")
+    assert(Triangles.coActivityEdges(bucket(16L), maxTaskPairs = 1L)
+      .count() == 120L)
     val e = intercept[IllegalArgumentException] {
-      Triangles.coActivityEdges(ev, maxBucketUsers = 5L).collect()
+      Triangles.coActivityEdges(bucket(17L), maxTaskPairs = 1L).collect()
     }
-    assert(e.getMessage.contains("largest bucket holds 10"))
-    assert(Triangles.coActivityEdges(ev, maxBucketUsers = 10L).count() == 45L)
+    assert(e.getMessage.contains("largest bucket holds 17"))
   }
 
   test("coActivityEdges on an empty frame yields an empty edge list") {
-    val ev = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("user_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("ts",
-          org.apache.spark.sql.types.TimestampType))))
-    assert(Triangles.coActivityEdges(ev).count() == 0L)
-    assert(Triangles.coActivityEdgesSharded(ev, shards = 4).count() == 0L)
+    assert(Triangles.coActivityEdges(emptyEvents).count() == 0L)
+    assert(Triangles.coActivityEdges(emptyEvents, minShards = 4)
+      .count() == 0L)
   }
 
-  test("sharded co-activity edges equal the single-reducer formulation") {
-    val rnd = new scala.util.Random(41L)
-    val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
-    val ev = Seq.fill(300)((rnd.nextInt(25).toLong + 1L,
-        new java.sql.Timestamp(base + rnd.nextInt(5 * 60) * 1000L)))
-      .toDF("user_id", "ts")
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val plain = canon(Triangles.coActivityEdges(ev))
+  test("co-activity edges equal an in-memory per-minute model at every minShards") {
+    val ev = randomEvents(41L, 300, 25, 5)
+    val want = coActivityModel(ev)
+    assert(want.nonEmpty)
     // equivalence must hold at every shard count, including S=1 (no
     // split) and S larger than the user population
     for (s <- Seq(1, 2, 3, 7, 64))
-      assert(canon(Triangles.coActivityEdgesSharded(ev, shards = s)) == plain,
-        s"shards=$s")
+      assert(canon(Triangles.coActivityEdges(ev, minShards = s)) == want,
+        s"minShards=$s")
   }
 
   test("sharded co-activity guards on the per-task pair count") {
-    val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:30")
-    val ev = (1L to 100L).map(u => (u, ts)).toDF("user_id", "ts")
-    val e = intercept[IllegalArgumentException] {
-      Triangles.coActivityEdgesSharded(ev, shards = 2, maxTaskPairs = 100L)
-        .collect()
+    import org.scalacheck.{Gen, Prop, Test}
+    import org.scalacheck.Prop.propBoolean
+    val gen = for {
+      m <- Gen.oneOf(Gen.choose(1L, 100L), Gen.choose(1L, 100000000L))
+      worst <- Gen.oneOf(Gen.choose(0L, 300L), Gen.choose(0L, 200000L))
+      minShards <- Gen.choose(1, 70)
+    } yield (worst, minShards, m)
+    // the model: search S upward for ⌈worst/S⌉² ≤ m
+    def fits(worst: Long, m: Long)(s: Int): Boolean = {
+      val per = (worst + s - 1) / s
+      per * per <= m
     }
-    assert(e.getMessage.contains("pairs per task"))
-    assert(Triangles.coActivityEdgesSharded(ev, shards = 2,
-      maxTaskPairs = 10000L).count() == 4950L)
+    val prop = Prop.forAll(gen) { case (worst, minShards, m) =>
+      val got = scala.util.Try(Triangles.shardCount(worst, minShards, m))
+      if ((1 to 16).exists(fits(worst, m)))
+        (got.toOption ==
+          Iterator.from(minShards).find(fits(worst, m))) :|
+          s"worst=$worst minShards=$minShards m=$m got=$got"
+      else
+        got.failed.toOption.exists(_.isInstanceOf[IllegalArgumentException]) :|
+          s"worst=$worst m=$m needs > 16 shards, got=$got"
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(2000),
+      prop)
+    assert(res.passed, res)
+    // the default envelope: 16 shards of ⌊√(5·10⁷)⌋ = 7 071 users
+    assert(Triangles.shardCount(7071L, 1, 50000000L) == 1)
+    assert(Triangles.shardCount(7072L, 1, 50000000L) == 2)
+    assert(Triangles.shardCount(113136L, 1, 50000000L) == 16)
+    intercept[IllegalArgumentException](
+      Triangles.shardCount(113137L, 1, 50000000L))
   }
 
-  test("coActivityEdgesAuto routes: plain under the cap, sharded over it") {
-    val rnd = new scala.util.Random(43L)
-    val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
-    val ev = Seq.fill(200)((rnd.nextInt(20).toLong + 1L,
-        new java.sql.Timestamp(base + rnd.nextInt(3 * 60) * 1000L)))
-      .toDF("user_id", "ts")
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val plain = canon(Triangles.coActivityEdges(ev))
-    // under the cap: the routed plan is the single pair join (no shard
-    // explode generator anywhere in it)
-    val under = Triangles.coActivityEdgesAuto(ev, maxBucketUsers = 10000L)
-    assert(!under.queryExecution.executedPlan.toString.contains("explode"),
-      "under-cap arm must be the plain pair join")
-    assert(canon(under) == plain)
-    // over the cap (forced by a cap of 1): the routed plan carries the
-    // shard-pair explode — the PATH assertion behind the
-    // graph_triangles_sharded CORRECTNESS entry — and the edge set is
-    // unchanged
-    val over = Triangles.coActivityEdgesAuto(ev, maxBucketUsers = 1L,
-      shards = 3)
-    assert(over.queryExecution.executedPlan.toString.contains("explode"),
-      "over-cap arm must be the sharded formulation")
-    assert(canon(over) == plain)
-    // an empty frame routes the plain arm and stays empty
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("user_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("ts",
-          org.apache.spark.sql.types.TimestampType))))
-    assert(Triangles.coActivityEdgesAuto(empty, maxBucketUsers = 1L)
+  test("coActivityEdges path: minShards = 3 runs the shard explode, same edges") {
+    val ev = randomEvents(43L, 200, 20, 3)
+    val want = coActivityModel(ev)
+    val sharded = Triangles.coActivityEdges(ev, minShards = 3)
+    assert(sharded.queryExecution.executedPlan.toString.contains("explode"),
+      "minShards = 3 must run the shard-pair formulation")
+    assert(canon(sharded) == want)
+    assert(Triangles.coActivityEdges(emptyEvents, minShards = 3)
       .count() == 0L)
   }
 

@@ -18,8 +18,10 @@ SMOKE_SF="${SMOKE_SF:-/root/testdata/sf0.001}"
 # least once (a fixture's expected-version `require` only runs on build),
 # and reaches every predicate-scoped tx rewrite (TxTable.partitionFiles:
 # OPTIMIZE and ZORDER, scoped or not, DELETE, UPDATE, MERGE, replaceWhere)
-# and the row-level rebase (ops_concurrent, ops_concurrent_rowlevel).
-SMOKE_QUERIES="${SMOKE_QUERIES:-filter_eq,count_all,nl_default,sink_txlog_sql,ops_delete_sql,ops_update_sql,ops_merge_sql,merge_upsert,ops_delete_mor,ops_update_mor,ops_txchanges,count_tx_footer,ops_widen_sql,join_dpp,join_dfp,join_spj,count_tx_partcol,ops_dynoverwrite,ops_replacewhere,join_spj_bucket,scan_days_prune,ops_concurrent_rowlevel,stream_txcdf_cdc,ops_merge_evolve_part,ops_partitions_meta,sim_recall,scan_hours_prune,ops_txlog_meta,ops_zorder_part,stream_txcdf_files,ops_optimize_sql,ops_rename_sql,ops_tags,ops_merge_evolve,ops_merge_mor,ops_zorder_sql,sink_txcheck,ops_constraint_sql,ops_evolve_sql,scan_ts_prune,ops_purge_dv,sim_ivf,sim_ivf_append,sim_ivfpq_append,stream_dirtail,ops_optimize,ops_compact_where,ops_zorder_rewrite,ops_zorder3,ops_concurrent}"
+# and the row-level rebase (ops_concurrent, ops_concurrent_rowlevel),
+# and every caller of the co-activity edge builder (the graph_* four, at
+# one shard and, in graph_triangles_sharded, at four).
+SMOKE_QUERIES="${SMOKE_QUERIES:-filter_eq,count_all,nl_default,sink_txlog_sql,ops_delete_sql,ops_update_sql,ops_merge_sql,merge_upsert,ops_delete_mor,ops_update_mor,ops_txchanges,count_tx_footer,ops_widen_sql,join_dpp,join_dfp,join_spj,count_tx_partcol,ops_dynoverwrite,ops_replacewhere,join_spj_bucket,scan_days_prune,ops_concurrent_rowlevel,stream_txcdf_cdc,ops_merge_evolve_part,ops_partitions_meta,sim_recall,scan_hours_prune,ops_txlog_meta,ops_zorder_part,stream_txcdf_files,ops_optimize_sql,ops_rename_sql,ops_tags,ops_merge_evolve,ops_merge_mor,ops_zorder_sql,sink_txcheck,ops_constraint_sql,ops_evolve_sql,scan_ts_prune,ops_purge_dv,sim_ivf,sim_ivf_append,sim_ivfpq_append,stream_dirtail,ops_optimize,ops_compact_where,ops_zorder_rewrite,ops_zorder3,ops_concurrent,graph_triangles,graph_triangles_sharded,graph_clustering,graph_kcore}"
 OUT=$(mktemp -d /tmp/pre_snapshot.XXXXXX)
 trap 'rm -rf "$OUT"' EXIT
 
